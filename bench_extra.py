@@ -10,6 +10,7 @@ Usage:
   python bench_extra.py tokens              # tokens_table in isolation
   python bench_extra.py plans [before|after]  # dump explain() per query
   python bench_extra.py one <query> [n]     # single query, n timed passes
+  python bench_extra.py pytask [passes]     # fixed cost of a Python task
 """
 
 from __future__ import annotations
@@ -145,6 +146,64 @@ def run_one(name, passes=3):
     spark.stop()
 
 
+def _tree_cpu():
+    """(JVM + other non-Python, Python) CPU seconds used so far by this
+    process's descendants: the Spark JVM and its Python daemon/workers."""
+    from perfbench.procstat import _is_python, _stat, descendants
+    jvm = py = 0.0
+    for pid in descendants(os.getpid()):
+        st = _stat(pid)
+        if st is None:
+            continue
+        if _is_python(pid):
+            py += st[1]
+        else:
+            jvm += st[1]
+    return jvm, py
+
+
+def _identity(batches):
+    # a package task: importing the package is what every kernel and
+    # decode stage does on its worker
+    import photohive_spark  # noqa: F401
+    yield from batches
+
+
+def run_pytask(passes=7):
+    """Fixed per-task cost of a Python stage: an N-task identity
+    mapInArrow over N one-row partitions, N = 4 and 32. Prints the
+    median wall per action and the process-tree CPU per task, split
+    into JVM and Python workers, from /proc deltas around each action.
+    Python workers are reused across actions, so none exits inside a
+    window and takes its CPU with it."""
+    from statistics import median
+    spark = _get_spark()
+    out = {}
+    for n in (4, 32):
+        df = spark.range(n, numPartitions=n).mapInArrow(_identity, "id long")
+        for _ in range(3):                      # warm: workers + JIT
+            _noop(df)
+        walls, jvm_ms, py_ms = [], [], []
+        for _ in range(passes):
+            j0, p0 = _tree_cpu()
+            t0 = time.perf_counter()
+            _noop(df)
+            walls.append(time.perf_counter() - t0)
+            j1, p1 = _tree_cpu()
+            jvm_ms.append((j1 - j0) * 1e3 / n)
+            py_ms.append((p1 - p0) * 1e3 / n)
+        out[f"tasks_{n}"] = {
+            "wall_s_per_action": round(median(walls), 3),
+            "cpu_ms_per_task": round(median(
+                [a + b for a, b in zip(jvm_ms, py_ms)]), 1),
+            "jvm_cpu_ms_per_task": round(median(jvm_ms), 1),
+            "python_cpu_ms_per_task": round(median(py_ms), 1),
+            "passes": passes}
+        print(f"{n} tasks: {out[f'tasks_{n}']}", file=sys.stderr)
+    spark.stop()
+    print(json.dumps({"cpus": CPUS, "pytask": out}))
+
+
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "headline"
     if mode == "headline":
@@ -157,5 +216,7 @@ if __name__ == "__main__":
         run_plans(sys.argv[2] if len(sys.argv) > 2 else "before")
     elif mode == "one":
         run_one(sys.argv[2], int(sys.argv[3]) if len(sys.argv) > 3 else 3)
+    elif mode == "pytask":
+        run_pytask(int(sys.argv[2]) if len(sys.argv) > 2 else 7)
     else:
         raise SystemExit(f"unknown mode {mode}")

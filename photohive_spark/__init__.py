@@ -6,14 +6,20 @@ Modules:
 - config:     hyperparameters (reference defaults) + Spark scale knobs
 - kernels:    pure-numpy DSP feature kernels (Spark-free)
 - tokenize:   deterministic tokenizer (documents -> tokens table)
-- engine:     DataFrame feature-extraction pipeline (mapInPandas)
+- engine:     DataFrame feature-extraction pipeline (mapInArrow)
 - pit:        point-in-time ops (as-of join, backfill, lag/lead, sessionize)
 - skew:       salting / repartition helpers
 - dedup:      exact + MinHash-LSH + SimHash + n-gram Jaccard dedup
 - similarity: embedding cosine top-k (brute force + LSH-bucketed)
 - text:       language-ID, quality scoring, token counting, fingerprinting
-- multimodal: binary-column decode/feature plumbing (decode stubbed)
+- multimodal: binary-column image/audio/video decode + feature reports
+              (in-package PNG, JPEG, GIF, BMP and WAV codecs)
 - lineage:    per-partition metrics + checkpoint/resume
+- zipimport_cache: per-task import-cache fix for Spark Python workers,
+              installed on import (no-op outside workers and on 3.13+)
 """
 
+from . import zipimport_cache
 from .config import DEFAULT_CONFIG, VOCAB_SIZE, EngineConfig  # noqa: F401
+
+zipimport_cache.install()

@@ -1,14 +1,14 @@
 """DataFrame feature-extraction pipeline.
 
 The Spark recast of the reference's entry point ``get_full_report_data``
-(``src/interface.c:20-94``): one Arrow-batched ``mapInPandas`` stage runs the
-full kernel DAG per row (all-numpy, see kernels.py), emitting one feature
+(``src/interface.c:20-94``): one ``mapInArrow`` stage runs the full kernel
+DAG per row (all-numpy, see kernels.py), emitting one feature
 row per (doc_id, event_ts) — the ``Full_Report_Data`` analog
 (``src/utilities.h:30-37``).
 
 Scale notes (100 TB / 10^12 rows):
 - the extraction is embarrassingly parallel: NO shuffle is introduced —
-  mapInPandas runs straight over scan partitions, so throughput scales
+  mapInArrow runs straight over scan partitions, so throughput scales
   linearly with executors and the only data movement is the Arrow IPC hop
   JVM -> Python worker (the analog of the reference's ctypes FFI boundary,
   ``lib.py:22-34``);

@@ -383,11 +383,11 @@ def repetition_arrow(texts):
     else:
         n_distinct = np.zeros(ndocs, dtype=np.int64)
     top_bg = np.zeros(ndocs, dtype=np.int64)
-    if codes.size > 1:
-        same = docw[1:] == docw[:-1]
+    same = docw[1:] == docw[:-1]
+    db = docw[1:][same]
+    if db.size:                 # some doc has a bigram (>= 2 words)
         a = codes[:-1][same]
         b = codes[1:][same]
-        db = docw[1:][same]
         key = a * vsize + b
         o2 = np.lexsort((key, db))
         db = db[o2]

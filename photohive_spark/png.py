@@ -66,37 +66,51 @@ def _unfilter_wavefront(filt: np.ndarray, prev_row: np.ndarray,
     m, stride = filt.shape
     w = stride // bpp
     fb = filt.reshape(m, w, bpp)
-    # Skewed (diagonal-contiguous) layout: cell (r, j) lives at
-    # T[r + j + 1, r + 1], so every anti-diagonal is ONE contiguous row
-    # of T and each sweep step is basic slicing (the previous fancy-
-    # indexed gather per diagonal allocated index arrays and scattered
-    # through memory — ~4x slower on real Paeth-run shapes).
-    # Guards: column 0 holds prev_row at T[j, 0] (the r == -1 spec row),
-    # the skew itself leaves the j == -1 left-boundary cells at 0, and
-    # T[-1, 0] (read as c only for d' == 1, cell (0,0)) is 0 because the
-    # prev_row guard only occupies rows 0..w-1 < m+w-1.
+    # Skewed (diagonal-contiguous) layout: cell (r, j) lives on row
+    # d = r + j + 1 of T, at index i = r + 1 when the run has no more
+    # rows than pixels (m <= w) and at i = j + 1 otherwise. Every
+    # anti-diagonal is then ONE contiguous row of T and each sweep step
+    # is basic slicing (a fancy-indexed gather per diagonal is ~4x
+    # slower on real Paeth-run shapes). Indexing along the shorter side
+    # keeps T at (m+w) x (min(m, w)+1) cells, linear in the run's size;
+    # indexing a tall run by row would be O(m^2) (2.4 GB for T alone on
+    # a 10000x100 RGB Paeth image).
+    # Guards: the r == -1 spec row (prev_row) sits at T[j, 0] (by row) or
+    # T[j, j+1] (by pixel), the skew leaves the j == -1 left-boundary
+    # cells at 0, and T[-1, 0] (read as c only for cell (0,0)) is 0
+    # because no cell or guard maps to index 0 of the last diagonal.
+    by_row = m <= w
+    n, other = (m, w) if by_row else (w, m)
     it = np.int32().itemsize
-    T = np.zeros((m + w, m + 1, bpp), dtype=np.int32)
-    T[0:w, 0] = prev_row.reshape(w, bpp)
-    # skewed view of the computed-cell positions: (r, j, lane) ->
-    # flat offset (m+2)*r + (m+1)*j + (m+2) in units of bpp*it
+    T = np.zeros((m + w, n + 1, bpp), dtype=np.int32)
+    if by_row:
+        T[0:w, 0] = prev_row.reshape(w, bpp)
+    else:
+        T[np.arange(w), np.arange(1, w + 1)] = prev_row.reshape(w, bpp)
+    # skewed view of the computed-cell positions: (r, j, lane) -> flat
+    # offset (n+2) + r*sr + j*sj in units of bpp*it, where the indexed
+    # coordinate steps n+2 (next diagonal, next index) and the other n+1
+    sr, sj = (n + 2, n + 1) if by_row else (n + 1, n + 2)
+    strides = (sr * bpp * it, sj * bpp * it, it)
     cells = np.lib.stride_tricks.as_strided(
-        T[1:, 1:], shape=(m, w, bpp),
-        strides=((m + 2) * bpp * it, (m + 1) * bpp * it, it),
-        writeable=True)
-    FS = np.zeros((m + w, m + 1, bpp), dtype=np.int32)
+        T[1:, 1:], shape=(m, w, bpp), strides=strides, writeable=True)
+    # filter bytes in the same layout; only cell positions are ever read
+    FS = np.empty((m + w, n + 1, bpp), dtype=np.int32)
     np.lib.stride_tricks.as_strided(
-        FS[1:, 1:], shape=(m, w, bpp),
-        strides=((m + 2) * bpp * it, (m + 1) * bpp * it, it),
+        FS[1:, 1:], shape=(m, w, bpp), strides=strides,
         writeable=True)[:] = fb
+    # on the previous diagonal, the left (a) and up (b) neighbours sit at
+    # the cell's own index or one below it: the left one keeps the index
+    # when indexing by row, the up one when indexing by pixel
+    ia, ib = (0, 1) if by_row else (1, 0)
     for d in range(1, m + w):
-        rr_lo = max(1, d - w + 1)
-        rr_hi = min(m, d)
-        a = T[d - 1, rr_lo:rr_hi + 1]
-        b = T[d - 1, rr_lo - 1:rr_hi]
-        x = FS[d, rr_lo:rr_hi + 1]
+        lo = max(1, d - other + 1)
+        hi = min(n, d)
+        a = T[d - 1, lo - ia:hi + 1 - ia]
+        b = T[d - 1, lo - ib:hi + 1 - ib]
+        x = FS[d, lo:hi + 1]
         if paeth:
-            c = T[d - 2, rr_lo - 1:rr_hi]
+            c = T[d - 2, lo - 1:hi]
             # libpng difference forms: p-a = b-c, p-b = a-c, p-c =
             # (b-c)+(a-c) — integer-exact, two fewer full-array ops
             d1 = b - c
@@ -108,7 +122,7 @@ def _unfilter_wavefront(filt: np.ndarray, prev_row: np.ndarray,
                             np.where(pb <= pc, b, c))
         else:
             pred = (a + b) >> 1
-        T[d, rr_lo:rr_hi + 1] = (x + pred) & 255
+        T[d, lo:hi + 1] = (x + pred) & 255
     return cells.reshape(m, stride)
 
 

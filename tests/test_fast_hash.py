@@ -107,3 +107,24 @@ def test_word_shingle_arrays_matches_row_form(spark, sf_dir):
         for d in rows:
             assert arr[d][0] == sorted(rows[d]), d
             assert arr[d][1] == len(rows[d]), d
+
+
+def test_repetition_arrow_one_word_batches(spark):
+    """A single Arrow batch whose docs all have fewer than two words has
+    no bigrams; repetition_arrow used to index an empty bigram array and
+    fail the task. One-word-only and mixed batches, each coalesced into
+    one batch, must match the explode+groupBy parity form."""
+    from photohive_spark import text
+
+    one_word = [("o0", "one"), ("o1", "two"), ("o2", "three"),
+                ("o3", "  four  "), ("o4", ""), ("o5", None)]
+    mixed = one_word + [("m0", "a b a b"), ("m1", "solo"),
+                        ("m2", "x y z x y")]
+    for rows in (one_word, mixed):
+        src = spark.createDataFrame(rows, "doc_id string, text string") \
+            .coalesce(1)
+        fast = text.repetition_stats(src, id_col="doc_id")
+        ref = text.repetition_stats(src, id_col="doc_id", impl="expr")
+        got = sorted(map(tuple, fast.collect()))
+        assert got == sorted(map(tuple, ref.collect()))
+    assert [r[0] for r in got] == ["m0", "m2"]
