@@ -69,7 +69,7 @@ def main() -> None:
         .withColumn("media_id", F.col("media_id").cast("string")) \
         .where(F.col("kind") == "image")
     # resume optimization: a bucket filter above image_report's
-    # mapInPandas cannot be pushed below it, so without this pre-filter a
+    # mapInArrow cannot be pushed below it, so without this pre-filter a
     # resume would RE-DECODE the whole corpus just to write the missing
     # buckets. bucket_of is the same deterministic hash run_resumable
     # partitions by, computed on the pass-through media_id, so filtering

@@ -50,7 +50,7 @@ def main() -> None:
     toks = spark.read.parquet(args.tokens)
     toks = validate_tokens(toks, args.min_tok, args.max_tok)
     # resume optimization: the bucket filter run_resumable applies sits
-    # ABOVE extract_features' mapInPandas and cannot be pushed below it —
+    # ABOVE extract_features' mapInArrow and cannot be pushed below it —
     # without this input pre-filter a resume re-runs the feature kernels
     # for the whole corpus just to write the missing buckets. bucket_of
     # is the identical deterministic hash on the pass-through doc_id, so

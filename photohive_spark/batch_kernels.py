@@ -1,7 +1,7 @@
 """Length-grouped batched feature extraction — the Arrow-batch fast path.
 
 ``extract_features`` (kernels.py) computes one document at a time; inside a
-mapInPandas batch that means hundreds of small numpy calls per row. This
+mapInArrow batch that means hundreds of small numpy calls per row. This
 module groups the batch's rows BY TOKEN LENGTH and runs each group as one
 stacked (m, n) computation: one rfft for m docs, one bincount for m
 histograms, etc. Pre-tokenized training corpora cluster hard at fixed
@@ -201,11 +201,13 @@ def _hist_entropy_global(g: np.ndarray, row_of: np.ndarray, n_rows: int,
 def _palette_global(h: np.ndarray, s: np.ndarray, v: np.ndarray,
                     g: np.ndarray, row_of: np.ndarray, nd_row: np.ndarray,
                     counts: np.ndarray, cfg: EngineConfig):
-    """_palette_core over a FLAT (ragged) token stream for ALL rows of a
-    batch at once. Value-identical to the per-group rectangular form:
-    every op is row-local (assignment) or a per-(row, rank) bincount
-    whose within-bucket accumulation order equals the rectangular
-    row-major order; pct multiplies by the same per-row 1.0/nd double."""
+    """Vectorized K.palette over a FLAT (ragged) token stream for ALL
+    rows of a batch at once. Returns (n_par (N,), h_avg, s_avg, v_avg,
+    pct) with (N, pmax) value matrices valid for rank < n_par[row].
+    Every op is row-local (assignment, see _palette_assign) or a
+    per-(row, rank) bincount whose within-bucket accumulation order is
+    the per-doc token order, so the values equal the per-doc kernel's
+    (parity-tested row-for-row in tests/test_batch_kernels.py)."""
     N = counts.shape[0]
     nh, _, _ = K.cell_nominals(cfg)
     n_par, order, rank_lookup = _palette_assign(counts, cfg)
@@ -239,70 +241,6 @@ def _palette_global(h: np.ndarray, s: np.ndarray, v: np.ndarray,
     v_avg = np.where(valid, sum_v / safe, 0.0)
     pct = np.where(valid, cnts * inv_n[:, None], 0.0)
     return n_par, h_avg, s_avg, v_avg, pct
-
-
-def _palette_core(h: np.ndarray, s: np.ndarray, v: np.ndarray,
-                  g: np.ndarray, counts: np.ndarray,
-                  cfg: EngineConfig):
-    """Vectorized K.palette across an equal-length group — FLAT outputs.
-
-    Returns (n_par int64 (m,), h_avg, s_avg, v_avg, pct) where the value
-    matrices are (m, pmax) with entries valid for rank < n_par[row].
-
-    Replicates the per-doc semantics exactly, including the tie rules:
-    parent selection orders by (saliency desc, cell asc) via stable argsort;
-    nearest-parent assignment breaks exact distance ties by saliency rank
-    (= first occurrence in the per-doc argmin over parents order).
-    Parity-tested row-for-row in tests/test_batch_kernels.py."""
-    m, n = g.shape
-    nh, _, _ = K.cell_nominals(cfg)
-    n_par, order, rank_lookup = _palette_assign(counts, cfg)
-    rank_of_tok = np.take_along_axis(rank_lookup, g, axis=1)        # (m, n)
-
-    # --- grouped circular-mean averages via offset bincounts ---
-    pmax = int(n_par.max()) if m else 0
-    flat_ids = (np.arange(m)[:, None] * pmax + rank_of_tok).ravel()
-    minlen = m * pmax
-    cnts = np.bincount(flat_ids, minlength=minlen).reshape(m, pmax)
-
-    # offsets per (row, rank): 180 - nominal hue of that rank's parent cell
-    # order[:, :pmax] are the parent cells in rank order (keep is a prefix)
-    offsets = 180.0 - nh[order[:, :pmax]]                 # (m, pmax)
-    tmp = h + np.take_along_axis(offsets, rank_of_tok, axis=1)
-    tmp = np.where(tmp > 360.0, tmp - 360.0, tmp)
-    tmp = np.where(tmp < 0.0, tmp + 360.0, tmp)
-    sum_h = np.bincount(flat_ids, weights=tmp.ravel(),
-                        minlength=minlen).reshape(m, pmax)
-    sum_s = np.bincount(flat_ids, weights=s.ravel(),
-                        minlength=minlen).reshape(m, pmax)
-    sum_v = np.bincount(flat_ids, weights=v.ravel(),
-                        minlength=minlen).reshape(m, pmax)
-
-    # vectorized averages (empty ranks -> all-zero entries, as per-doc)
-    inv_n = 1.0 / n
-    valid = cnts > 0
-    safe = np.maximum(cnts, 1)
-    h_avg = sum_h / safe - offsets
-    h_avg = np.where(h_avg < 0, h_avg + 360.0, h_avg)
-    h_avg = np.where(h_avg > 360.0, h_avg - 360.0, h_avg)
-    h_avg = np.where(valid, h_avg, 0.0)
-    s_avg = np.where(valid, sum_s / safe, 0.0)
-    v_avg = np.where(valid, sum_v / safe, 0.0)
-    pct = np.where(valid, cnts * inv_n, 0.0)
-    return n_par, h_avg, s_avg, v_avg, pct
-
-
-def _palette_batch(h: np.ndarray, s: np.ndarray, v: np.ndarray,
-                   g: np.ndarray, counts: np.ndarray,
-                   cfg: EngineConfig) -> list:
-    """Per-row list view of _palette_core (the legacy/test API)."""
-    n_par, h_avg, s_avg, v_avg, pct = _palette_core(h, s, v, g, counts, cfg)
-    out = []
-    for r in range(g.shape[0]):
-        k = int(n_par[r])
-        out.append(list(zip(h_avg[r, :k].tolist(), s_avg[r, :k].tolist(),
-                            v_avg[r, :k].tolist(), pct[r, :k].tolist())))
-    return out
 
 
 def _peaks_core(prof: np.ndarray, cfg: EngineConfig):
@@ -428,16 +366,19 @@ def _deg_table(na: int) -> np.ndarray:
 
 
 def _group_features(T: np.ndarray, cfg: EngineConfig,
-                    timings: dict[str, float] | None = None,
-                    flat: bool = False,
-                    spectral_only: bool = False) -> dict:
-    """All features for one equal-length group. T: (m, n) int32, n >= 1.
+                    timings: dict[str, float] | None = None) -> dict:
+    """The spectral features of one equal-length group, T: (m, n) int32,
+    n >= 1 — everything but the hsv/histogram/palette family, which
+    batch_extract_arrow runs ONCE per batch on the flat token stream.
+    Spectral peaks come back flat: (rows_idx, angle, magnitude).
 
     ``timings`` (optional) accumulates wall seconds per kernel FAMILY —
     the per-stage analog of the reference's timing macros
     (``src/utilities.h:10-18`` / README.md:63-75's 11 timed stages):
-    stats_s (rms+spectrum+sharpness), hist_s, autocorr_s, bandpass_s,
-    blur_fft_s (2-D framing+profile), palette_s, peaks_s."""
+    stats_s (rms+spectrum+sharpness), hist_s (mean_norm here; the
+    batch-global histogram in batch_extract_arrow), autocorr_s,
+    bandpass_s, blur_fft_s (2-D framing+profile), peaks_s; palette_s is
+    the batch-global palette pass."""
     from time import perf_counter as _pc
 
     def _mark(name: str, t0: float) -> float:
@@ -459,33 +400,11 @@ def _group_features(T: np.ndarray, cfg: EngineConfig,
     # reference runs stats/FFT on the ORIGINAL image (src/interface.c:39-50);
     # stride slicing keeps the group rectangular so batching is preserved
     Td = Tl[:, ::cfg.downsample_rate] if cfg.downsample_rate > 1 else Tl
-    nd = Td.shape[1]
-    if spectral_only:
-        # r7 Arrow path: the hsv/hist/palette family runs ONCE per batch
-        # on the flat token stream (_hsv_hist_global) — only mean_norm
-        # stays here because its np.mean pairwise-summation tree needs
-        # the rectangular group (a ragged reduceat would change the FP
-        # tree of an oracle-rounded output)
-        s = (Td % K.SAT_MOD) / float(K.SAT_MOD)
-        mean_norm = s.mean(axis=1)
-        h = s = v = g = counts = ent = None
-        _t = _mark("hist_s", _t)
-    else:
-        h = 360.0 * (Td % K.HUE_MOD) / float(K.HUE_MOD)
-        s = (Td % K.SAT_MOD) / float(K.SAT_MOD)
-        v = x if cfg.downsample_rate <= 1 else Td / float(VOCAB_SIZE)
-        mean_norm = s.mean(axis=1)
-
-        cells = cfg.hist_cells
-        g = K.hist_bin_ids(h.ravel(), s.ravel(), v.ravel(), cfg).reshape(m, nd)
-        offs = (np.arange(m) * cells)[:, None]
-        counts = np.bincount((g + offs).ravel(),
-                             minlength=m * cells).reshape(m, cells).astype(np.int64)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            p = counts / counts.sum(axis=1, keepdims=True)
-            ent = -np.where(p > 0, p * np.log(np.where(p > 0, p, 1.0)),
-                            0.0).sum(axis=1)
-        _t = _mark("hist_s", _t)
+    # only mean_norm of the hsv family stays here: its np.mean
+    # pairwise-summation tree needs the rectangular group (a ragged
+    # reduceat would change the FP tree of an oracle-rounded output)
+    mean_norm = ((Td % K.SAT_MOD) / float(K.SAT_MOD)).mean(axis=1)
+    _t = _mark("hist_s", _t)
 
     # spectral family: bands from the shared stats; autocorr reuses the
     # power spectrum (Wiener–Khinchin) instead of a second rfft
@@ -559,42 +478,21 @@ def _group_features(T: np.ndarray, cfg: EngineConfig,
     else:
         prof_r = np.zeros((m, nr))    # n == 1: all-zero profile
     _t = _mark("blur_fft_s", _t)
-    out = {
+    peaks = (_peaks_core(prof, cfg) if prof is not None
+             else _peaks_core_1d(prof_r, prof_angle, cfg))
+    _mark("peaks_s", _t)
+    return {
         "rms_mean": rms_mean, "rms_std": rms_std, "mean_norm_value": mean_norm,
-        "hist_counts": counts, "hist_entropy": ent,
         "spectrum_bands": bands,
         "autocorr": ac, "bandpass_energy": bp, "sharpness_avg": sh_avg,
+        "peaks_flat": peaks,
     }
-    def peaks_flat():
-        if prof is not None:
-            return _peaks_core(prof, cfg)
-        return _peaks_core_1d(prof_r, prof_angle, cfg)
-
-    if flat:
-        # r7 Arrow path: keep palette/peaks as flat numpy structures —
-        # the per-row list assembly below is exactly the cost the Arrow
-        # output path removes
-        if not spectral_only:
-            out["palette_flat"] = _palette_core(h, s, v, g, counts, cfg)
-        _t = _mark("palette_s", _t)
-        out["peaks_flat"] = peaks_flat()
-        _t = _mark("peaks_s", _t)
-        return out
-    out["palette"] = _palette_batch(h, s, v, g, counts, cfg)
-    _t = _mark("palette_s", _t)
-    rows_idx, ang_flat, mag_flat = peaks_flat()
-    pk: list[list] = [[] for _ in range(m)]
-    for i in range(rows_idx.size):
-        pk[rows_idx[i]].append((int(ang_flat[i]), float(mag_flat[i])))
-    out["spectral_peaks"] = pk
-    _t = _mark("peaks_s", _t)
-    return out
 
 
 def length_groups(arrays: list) -> dict[int, list[int]]:
     """Group row indices by array length (None counts as 0) — the shared
-    scatter key for every equal-length batched computation (token path in
-    batch_extract, media path in multimodal.media_features)."""
+    scatter key for the equal-length batched media computation
+    (multimodal.media_features)."""
     groups: dict[int, list[int]] = {}
     for i, a in enumerate(arrays):
         n = 0 if a is None else len(a)
@@ -635,98 +533,37 @@ def signal_stats_batch(X: np.ndarray, cfg: EngineConfig = DEFAULT_CONFIG
 
 _SCALAR_COLS = ("rms_mean", "rms_std", "mean_norm_value", "hist_entropy",
                 "sharpness_avg")
-_ARRAY_COLS = ("hist_counts", "spectrum_bands", "autocorr", "bandpass_energy")
-
-
-def batch_extract_columns(token_arrays: list,
-                          cfg: EngineConfig = DEFAULT_CONFIG,
-                          rois_list: list | None = None,
-                          timings: dict[str, float] | None = None) -> dict:
-    """Features for a whole Arrow batch as COLUMNS, grouped by token length
-    — the mapInPandas fast path. Scalar columns are filled with one
-    vectorized numpy scatter per group (zero per-row Python); array columns
-    get ndarray row VIEWS of the group results (no per-row .tolist() —
-    pyarrow converts ndarray cells directly); only the struct columns
-    (palette, spectral_peaks) remain per-row list builds. Profiling at 1M
-    rows showed the previous per-row dict assembly + engine-side pivot
-    costing ~50 of ~190 kernel core-seconds.
-
-    ``rois_list`` (optional, parallel to ``token_arrays``) carries per-row
-    [(start, end), ...] crop boundaries; ``timings`` (optional dict)
-    accumulates per-kernel-family wall seconds (see _group_features).
-
-    Returns {column name -> length-N list (object cols) or np.ndarray
-    (scalar cols)} with the same values as engine.features_row per row."""
-    N = len(token_arrays)
-    scal = {c: np.zeros(N) for c in _SCALAR_COLS}
-    obj: dict[str, list] = {c: [None] * N for c in
-                            (*_ARRAY_COLS, "palette", "spectral_peaks")}
-    sharp: list[list] = [[] for _ in range(N)]
-    groups = length_groups(token_arrays)
-
-    empty = None
-    for n, idxs in groups.items():
-        if n == 0:
-            if empty is None:
-                from .engine import features_row
-                empty = features_row(np.array([], dtype=np.int32), cfg)
-            for i in idxs:
-                for c in _SCALAR_COLS:
-                    scal[c][i] = empty[c]
-                for c in _ARRAY_COLS:
-                    obj[c][i] = list(empty[c])
-                obj["palette"][i] = list(empty["palette"])
-                obj["spectral_peaks"][i] = list(empty["spectral_peaks"])
-            continue
-        T = np.stack([np.asarray(token_arrays[i], dtype=np.int32)
-                      for i in idxs])
-        gf = _group_features(T, cfg, timings)
-        ix = np.asarray(idxs)
-        for c in _SCALAR_COLS:
-            scal[c][ix] = gf[c]
-        counts, bands = gf["hist_counts"], gf["spectrum_bands"]
-        ac, bp = gf["autocorr"], gf["bandpass_energy"]
-        pals, pks = gf["palette"], gf["spectral_peaks"]
-        for row_pos, i in enumerate(idxs):
-            obj["hist_counts"][i] = counts[row_pos]
-            obj["spectrum_bands"][i] = bands[row_pos]
-            obj["autocorr"][i] = ac[row_pos]
-            obj["bandpass_energy"][i] = bp[row_pos]
-            obj["palette"][i] = [{"h": ph, "s": ps, "v": pv, "pct": pp}
-                                 for (ph, ps, pv, pp) in pals[row_pos][:100]]
-            obj["spectral_peaks"][i] = [
-                {"angle": int(a), "magnitude": float(mg)}
-                for (a, mg) in pks[row_pos][:10]]
-    if rois_list is not None:
-        for i, rois in enumerate(rois_list):
-            if not rois:
-                continue
-            t = token_arrays[i]
-            x = (np.asarray(t, dtype=np.float64) / VOCAB_SIZE
-                 if t is not None else np.array([], dtype=np.float64))
-            sharp[i] = [float(v) for v in K.sharpness_rois(x, rois)]
-    return {**scal, **obj, "sharpness": sharp}
 
 
 def batch_extract(token_arrays: list, cfg: EngineConfig = DEFAULT_CONFIG,
                   rois_list: list | None = None,
                   timings: dict[str, float] | None = None) -> list[dict]:
-    """Row-dict view of batch_extract_columns (the reference/test API —
+    """Row-dict view of batch_extract_arrow (the reference/test API —
     one dict per input row, same shape as engine.features_row, plain
-    Python lists in array cells)."""
-    cols = batch_extract_columns(token_arrays, cfg, rois_list, timings)
-    out = []
-    for i in range(len(token_arrays)):
-        row = {c: float(cols[c][i]) for c in _SCALAR_COLS}
-        for c in _ARRAY_COLS:
-            cell = cols[c][i]
-            row[c] = cell.tolist() if isinstance(cell, np.ndarray) else list(cell)
-        row["hist_counts"] = [int(v) for v in row["hist_counts"]]
-        row["palette"] = cols["palette"][i]
-        row["spectral_peaks"] = cols["spectral_peaks"][i]
-        row["sharpness"] = cols["sharpness"][i]
-        out.append(row)
-    return out
+    Python lists in array cells). A None token array is an empty doc."""
+    import pyarrow as pa
+
+    toks = pa.array([None if t is None else np.asarray(t, dtype=np.int32)
+                     for t in token_arrays], type=pa.list_(pa.int32()))
+    cols = batch_extract_arrow(toks, cfg, rois_list, timings)
+    # list cells are sliced from their flat children's .tolist():
+    # pyarrow's per-cell to_pylist costs ~3 us a palette struct, 3x the
+    # whole kernel DAG at this batch size
+    out = {}
+    for c, a in cols.items():
+        if not pa.types.is_list(a.type):
+            out[c] = a.to_pylist()
+            continue
+        flat = a.values
+        if pa.types.is_struct(flat.type):
+            names = [f.name for f in flat.type]
+            items = [dict(zip(names, t)) for t in zip(
+                *(flat.field(n).to_numpy().tolist() for n in names))]
+        else:
+            items = flat.to_numpy().tolist()
+        offs = a.offsets.to_numpy().tolist()
+        out[c] = [items[i:j] for i, j in zip(offs[:-1], offs[1:])]
+    return [dict(zip(out, row)) for row in zip(*out.values())]
 
 # ---------------------------------------------------------------------------
 # r7: Arrow-native batch extraction — zero pandas, zero per-row Python on
@@ -734,8 +571,8 @@ def batch_extract(token_arrays: list, cfg: EngineConfig = DEFAULT_CONFIG,
 # mapInArrow record batch (flat values + offsets, no per-row ndarray
 # materialization); outputs are pyarrow arrays built from flat numpy
 # buffers (fixed-width features via one reshape, palette/peaks via a
-# segmented scatter). Values are IDENTICAL to batch_extract_columns
-# (same _group_features per length group) — parity-pinned in tests.
+# segmented scatter). Values equal the per-doc kernels.extract_features
+# row for row — parity-pinned in tests/test_batch_kernels.py.
 # ---------------------------------------------------------------------------
 
 def _scatter_varlen(n_rows: int, row_ids: np.ndarray, seg_lens: np.ndarray,
@@ -766,8 +603,8 @@ def batch_extract_arrow(tokens_arr, cfg: EngineConfig = DEFAULT_CONFIG,
                         rois_list: list | None = None,
                         timings: dict[str, float] | None = None) -> dict:
     """Features for one Arrow batch as PYARROW ARRAYS, computed from the
-    tokens ListArray directly. Row-for-row the same values as
-    batch_extract_columns (parity-pinned); only the data path differs:
+    tokens ListArray directly; row for row the same values as
+    engine.features_row (parity-pinned through batch_extract):
 
     - input: one flat int32 gather per length group (no per-row
       np.asarray + np.stack);
@@ -845,7 +682,7 @@ def batch_extract_arrow(tokens_arr, cfg: EngineConfig = DEFAULT_CONFIG,
             bp_mat[idx] = np.asarray(empty["bandpass_energy"])
             continue
         T = vals[starts[idx][:, None] + np.arange(n)].astype(np.int32)
-        gf = _group_features(T, cfg, timings, flat=True, spectral_only=True)
+        gf = _group_features(T, cfg, timings)
         for c in ("rms_mean", "rms_std", "mean_norm_value", "sharpness_avg"):
             scal[c][idx] = gf[c]
         bands_mat[idx] = gf["spectrum_bands"]

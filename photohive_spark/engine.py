@@ -22,10 +22,7 @@ Scale notes (100 TB / 10^12 rows):
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
@@ -94,77 +91,26 @@ def features_row(tokens: np.ndarray, cfg: EngineConfig,
     }
 
 
-def _roi_tuples(cell) -> list[tuple[int, int]] | None:
-    """One row's ROI column value -> [(start, end), ...]. Arrow delivers
-    array<struct> as a sequence of dicts (or Rows); None passes through."""
-    if cell is None:
-        return None
-    out = []
-    for r in cell:
-        if isinstance(r, dict):
-            out.append((int(r["start"]), int(r["end"])))
-        else:  # Row / tuple-like
-            out.append((int(r[0]), int(r[1])))
-    return out
-
-
-def _make_kernel(cfg: EngineConfig, roi_col: str | None = None,
-                 time_acc=None, stage_accs=None):
-    """Build the mapInPandas function. The per-batch loop is Python over
-    rows *within* an Arrow batch, but every kernel call is vectorized numpy
-    over the whole token array — the reference's 'whole-plane vectorized'
-    style (SURVEY §1.2); there is no Spark-level per-row Python.
-
-    ``time_acc`` (optional Spark accumulator) collects TOTAL kernel wall
-    seconds across all workers; ``stage_accs`` (optional dict name ->
-    accumulator, keys from batch_kernels._group_features: stats_s, hist_s,
-    autocorr_s, bandpass_s, blur_fft_s, palette_s, peaks_s) splits it per
-    kernel family — the per-stage analog of the reference's timing macros
-    (``src/utilities.h:10-18``; README.md:63-75 times 11 stages), surfaced
-    through lineage manifests. Accumulators updated in transformations are
-    at-least-once: task retries / speculative duplicates overcount, so
-    treat the timing as an advisory profile, not an exact meter."""
-
-    feature_names = [f.name for f in FEATURE_FIELDS]
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time as _time
-        from .batch_kernels import batch_extract_columns
-        for pdf in batches:
-            t0 = _time.perf_counter()
-            rois_list = None
-            if roi_col is not None and roi_col in pdf.columns:
-                rois_list = [_roi_tuples(c) for c in pdf[roi_col]]
-            timings = {} if stage_accs is not None else None
-            cols = batch_extract_columns(list(pdf["tokens"]), cfg, rois_list,
-                                         timings=timings)
-            if stage_accs is not None:
-                for name, secs in timings.items():
-                    if name in stage_accs:
-                        stage_accs[name].add(secs)
-            if time_acc is not None:
-                time_acc.add(_time.perf_counter() - t0)
-            out = pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "tokens": pdf["tokens"].to_numpy(),
-                "n_tok": pdf["n_tok"].to_numpy(),
-                "source": pdf["source"].to_numpy(),
-                "event_ts": pdf["event_ts"].to_numpy(),
-                **{n: cols[n] for n in feature_names},
-            })
-            yield out
-
-    return extract
-
-
 def _make_arrow_kernel(cfg: EngineConfig, roi_col: str | None = None,
                        time_acc=None, stage_accs=None):
-    """Build the mapInArrow function (r7): the kernel DAG runs straight
+    """Build the mapInArrow function — the one Python stage of the token
+    path, shared by the batch (extract_features_df) and streaming
+    (streaming.stream_features) operators. The kernel DAG runs straight
     off the record batch's tokens ListArray (flat values + offsets — no
     per-row ndarray materialization, no pandas on either side), and the
     outputs are assembled as Arrow arrays from flat numpy buffers
     (batch_kernels.batch_extract_arrow). Passthrough columns (doc_id,
-    tokens, n_tok, source, event_ts) are reused zero-copy."""
+    tokens, n_tok, source, event_ts) are reused zero-copy.
+
+    ``time_acc`` (optional Spark accumulator) collects TOTAL kernel wall
+    seconds across all workers; ``stage_accs`` (optional dict name ->
+    accumulator, keys from KERNEL_STAGES) splits it per kernel family —
+    the per-stage analog of the reference's timing macros
+    (``src/utilities.h:10-18``; README.md:63-75 times 11 stages),
+    surfaced through lineage manifests. Accumulators updated in
+    transformations are at-least-once: task retries / speculative
+    duplicates overcount, so treat the timing as an advisory profile,
+    not an exact meter."""
     feature_names = [f.name for f in FEATURE_FIELDS]
     pass_cols = ["doc_id", "tokens", "n_tok", "source", "event_ts"]
 

@@ -21,7 +21,7 @@ bytes so ``decode="real"`` covers GIF transparently.
 
 Scale note: LZW is inherently sequential per frame (a per-code Python
 loop, like JPEG's Huffman walk); GIFs in real corpora are small, and
-decode runs inside Arrow-batched ``mapInPandas`` workers.
+decode runs inside Arrow-batched ``mapInArrow`` workers.
 """
 
 from __future__ import annotations

@@ -28,7 +28,7 @@ Reference analog: the PIL ingest boundary (``utils.py:30-46``) accepted
 any PIL-decodable format; png.decode_image_rgb dispatches PNG/JPEG by
 magic bytes so ``decode="real"`` covers both.
 
-Scale note: decode runs inside Arrow-batched ``mapInPandas`` workers
+Scale note: decode runs inside Arrow-batched ``mapInArrow`` workers
 (multimodal.py); per-image cost is the codec floor measured in
 BENCH/BASELINE.md (bench.py --images), parallelism is per-row.
 """

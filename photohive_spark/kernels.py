@@ -8,7 +8,7 @@ made here is documented inline and is canonical for our goldens
 (SURVEY.md §7 "Hard parts").
 
 Everything here is vectorized numpy — these run inside Arrow-batched
-``mapInPandas`` workers, one call per document, no per-row Python at the
+``mapInArrow`` workers, one call per document, no per-row Python at the
 Spark level.
 """
 

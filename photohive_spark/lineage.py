@@ -90,7 +90,7 @@ def run_resumable(spark: SparkSession, df: DataFrame, out_dir: str,
     dynamic partition overwrite. The upstream plan (feature extraction,
     joins, ...) therefore runs ONCE per wave — not once per bucket, which
     at --n-buckets 1024 would re-scan the input ~1024 times (the r1 bug:
-    a bucket filter above mapInPandas cannot be pushed below it).
+    a bucket filter above a Python map stage cannot be pushed below it).
 
     ``buckets_per_wave`` bounds how much work a mid-wave crash can lose
     (default: every missing bucket in one wave — max throughput; set it

@@ -1,5 +1,6 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed by Arrow-batched ``mapInPandas`` kernels.
+with typed metadata, processed by Arrow-batched ``mapInArrow`` stages —
+every media operator runs the one decode loop in ``_media_stage``.
 
 ``mode="real"`` REALLY decodes images (PNG incl. Adam7/16-bit and
 baseline+progressive JPEG, via the pure-stdlib codecs in png.py /
@@ -19,10 +20,8 @@ png.decode_rgb reproduces that contract bit-exactly for PNG inputs.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 import pyspark.sql.types as T
 
@@ -85,20 +84,71 @@ def decode_stub(payload: bytes, kind: str, meta: dict, mode: str = "fake"
     return _fake_decode(payload, max(4, n))
 
 
-_META_KEYS = ("meta_width", "meta_height", "meta_sample_rate", "meta_n_frames")
-
-
-def _meta_val(v):
-    """Arrow nullable ints arrive as NaN floats in pandas — normalize."""
-    if v is None or (isinstance(v, float) and np.isnan(v)):
-        return None
-    return int(v)
-
-
 def _check_on_error(on_error: str) -> None:
     if on_error not in ("fail", "skip"):
         raise ValueError(f"on_error must be 'fail' or 'skip', "
                          f"got {on_error!r}")
+
+
+def _media_stage(media: DataFrame, in_cols: list[str],
+                 out_schema: T.StructType, decode, on_error: str,
+                 row=None, rows=None) -> DataFrame:
+    """The one Arrow-native loop behind every media operator: a
+    shuffle-free mapInArrow stage over ``in_cols`` of ``media``.
+
+    Per record batch, each row's payload (a null payload reads as b"")
+    goes through ``decode(payload, ctx)``, where ``ctx`` maps the row's
+    other input columns to their values (null ints arrive as None). A
+    row whose decode raises is dropped under on_error='skip'; under
+    'fail' the task fails naming the row's media_id (and kind, when the
+    stage reads it). Output columns that are also input columns
+    (media_id, kind, image_phash's passthrough) are carried from the
+    kept input rows with their input types. The others, typed from
+    ``out_schema``, come from the operator's body: either
+    ``row(decoded) -> {column: value}``, run on each kept row right
+    after its decode (without ``row`` the decoded value is that dict),
+    or ``rows([decoded, ...]) -> {column: sequence}`` over the batch's
+    kept rows at once."""
+    _check_on_error(on_error)
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    names = [f.name for f in out_schema.fields]
+    computed = {f.name: to_arrow_type(f.dataType)
+                for f in out_schema.fields if f.name not in in_cols}
+    ctx_cols = [c for c in in_cols if c != "payload"]
+
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            ctx_vals = {c: batch.column(c).to_pylist() for c in ctx_cols}
+            payloads = batch.column("payload")
+            keep, done = [], []
+            for i in range(batch.num_rows):
+                ctx = {c: ctx_vals[c][i] for c in ctx_cols}
+                try:
+                    x = decode(payloads[i].as_py() or b"", ctx)
+                except Exception as e:
+                    if on_error == "skip":
+                        continue
+                    # RuntimeError, not type(e): exception classes with
+                    # non-string constructors (UnicodeDecodeError etc.)
+                    # would crash the wrapper itself
+                    where = " ".join(f"{c}={ctx[c]!r}"
+                                     for c in ("media_id", "kind") if c in ctx)
+                    raise RuntimeError(f"{where}: {e}") from e
+                keep.append(i)
+                # the row body runs before the next decode, so only one
+                # row's decoded planes are alive at a time
+                done.append(row(x) if row else x)
+            out = rows(done) if rows else \
+                {c: [d[c] for d in done] for c in computed}
+            take = pa.array(keep, type=pa.int64())
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(out[c], type=computed[c]) if c in computed
+                 else batch.column(c).take(take) for c in names], names)
+
+    return media.select(*in_cols).mapInArrow(run, out_schema)
 
 
 def media_features(media: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
@@ -109,70 +159,34 @@ def media_features(media: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
 
     Batch-vectorized: the (by-necessity per-row) decode fills a list of
     sample arrays, then rows are grouped by decoded length and each group
-    runs as ONE stacked numpy computation (batch_kernels.signal_stats_batch)
-    — no per-row pandas (r1's iterrows anti-pattern removed).
+    runs as ONE stacked numpy computation (batch_kernels.signal_stats_batch).
 
     ``on_error``: 'fail' (default) raises naming the offending row;
     'skip' DROPS undecodable rows — the scraped-corpus production mode
     (at 10^12 rows corrupt payloads are a certainty, and one must not
-    kill the job; count output vs input rows to monitor the drop rate)."""
-    _check_on_error(on_error)
+    kill the job; count output vs input rows to monitor the drop rate).
+    A null payload decodes as b"": a valid row under the deterministic
+    fake, an undecodable one under mode='real'."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def stats(xs: list) -> dict:
         from .batch_kernels import length_groups, signal_stats_batch
-        names = [f.name for f in MEDIA_FEATURE_SCHEMA.fields]
-        for pdf in batches:
-            kinds = pdf["kind"].tolist()
-            metas = {k: pdf[k].tolist() for k in _META_KEYS}
-            xs = []
-            keep: list[int] = []
-            ids = pdf["media_id"].tolist()
-            for i, payload in enumerate(pdf["payload"].tolist()):
-                meta = {k: _meta_val(metas[k][i]) for k in _META_KEYS}
-                # null payload (upstream decode failure) must not kill the
-                # task — the deterministic fake of b"" yields a valid row;
-                # real decode fails loudly but names the offending row
-                try:
-                    xs.append(decode_stub(
-                        b"" if payload is None else bytes(payload),
-                        kinds[i], meta, mode))
-                    keep.append(i)
-                except Exception as e:
-                    if on_error == "skip":
-                        continue
-                    # RuntimeError, not type(e): exception classes with
-                    # non-string constructors (UnicodeDecodeError etc.)
-                    # would crash the wrapper itself
-                    raise RuntimeError(
-                        f"media_id={ids[i]!r} kind={kinds[i]!r}: {e}") from e
+        n = len(xs)
+        out = {"n_samples": np.array([len(x) for x in xs], dtype=np.int32),
+               "rms_mean": np.zeros(n), "rms_std": np.zeros(n),
+               "sharpness_avg": np.zeros(n),
+               "spectrum_bands": np.zeros((n, cfg.radius_parts))}
+        for idxs in length_groups(xs).values():
+            st = signal_stats_batch(np.stack([xs[i] for i in idxs]), cfg)
+            for c in ("rms_mean", "rms_std", "sharpness_avg",
+                      "spectrum_bands"):
+                out[c][idxs] = st[c]
+        out["spectrum_bands"] = list(out["spectrum_bands"])
+        return out
 
-            if not keep:
-                continue
-            n_rows = len(keep)
-            rms_mean = np.zeros(n_rows)
-            rms_std = np.zeros(n_rows)
-            sh_avg = np.zeros(n_rows)
-            bands: list = [None] * n_rows
-            for _, idxs in length_groups(xs).items():
-                st = signal_stats_batch(np.stack([xs[i] for i in idxs]), cfg)
-                for pos, i in enumerate(idxs):
-                    rms_mean[i] = st["rms_mean"][pos]
-                    rms_std[i] = st["rms_std"][pos]
-                    sh_avg[i] = st["sharpness_avg"][pos]
-                    bands[i] = st["spectrum_bands"][pos].tolist()
-
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"].to_numpy()[keep],
-                "kind": pdf["kind"].to_numpy()[keep],
-                "n_samples": np.array([len(x) for x in xs], dtype=np.int32),
-                "rms_mean": rms_mean,
-                "rms_std": rms_std,
-                "spectrum_bands": bands,
-                "sharpness_avg": sh_avg,
-            }, columns=names)
-
-    cols = [f.name for f in MEDIA_SCHEMA.fields]
-    return media.select(*cols).mapInPandas(run, MEDIA_FEATURE_SCHEMA)
+    return _media_stage(
+        media, [f.name for f in MEDIA_SCHEMA.fields], MEDIA_FEATURE_SCHEMA,
+        lambda payload, ctx: decode_stub(payload, ctx["kind"], ctx, mode),
+        on_error, rows=stats)
 
 
 IMAGE_DECODE_STATS_SCHEMA = T.StructType([
@@ -203,49 +217,31 @@ def image_decode_stats(media: DataFrame,
     planes equal the generator formula, so a DuckDB oracle can recompute
     every output from first principles — pinning decode -> kernel math
     in the correctness gate, not just in pytest. Same Arrow-batched
-    no-shuffle mapInPandas shape as image_report."""
-    _check_on_error(on_error)
+    no-shuffle mapInArrow shape as image_report."""
     from . import kernels as K
     from . import png
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        names = [f.name for f in IMAGE_DECODE_STATS_SCHEMA.fields]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = []
-            ids = pdf["media_id"].tolist()
-            for i, payload in enumerate(pdf["payload"].tolist()):
-                try:
-                    p = png.decode_image_rgb(
-                        b"" if payload is None else bytes(payload))
-                except Exception as e:
-                    if on_error == "skip":
-                        continue
-                    raise RuntimeError(f"media_id={ids[i]!r}: {e}") from e
-                r, g, b = p["r"], p["g"], p["b"]
-                ints = (np.rint(r * 255) + np.rint(g * 255)
-                        + np.rint(b * 255)).astype(np.int64)
-                gray = K.rgb2pgm(r, g, b).reshape(-1)
-                rms_mean, rms_std = K.rms_stats(gray)
-                _, s, v = K.rgb2hsv(r.reshape(-1), g.reshape(-1),
-                                    b.reshape(-1))
-                out.append({
-                    "media_id": ids[i],
-                    "height": int(p["height"]),
-                    "width": int(p["width"]),
-                    "pixel_sum": int(ints.sum()),
-                    "rms_mean": rms_mean,
-                    "rms_std": rms_std,
-                    "mean_sat": float(s.mean()) if s.size else 0.0,
-                    "mean_val": float(v.mean()) if v.size else 0.0,
-                })
-            if not out:                 # whole batch skipped: empty
-                continue                    # object dtypes break Arrow
-            yield pd.DataFrame(out, columns=names)
+    def stats(p: dict) -> dict:
+        r, g, b = p["r"], p["g"], p["b"]
+        ints = (np.rint(r * 255) + np.rint(g * 255)
+                + np.rint(b * 255)).astype(np.int64)
+        gray = K.rgb2pgm(r, g, b).reshape(-1)
+        rms_mean, rms_std = K.rms_stats(gray)
+        _, s, v = K.rgb2hsv(r.reshape(-1), g.reshape(-1), b.reshape(-1))
+        return {
+            "height": int(p["height"]),
+            "width": int(p["width"]),
+            "pixel_sum": int(ints.sum()),
+            "rms_mean": rms_mean,
+            "rms_std": rms_std,
+            "mean_sat": float(s.mean()) if s.size else 0.0,
+            "mean_val": float(v.mean()) if v.size else 0.0,
+        }
 
-    cols = ["media_id", "payload"]
-    return media.select(*cols).mapInPandas(run, IMAGE_DECODE_STATS_SCHEMA)
+    return _media_stage(
+        media, ["media_id", "payload"], IMAGE_DECODE_STATS_SCHEMA,
+        lambda payload, ctx: png.decode_image_rgb(payload), on_error,
+        row=stats)
 
 
 PHASH_SCHEMA = T.StructType([
@@ -266,12 +262,11 @@ def image_phash(media: DataFrame, mode: str = "real",
     hamming bits, so ``dedup.hamming_pairs(df, "phash", ..., bits=64)`` finds
     visual near-duplicates with pigeonhole banding — never all-pairs,
     the same 10^12-row shape as the text SimHash path. Arrow-batched
-    no-shuffle mapInPandas like the other image operators;
+    no-shuffle mapInArrow like the other image operators;
     ``on_error='skip'`` drops undecodable rows (scraped-corpus mode).
     ``passthrough`` names extra input columns copied verbatim onto the
     output rows (keeping their input types) — e.g. an ingest-time
     column so a streaming consumer can watermark the hashed stream."""
-    _check_on_error(on_error)
     from . import kernels as K
 
     in_fields = {f.name: f for f in media.schema.fields}
@@ -284,45 +279,18 @@ def image_phash(media: DataFrame, mode: str = "real",
     out_schema = T.StructType(list(PHASH_SCHEMA.fields)
                               + [in_fields[c] for c in passthrough])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        names = [f.name for f in out_schema.fields]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = []
-            metas = {k: pdf[k].tolist() for k in _META_KEYS} \
-                if mode != "real" else None
-            extras = {c: pdf[c].tolist() for c in passthrough}
-            ids = pdf["media_id"].tolist()
-            for i, payload in enumerate(pdf["payload"].tolist()):
-                meta = ({k: _meta_val(metas[k][i]) for k in _META_KEYS}
-                        if metas else {})
-                try:
-                    r, g, b = _image_planes(
-                        b"" if payload is None else bytes(payload),
-                        meta, mode)
-                except Exception as e:
-                    if on_error == "skip":
-                        continue
-                    raise RuntimeError(f"media_id={ids[i]!r}: {e}") from e
-                gray = K.rgb2pgm(r, g, b)
-                row = {
-                    "media_id": ids[i],
-                    "phash": K.phash_plane(gray),
-                    "height": int(gray.shape[0]),
-                    "width": int(gray.shape[1]),
-                }
-                for c in passthrough:
-                    row[c] = extras[c][i]
-                out.append(row)
-            if not out:                 # whole batch skipped: empty
-                continue                    # object dtypes break Arrow
-            yield pd.DataFrame(out, columns=names)
+    def phash(planes) -> dict:
+        gray = K.rgb2pgm(*planes)
+        return {"phash": K.phash_plane(gray),
+                "height": int(gray.shape[0]), "width": int(gray.shape[1])}
 
     cols = [f.name for f in MEDIA_SCHEMA.fields] if mode != "real" \
         else ["media_id", "payload"]
     cols = cols + [c for c in passthrough if c not in cols]
-    return media.select(*cols).mapInPandas(run, out_schema)
+    return _media_stage(
+        media, cols, out_schema,
+        lambda payload, ctx: _image_planes(payload, ctx, mode), on_error,
+        row=phash)
 
 
 IMAGE_REPORT_SCHEMA = T.StructType([
@@ -416,35 +384,10 @@ def image_report(media: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
     by the rfft2 — inherently per-row work (images vary in size), Arrow-
     batched at the boundary like media_features; no shuffle anywhere.
     ``on_error='skip'`` drops undecodable rows (scraped-corpus mode)."""
-    _check_on_error(on_error)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        names = [f.name for f in IMAGE_REPORT_SCHEMA.fields]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = []
-            metas = {k: pdf[k].tolist() for k in _META_KEYS}
-            ids = pdf["media_id"].tolist()
-            for i, payload in enumerate(pdf["payload"].tolist()):
-                meta = {k: _meta_val(metas[k][i]) for k in _META_KEYS}
-                try:
-                    r, g, b = _image_planes(
-                        b"" if payload is None else bytes(payload),
-                        meta, mode)
-                except Exception as e:
-                    if on_error == "skip":
-                        continue
-                    raise RuntimeError(f"media_id={ids[i]!r}: {e}") from e
-                rep = report_image_arrays(r, g, b, cfg)
-                rep["media_id"] = ids[i]
-                out.append(rep)
-            if not out:                 # whole batch skipped: empty
-                continue                    # object dtypes break Arrow
-            yield pd.DataFrame(out, columns=names)
-
-    cols = [f.name for f in MEDIA_SCHEMA.fields]
-    return media.select(*cols).mapInPandas(run, IMAGE_REPORT_SCHEMA)
+    return _media_stage(
+        media, [f.name for f in MEDIA_SCHEMA.fields], IMAGE_REPORT_SCHEMA,
+        lambda payload, ctx: _image_planes(payload, ctx, mode), on_error,
+        row=lambda planes: report_image_arrays(*planes, cfg))
 
 
 _MEDIA_REPORT_NUMERIC = ("rms_mean", "rms_std", "mean_norm_value",
@@ -461,15 +404,6 @@ MEDIA_REPORT_SCHEMA = T.StructType(
        for name in _MEDIA_REPORT_NUMERIC for agg in ("mean", "max")])
 
 
-def _motion_frames(payload: bytes, n_sample: int):
-    """GIF / MJPEG-AVI bytes -> (sampled (H, W, 3) uint8 frames, total
-    frame count). Thin alias over the one motion-decode implementation,
-    video.decode_sampled_frames."""
-    from . import video as V
-
-    return V.decode_sampled_frames(payload, n_sample)
-
-
 def media_report_row(payload: bytes, cfg: EngineConfig = DEFAULT_CONFIG,
                      n_sample: int = 4) -> dict:
     """One media payload -> per-MEDIA report: still images run the full
@@ -479,8 +413,8 @@ def media_report_row(payload: bytes, cfg: EngineConfig = DEFAULT_CONFIG,
     1-frame special case, so <feat>_mean == <feat>_max == the image
     report's value). Split out of media_report for direct parity tests
     against per-frame report_image_arrays."""
-    from . import kernels as K
     from . import png
+    from . import video
 
     if payload[:4] == b"RIFF" and payload[8:12] != b"AVI ":
         # r7 review fix: WEBP / WAVE are RIFF containers too — surfacing
@@ -491,7 +425,8 @@ def media_report_row(payload: bytes, cfg: EngineConfig = DEFAULT_CONFIG,
             f"unsupported RIFF container {form!r} (only 'AVI ' motion "
             f"payloads are decodable; WEBP/WAVE need codecs absent here)")
     if payload[:4] == b"GIF8" or payload[:4] == b"RIFF":
-        frames, n_total = _motion_frames(bytes(payload), n_sample)
+        frames, n_total = video.decode_sampled_frames(bytes(payload),
+                                                      n_sample)
         kind = "video" if n_total > 1 else "image"
         planes = []
         for px in frames:
@@ -518,32 +453,10 @@ def media_report(media: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
     JPEG / GIF / BMP) or motion media (animated GIF, MJPEG-AVI), with
     numeric report features aggregated mean/max over ``n_sample``
     evenly-spaced frames (see media_report_row). Same shuffle-free
-    Arrow-batched mapInPandas shape as image_report; scalar-only output
+    Arrow-batched mapInArrow shape as image_report; scalar-only output
     columns, so the row is driver-canonicalizer-safe. ``on_error='skip'``
     drops undecodable rows (scraped-corpus mode)."""
-    _check_on_error(on_error)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        names = [f.name for f in MEDIA_REPORT_SCHEMA.fields]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = []
-            ids = pdf["media_id"].tolist()
-            for i, payload in enumerate(pdf["payload"].tolist()):
-                try:
-                    row = media_report_row(
-                        b"" if payload is None else bytes(payload),
-                        cfg, n_sample)
-                except Exception as e:
-                    if on_error == "skip":
-                        continue
-                    raise RuntimeError(f"media_id={ids[i]!r}: {e}") from e
-                row["media_id"] = ids[i]
-                out.append(row)
-            if not out:                 # whole batch skipped: empty
-                continue                    # object dtypes break Arrow
-            yield pd.DataFrame(out, columns=names)
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, MEDIA_REPORT_SCHEMA)
+    return _media_stage(
+        media, ["media_id", "payload"], MEDIA_REPORT_SCHEMA,
+        lambda payload, ctx: media_report_row(payload, cfg, n_sample),
+        on_error)

@@ -14,7 +14,7 @@ planes in [0,1] -> feature kernels. :func:`decode_rgb` reproduces that
 contract (PIL's RGB conversion of these color types is the same exact
 integer mapping, so outputs are bit-identical to the reference path).
 
-Scale note: decode runs inside Arrow-batched ``mapInPandas`` workers
+Scale note: decode runs inside Arrow-batched ``mapInArrow`` workers
 (multimodal.py) — per-image cost is the irreducible codec work; nothing
 here touches the driver. Rows-then-lanes unfiltering is vectorized per
 scanline (Sub via per-lane cumsum, Up fully vectorized); only Average /

@@ -4,14 +4,15 @@ windowed aggregates, and stateful gap sessionization.
 The reference is strictly batch-one-image (SURVEY §2.7); this module is the
 engine's incremental-ingest path: new token sequences land as files (or a
 Kafka topic in production), features are extracted with the SAME
-Arrow-batched kernels as the batch path (stateless mapInPandas is
+Arrow-batched kernels as the batch path (stateless mapInArrow is
 streaming-safe), and late data is bounded by event-time watermarks.
 
 Scale notes: the feature stream is stateless => unbounded parallelism, no
 state store; the windowed aggregate keeps O(windows x sources) state; the
-sessionizer keeps one small state row per active key and emits sessions on
-gap timeout — all standard Structured Streaming state-store behavior,
-checkpointed for exactly-once restart.
+sessionizer keeps one small state row per active key (its open sessions)
+and emits a session once no in-bound late event can still extend it — all
+standard Structured Streaming state-store behavior, checkpointed for
+exactly-once restart.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
 from .config import DEFAULT_CONFIG, EngineConfig
-from .engine import FEATURE_SCHEMA, _make_kernel
+from .engine import FEATURE_SCHEMA, _make_arrow_kernel
 
 TOKENS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType()),
@@ -49,8 +50,8 @@ def stream_features(tokens_stream: DataFrame,
     """Stateless streaming feature extraction — identical kernels/schema to
     the batch path, so batch and stream outputs are row-for-row equal."""
     cols = ["doc_id", "tokens", "n_tok", "source", "event_ts"]
-    return tokens_stream.select(*cols).mapInPandas(_make_kernel(cfg),
-                                                   FEATURE_SCHEMA)
+    return tokens_stream.select(*cols).mapInArrow(_make_arrow_kernel(cfg),
+                                                  FEATURE_SCHEMA)
 
 
 def windowed_source_stats(tokens_stream: DataFrame,
@@ -71,15 +72,25 @@ def windowed_source_stats(tokens_stream: DataFrame,
 
 SESSION_OUT_SCHEMA = ("user_id bigint, session_start timestamp, "
                       "session_end timestamp, n_events bigint")
-SESSION_STATE_SCHEMA = "start long, last long, n long"
+SESSION_STATE_SCHEMA = ("starts array<long>, lasts array<long>, "
+                        "counts array<long>")
 
 
 def sessionize_stream(events_stream: DataFrame, gap_seconds: int = 1800,
                       watermark: str = "1 hour") -> DataFrame:
     """Stateful gap sessionization via applyInPandasWithState: one state row
-    per active user; a session is emitted when the gap since its last event
-    exceeds ``gap_seconds`` (decided on state timeout after the watermark
-    passes). Same gap rule as the batch pit.sessionize."""
+    per active user, holding that user's OPEN sessions. Same gap rule as the
+    batch pit.sessionize.
+
+    An open session [start, last] is emitted (closed) once no event that is
+    still to arrive can reach it: when the watermark passes last+gap
+    (decided on state timeout, or on the user's next batch), or when the
+    user has already seen an event more than 2*gap past ``last``. The second
+    rule closes sessions without waiting for the watermark, and is exact
+    for any arrival order that deviates from event-time order by less than
+    one gap: a later arrival is then more than one gap past ``last``. An
+    event that still lands within gap of an already-emitted session opens a
+    session of its own (the watermark tradeoff)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     gap_us = gap_seconds * 1_000_000
@@ -87,74 +98,45 @@ def sessionize_stream(events_stream: DataFrame, gap_seconds: int = 1800,
     def fn(key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
         (user_id,) = key
-        if state.hasTimedOut:
-            start, last, n = state.get
-            state.remove()
-            yield pd.DataFrame([{
-                "user_id": user_id,
-                "session_start": pd.Timestamp(start, unit="us"),
-                "session_end": pd.Timestamp(last, unit="us"),
-                "n_events": n}])
-            return
-        ts_us: list[int] = []
-        for pdf in pdfs:
-            ts_us.extend(int(t.value // 1000) for t in pd.to_datetime(pdf["ts"]))
-        ts_us.sort()
+        sessions: list[list[int]] = []
         if state.exists:
-            start, last, n = state.get
-        else:
-            start, last, n = ts_us[0], ts_us[0], 0
-        out = []
-        # late events below the open session's start: first merge the
-        # within-gap ones BACKWARD to fixpoint (each merge extends start
-        # further down, which can pull in older events — e.g. start=1000,
-        # gap=100, batch=[850, 950]: 950 merges, extending start to 950,
-        # then 850 merges against the extended start; classifying against
-        # the pre-batch start would mis-emit 850 as its own session).
-        # What remains after the fixpoint can never merge; sessionize those
-        # stragglers among THEMSELVES with the same gap rule and emit
-        # (exact batch semantics within what's in hand — merging with
-        # already-emitted history is the watermark tradeoff).
-        below = [t for t in ts_us if n > 0 and t < start]
-        ts_live = ts_us[len(below):]
-        idx = len(below)
-        while idx > 0 and below[idx - 1] >= start - gap_us:
-            idx -= 1
-            start = below[idx]
-            n += 1
-        stragglers = below[:idx]
-        while stragglers:
-            s0 = e0 = stragglers[0]
-            cnt = 1
-            for t in stragglers[1:]:
-                if t - e0 > gap_us:
-                    break
-                e0 = t
-                cnt += 1
-            out.append({"user_id": user_id,
-                        "session_start": pd.Timestamp(s0, unit="us"),
-                        "session_end": pd.Timestamp(e0, unit="us"),
-                        "n_events": cnt})
-            stragglers = stragglers[cnt:]
-        for t in ts_live:
-            if t - last > gap_us and n > 0:
+            starts, lasts, counts = state.get
+            sessions = [list(x) for x in zip(starts, lasts, counts)]
+        for pdf in pdfs:
+            sessions.extend([t, t, 1] for t in (
+                int(ts.value // 1000) for ts in pd.to_datetime(pdf["ts"])))
+        # every open session is internally gap-connected, so merging the
+        # sorted [start, last, n] runs whose distance is <= gap yields
+        # exactly the batch sessions of the events in hand
+        sessions.sort()
+        merged: list[list[int]] = []
+        for s in sessions:
+            if merged and s[0] - merged[-1][1] <= gap_us:
+                merged[-1][1] = max(merged[-1][1], s[1])
+                merged[-1][2] += s[2]
+            else:
+                merged.append(s)
+        wm_us = state.getCurrentWatermarkMs() * 1000
+        max_seen = merged[-1][1] if merged else 0
+        out, open_ = [], []
+        for start, last, n in merged:
+            if last + gap_us < wm_us or last + 2 * gap_us < max_seen:
                 out.append({"user_id": user_id,
                             "session_start": pd.Timestamp(start, unit="us"),
                             "session_end": pd.Timestamp(last, unit="us"),
                             "n_events": n})
-                start, n = t, 0
-            last = max(last, t)
-            n += 1
-        state.update((start, last, n))
-        # the natural timeout is last+gap, but a group whose open session
-        # trails the (other-group-driven) watermark — e.g. a batch of
-        # merged stragglers that leaves ``last`` unchanged — would set a
-        # timestamp Spark rejects as earlier than the watermark. Clamp to
-        # watermark+1: the session is already expired, so the earliest
-        # permissible firing (next microbatch) is the correct semantics.
-        wm_ms = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(
-            max(last // 1000 + gap_seconds * 1000, wm_ms + 1))
+            else:
+                open_.append((start, last, n))
+        if open_:
+            starts, lasts, counts = (list(c) for c in zip(*open_))
+            state.update((starts, lasts, counts))
+            # fires once the watermark passes the earliest open session's
+            # last+gap; clamped to watermark+1, the earliest timestamp Spark
+            # accepts (a group can trail a watermark driven by other groups)
+            state.setTimeoutTimestamp(
+                max((lasts[0] + gap_us) // 1000, wm_us // 1000 + 1))
+        elif state.exists:
+            state.remove()
         if out:
             yield pd.DataFrame(out)
 
@@ -232,7 +214,7 @@ def image_dedup_stream(media_stream: DataFrame,
                        watermark_col: str | None = None,
                        watermark: str = "1 hour") -> DataFrame:
     """Streaming VISUAL dedup at ingest: REAL decode -> 64-bit pHash
-    (stateless mapInPandas) -> first-arrival dropDuplicates on the
+    (stateless mapInArrow) -> first-arrival dropDuplicates on the
     hash. Exact perceptual duplicates (same image re-scraped, or
     re-encoded closely enough to share a pHash) are dropped as they
     arrive — the image counterpart of dedup_stream. Near-dup CLUSTERING
@@ -283,7 +265,7 @@ def image_report_stream(media_stream: DataFrame,
                         cfg: EngineConfig = DEFAULT_CONFIG,
                         mode: str = "real") -> DataFrame:
     """Streaming image_report: the batch operator is a stateless
-    Arrow-batched mapInPandas (no shuffle, no state), so it lifts to
+    mapInArrow stage (no shuffle, no state), so it lifts to
     Structured Streaming unchanged — batch and stream outputs are
     row-for-row equal (pinned by tests/test_streaming.py). Unbounded
     parallelism, no state store; real decode (PNG incl. Adam7/16-bit,

@@ -20,7 +20,7 @@ Surface:
   contract as image/audio ingest).
 
 Scale note: like the image path, decode runs inside Arrow-batched
-``mapInPandas`` workers — per-row cost is the per-frame JPEG codec
+``mapInArrow`` workers — per-row cost is the per-frame JPEG codec
 floor measured in BENCH/BASELINE.md; frame sampling bounds it.
 """
 

@@ -116,3 +116,12 @@ def test_peaks_batch_parity_randomized():
         got = _peaks_batch(prof, CFG)
         for r in range(m):
             assert got[r] == K.spectral_peaks(prof[r], CFG), (trial, r)
+
+
+def test_bench_scaling_control_runs():
+    """bench.py --scaling's Spark-free hardware control (_mp_chunk) runs
+    the same batch_extract the tests pin — a batch_kernels change must
+    not silently break it."""
+    import bench
+
+    bench._mp_chunk(0)

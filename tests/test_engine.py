@@ -60,6 +60,34 @@ def test_no_row_python_in_plan(spark, sf_dir):
     assert "MapInArrow" in plan    # r7: Arrow-native kernel stage
 
 
+def test_arrow_is_the_only_python_boundary(spark, sf_dir, tmp_path):
+    """The streaming feature stage and every media operator cross into
+    Python through mapInArrow — no mapInPandas twin in any plan."""
+    from photohive_spark import multimodal, png, streaming
+
+    src = str(tmp_path / "tokens")
+    tokens_table(spark, sf_dir).limit(8).write.parquet(src)
+    q = streaming.run_to_memory(
+        streaming.stream_features(streaming.read_tokens_stream(spark, src)),
+        "plan_feats")
+    plans = {"stream_features": q._jsq.explainInternal(False)}
+    q.stop()
+
+    payload = bytearray(png.encode_png(np.zeros((4, 4, 3), dtype=np.uint8)))
+    media = spark.createDataFrame(
+        [("m", "image", payload, 4, 4, None, None)], multimodal.MEDIA_SCHEMA)
+    for op in (multimodal.media_features, multimodal.image_decode_stats,
+               multimodal.image_phash, multimodal.image_report,
+               multimodal.media_report):
+        df = op(media)
+        df.collect()
+        plans[op.__name__] = \
+            df._jdf.queryExecution().executedPlan().toString()
+    for name, plan in plans.items():
+        assert "MapInArrow" in plan, name
+        assert "MapInPandas" not in plan, name
+
+
 def test_long_tail_docs_through_spark(spark):
     """120k-token docs (the n_tok long tail) flow through the Arrow path
     and match local kernels — the skew-tail robustness check."""

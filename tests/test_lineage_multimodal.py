@@ -252,7 +252,7 @@ def test_media_report_parity_and_aggregation(spark):
     # motion media: aggregates over the same sampled frames
     for mid, payload, n_total in [("anim", gif_bytes, 6),
                                   ("vid", avi_bytes, 5)]:
-        frames, got_total = multimodal._motion_frames(payload, 4)
+        frames, got_total = video.decode_sampled_frames(payload, 4)
         assert got_total == n_total
         reps = []
         for px in frames:
