@@ -43,43 +43,6 @@ def _banded_means(Pn: np.ndarray, nb: int) -> np.ndarray:
     return out
 
 
-def _bandpass_energy_batch(x: np.ndarray, cfg: EngineConfig) -> np.ndarray:
-    """Batched circular-convolution energies, direct form: for a 15-tap
-    bank the direct product (O(taps*n), one matmul for ALL filters) beats
-    FFT convolution (3 transforms per filter per row). Implements exactly
-    convolve_circular's wrap-pad + 'valid' convolve: windows of the
-    circularly extended signal dotted with the flipped kernels."""
-    from numpy.lib.stride_tricks import sliding_window_view
-
-    m, n = x.shape
-    bank = K.gabor_bank(cfg)
-    nfilt, taps = bank.shape
-    if n < taps:                       # tiny rows: fold taps modulo n, then
-        folded = np.zeros((nfilt, n))  # same windowed product with k=n
-        for j in range(taps):
-            folded[:, j % n] += bank[:, j]
-        coefs, k = folded, n
-    else:
-        coefs, k = bank, taps
-    pad = np.concatenate([x[:, -(k - 1):], x], axis=1) if k > 1 else x
-    # GEMM path only while the materialized (m, n, k) window tensor stays
-    # small (<=256 MB): a 10k-row Arrow batch of 4096-token docs would
-    # otherwise allocate ~5 GB per worker
-    if n <= 4096 and m * n * k * 8 <= 256_000_000:
-        win = np.ascontiguousarray(sliding_window_view(pad, k, axis=1))
-        y = win.reshape(m * n, k) @ (coefs[:, ::-1].T / taps)  # (m*n, nfilt)
-        y = y.reshape(m, n, nfilt)
-        return (y * y).mean(axis=1)
-    # long rows: per-row C convolve — Python overhead is negligible and it
-    # avoids materializing the (m, n, taps) window tensor
-    out = np.empty((m, nfilt))
-    for r in range(m):
-        for fi in range(nfilt):
-            yr = np.convolve(pad[r], coefs[fi], mode="valid") / taps
-            out[r, fi] = (yr * yr).mean()
-    return out
-
-
 @lru_cache(maxsize=32)
 def _bandpass_acf_weights(cfg: EngineConfig, k_eff: int):
     """Per-filter lag weights W[f, d] = sum_u c_u c_{u-d} (d = 0..k-1) of
@@ -102,7 +65,7 @@ def _bandpass_energy_acf(x: np.ndarray, cfg: EngineConfig,
                          mu: np.ndarray, r: np.ndarray) -> np.ndarray:
     """Gabor bandpass energies from the centered circular autocorrelation
     ``r`` (= irfft(|rfft(x - mu)|^2)) — algebraically identical to
-    _bandpass_energy_batch's direct circular convolution:
+    kernels.bandpass_energy's direct circular convolution:
 
         E_f = mean_t (sum_u c_u x[(t-u) mod n] / taps)^2
             = (1/(n*taps^2)) sum_{u,v} c_u c_v R_raw((u-v) mod n)
@@ -299,15 +262,6 @@ def _peaks_core(prof: np.ndarray, cfg: EngineConfig):
     ang_flat = np.where(zero_out, 0, degs).astype(np.int64)
     mag_flat = np.where(zero_out, 0.0, mags)
     return rows_idx, ang_flat, mag_flat
-
-
-def _peaks_batch(prof: np.ndarray, cfg: EngineConfig) -> list[list]:
-    """Per-row list view of _peaks_core (the legacy/test API)."""
-    rows_idx, ang_flat, mag_flat = _peaks_core(prof, cfg)
-    out: list[list] = [[] for _ in range(prof.shape[0])]
-    for i in range(rows_idx.size):
-        out[rows_idx[i]].append((int(ang_flat[i]), float(mag_flat[i])))
-    return out
 
 
 def _peaks_core_1d(prof_r: np.ndarray, angle: int, cfg: EngineConfig):
@@ -570,34 +524,10 @@ def batch_extract(token_arrays: list, cfg: EngineConfig = DEFAULT_CONFIG,
 # the output path. Input is the tokens ListArray straight from the
 # mapInArrow record batch (flat values + offsets, no per-row ndarray
 # materialization); outputs are pyarrow arrays built from flat numpy
-# buffers (fixed-width features via one reshape, palette/peaks via a
-# segmented scatter). Values equal the per-doc kernels.extract_features
+# buffers (fixed-width features via one reshape, palette/peaks as flat
+# struct children + offsets). Values equal the per-doc kernels.extract_features
 # row for row — parity-pinned in tests/test_batch_kernels.py.
 # ---------------------------------------------------------------------------
-
-def _scatter_varlen(n_rows: int, row_ids: np.ndarray, seg_lens: np.ndarray,
-                    flats: list):
-    """Reorder group-major variable-length segments into row order.
-
-    ``row_ids``: target row per segment (one segment per row, group-major
-    concatenation order); ``seg_lens``: entries per segment; ``flats``:
-    value arrays aligned with the segment concatenation. Returns
-    (row_lens, [reordered flats])."""
-    row_lens = np.zeros(n_rows, dtype=np.int64)
-    row_lens[row_ids] = seg_lens
-    out_off = np.concatenate([[0], np.cumsum(row_lens)])
-    total = int(out_off[-1])
-    val_row = np.repeat(row_ids, seg_lens)
-    seg_off = np.concatenate([[0], np.cumsum(seg_lens)])[:-1]
-    within = np.arange(total, dtype=np.int64) - np.repeat(seg_off, seg_lens)
-    pos = out_off[val_row] + within
-    outs = []
-    for f in flats:
-        o = np.empty(total, dtype=f.dtype)
-        o[pos] = f
-        outs.append(o)
-    return row_lens, outs
-
 
 def batch_extract_arrow(tokens_arr, cfg: EngineConfig = DEFAULT_CONFIG,
                         rois_list: list | None = None,
@@ -611,11 +541,13 @@ def batch_extract_arrow(tokens_arr, cfg: EngineConfig = DEFAULT_CONFIG,
     - fixed-width outputs (hist_counts, spectrum_bands, autocorr,
       bandpass_energy): (N, W) scatter + one ListArray over the raveled
       buffer;
-    - palette / spectral_peaks: flat struct children + offsets via
-      _scatter_varlen — no per-row list-of-dict assembly at all.
+    - palette / spectral_peaks: flat struct children + offsets — no
+      per-row list-of-dict assembly at all.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
+
+    from .arrow_stage import fixed_list
 
     N = len(tokens_arr)
     lens = pc.fill_null(pc.list_value_length(tokens_arr), 0) \
@@ -693,21 +625,15 @@ def batch_extract_arrow(tokens_arr, cfg: EngineConfig = DEFAULT_CONFIG,
         pk_ang.append(ang)
         pk_mag.append(mag)
 
-    def fixed_list(mat, pa_type):
-        offs = pa.array((np.arange(N + 1, dtype=np.int64)
-                         * mat.shape[1]).astype(np.int32), type=pa.int32())
-        return pa.ListArray.from_arrays(
-            offs, pa.array(mat.ravel(), type=pa_type))
-
     out = {
         "rms_mean": pa.array(scal["rms_mean"]),
         "rms_std": pa.array(scal["rms_std"]),
         "mean_norm_value": pa.array(scal["mean_norm_value"]),
-        "hist_counts": fixed_list(hist_mat, pa.int64()),
+        "hist_counts": fixed_list(hist_mat),
         "hist_entropy": pa.array(scal["hist_entropy"]),
-        "spectrum_bands": fixed_list(bands_mat, pa.float64()),
-        "autocorr": fixed_list(ac_mat, pa.float64()),
-        "bandpass_energy": fixed_list(bp_mat, pa.float64()),
+        "spectrum_bands": fixed_list(bands_mat),
+        "autocorr": fixed_list(ac_mat),
+        "bandpass_energy": fixed_list(bp_mat),
         "sharpness_avg": pa.array(scal["sharpness_avg"]),
     }
 
@@ -752,7 +678,5 @@ def batch_extract_arrow(tokens_arr, cfg: EngineConfig = DEFAULT_CONFIG,
             sharp.append([float(t) for t in K.sharpness_rois(x, rois)])
         out["sharpness"] = pa.array(sharp, type=pa.list_(pa.float64()))
     else:
-        out["sharpness"] = pa.ListArray.from_arrays(
-            pa.array(np.zeros(N + 1, dtype=np.int32), type=pa.int32()),
-            pa.array(np.zeros(0)))
+        out["sharpness"] = fixed_list(np.zeros((N, 0)))
     return out

@@ -1,18 +1,22 @@
 """Deduplication suite for training-data pipelines: exact, MinHash+LSH,
 SimHash, n-gram Jaccard, embedding-cosine near-dup.
 
-All implementations are pure DataFrame plans (JVM-side built-ins only — no
-Python UDFs anywhere in this module), so Catalyst handles partial
-aggregation, AQE handles skewed shingles, and every groupBy is a single
-shuffle. Hash functions are the engine's poly-hash (tokenize.word_token
-semantics) so the DuckDB oracle can reproduce every number exactly.
+The shuffling operators are pure DataFrame plans (JVM-side built-ins),
+so Catalyst handles partial aggregation, AQE handles skewed shingles,
+and every groupBy is a single shuffle. The four per-doc hashes
+(word_shingles, the poly MinHash signatures, word_shingle_arrays and
+the poly simhash) are shuffle-free vectorized Arrow stages
+(arrow_stage.arrow_stage over fast_hash kernels). Hash functions are
+the engine's poly-hash (tokenize.word_token semantics) so the DuckDB
+oracle can reproduce every number exactly.
 
 Scale notes (100 TB):
 - exact dedup: md5 digest groupBy — one shuffle on the digest (uniform by
   construction, no skew);
-- MinHash: signatures via P min() aggregates over exploded shingles (ONE
-  shuffle, map-side partial min), LSH banding via explode(bands) + self-join
-  on band key — candidate generation never compares all pairs;
+- MinHash: hash_fn="fast" signatures via P min() aggregates over exploded
+  shingles (ONE shuffle, map-side partial min; "poly" needs none), LSH
+  banding via explode(bands) + self-join on band key — candidate
+  generation never compares all pairs;
 - stop-word-like hot shingles would skew the shingle explode; mitigated by
   distinct-per-doc before the join and AQE skew split.
 """
@@ -115,22 +119,15 @@ def word_shingles(docs: DataFrame, text_col: str = "text",
         # exchange+sort AND the distinct exchange. Assumes one row per
         # id (true of every caller): the old global .distinct() would
         # additionally merge byte-identical duplicate-id rows.
-        import pyarrow as pa
+        from .arrow_stage import arrow_stage
 
-        src = docs.select(id_col, text_col)
-        id_type = src.schema[id_col].dataType.simpleString()
-
-        def f(batches):
+        def f(b):
             from photohive_spark.fast_hash import shingles_arrow
-            for b in batches:
-                names = b.schema.names
-                doc_idx, grams = shingles_arrow(
-                    b.column(names.index(text_col)), k)
-                ids = b.column(names.index(id_col)).take(pa.array(doc_idx))
-                yield pa.RecordBatch.from_arrays(
-                    [ids, grams], [id_col, "shingle"])
+            doc_idx, grams = shingles_arrow(b.column(text_col), k)
+            return doc_idx, {"shingle": grams}
 
-        return src.mapInArrow(f, f"{id_col} {id_type}, shingle string")
+        return arrow_stage(docs.select(id_col, text_col), "shingle string",
+                           f, carry=[id_col])
     rows = _word_gram_rows(docs, text_col, id_col, k)
     win = Window.partitionBy(id_col).orderBy("_pos")
     parts = [F.col("_w")] + [F.lead("_w", j).over(win) for j in range(1, k)]
@@ -199,7 +196,15 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
         # (zero Exchange for the signature stage). Integers are identical
         # (parity pinned by tests), so banding candidates — and therefore
         # emitted pairs — are unchanged.
-        return _minhash_sig_arrow_df(docs, text_col, id_col, k, num_perm)
+        from .arrow_stage import arrow_stage, fixed_list
+
+        def f(b):
+            from photohive_spark.fast_hash import minhash_sig_arrow
+            return None, {"sig": fixed_list(minhash_sig_arrow(
+                b.column(text_col), k, _A[:num_perm], _B[:num_perm]))}
+
+        return arrow_stage(docs.select(id_col, text_col),
+                           "sig array<bigint>", f, carry=[id_col])
     else:
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
     mins = [F.min((F.lit(_A[j]) * F.col("h") + F.lit(_B[j])) % F.lit(MERSENNE))
@@ -222,32 +227,6 @@ def minhash_signatures_expr(docs: DataFrame, text_col: str = "text",
     agg = hashed.groupBy(id_col).agg(*mins)
     return agg.select(F.col(id_col),
                       F.array(*[f"m{j}" for j in range(num_perm)]).alias("sig"))
-
-
-def _minhash_sig_arrow_df(docs: DataFrame, text_col: str, id_col: str,
-                          k: int, num_perm: int) -> DataFrame:
-    """(id_col, sig array<bigint>) via the vectorized per-doc kernel."""
-    import numpy as np
-    import pyarrow as pa
-
-    src = docs.select(id_col, text_col)
-    id_type = src.schema[id_col].dataType.simpleString()
-    a_consts, b_consts = _A[:num_perm], _B[:num_perm]
-
-    def f(batches):
-        from photohive_spark.fast_hash import minhash_sig_arrow
-        for b in batches:
-            names = b.schema.names
-            texts = b.column(names.index(text_col))
-            sig = minhash_sig_arrow(texts, k, a_consts, b_consts)
-            n, p = sig.shape
-            offs = pa.array((np.arange(n + 1, dtype=np.int64) * p)
-                            .astype(np.int32), type=pa.int32())
-            arr = pa.ListArray.from_arrays(offs, pa.array(sig.ravel()))
-            yield pa.RecordBatch.from_arrays(
-                [b.column(names.index(id_col)), arr], [id_col, "sig"])
-
-    return src.mapInArrow(f, f"{id_col} {id_type}, sig array<bigint>")
 
 
 def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
@@ -367,31 +346,23 @@ def word_shingle_arrays(docs: DataFrame, text_col: str = "text",
     vectorized builder (fast_hash.shingles_arrow): no explode, no
     groupBy/collect_list, zero shuffles. Same sets as
     word_shingles(distinct=True) grouped per doc."""
-    import pyarrow as pa
+    from .arrow_stage import arrow_stage
 
-    src = docs.select(id_col, text_col)
-    id_type = src.schema[id_col].dataType.simpleString()
-
-    def f(batches):
+    def f(b):
         import numpy as np
+        import pyarrow as pa
 
         from photohive_spark.fast_hash import shingles_arrow
-        for b in batches:
-            names = b.schema.names
-            texts = b.column(names.index(text_col))
-            doc_idx, grams = shingles_arrow(texts, k)
-            n = len(texts)
-            cnt = np.bincount(doc_idx, minlength=n).astype(np.int64)
-            offs = pa.array(np.concatenate([[0], np.cumsum(cnt)])
-                            .astype(np.int32), type=pa.int32())
-            arr = pa.ListArray.from_arrays(offs, grams)
-            yield pa.RecordBatch.from_arrays(
-                [b.column(names.index(id_col)), arr,
-                 pa.array(cnt, type=pa.int64())],
-                [id_col, "shingles", "n_sh"])
+        doc_idx, grams = shingles_arrow(b.column(text_col), k)
+        cnt = np.bincount(doc_idx, minlength=b.num_rows).astype(np.int64)
+        offs = pa.array(np.concatenate([[0], np.cumsum(cnt)])
+                        .astype(np.int32), type=pa.int32())
+        return None, {"shingles": pa.ListArray.from_arrays(offs, grams),
+                      "n_sh": cnt}
 
-    return src.mapInArrow(
-        f, f"{id_col} {id_type}, shingles array<string>, n_sh bigint")
+    return arrow_stage(docs.select(id_col, text_col),
+                       "shingles array<string>, n_sh bigint", f,
+                       carry=[id_col])
 
 
 def verify_jaccard(pairs: DataFrame, docs: DataFrame, text_col: str,
@@ -545,22 +516,15 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
         # (fast_hash.simhash_arrow) — no explode, no groupBy shuffle, no
         # interpreted per-char HOF. Identical integers (parity pinned);
         # docs with no words are dropped exactly like the explode form.
-        import pyarrow as pa
+        from .arrow_stage import arrow_stage
 
-        src = docs.select(id_col, text_col)
-        id_type = src.schema[id_col].dataType.simpleString()
-
-        def f(batches):
+        def f(b):
             from photohive_spark.fast_hash import simhash_arrow
-            for b in batches:
-                names = b.schema.names
-                keep, sim = simhash_arrow(b.column(names.index(text_col)),
-                                          bits)
-                ids = b.column(names.index(id_col)).filter(pa.array(keep))
-                yield pa.RecordBatch.from_arrays(
-                    [ids, pa.array(sim)], [id_col, "simhash"])
+            keep, sim = simhash_arrow(b.column(text_col), bits)
+            return keep, {"simhash": sim}
 
-        return src.mapInArrow(f, f"{id_col} {id_type}, simhash bigint")
+        return arrow_stage(docs.select(id_col, text_col), "simhash bigint",
+                           f, carry=[id_col])
     words = docs.select(
         F.col(id_col),
         F.explode(F.expr(f"filter(split({text_col}, ' '), w -> length(w) > 0)"))

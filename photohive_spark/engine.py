@@ -91,61 +91,6 @@ def features_row(tokens: np.ndarray, cfg: EngineConfig,
     }
 
 
-def _make_arrow_kernel(cfg: EngineConfig, roi_col: str | None = None,
-                       time_acc=None, stage_accs=None):
-    """Build the mapInArrow function — the one Python stage of the token
-    path, shared by the batch (extract_features_df) and streaming
-    (streaming.stream_features) operators. The kernel DAG runs straight
-    off the record batch's tokens ListArray (flat values + offsets — no
-    per-row ndarray materialization, no pandas on either side), and the
-    outputs are assembled as Arrow arrays from flat numpy buffers
-    (batch_kernels.batch_extract_arrow). Passthrough columns (doc_id,
-    tokens, n_tok, source, event_ts) are reused zero-copy.
-
-    ``time_acc`` (optional Spark accumulator) collects TOTAL kernel wall
-    seconds across all workers; ``stage_accs`` (optional dict name ->
-    accumulator, keys from KERNEL_STAGES) splits it per kernel family —
-    the per-stage analog of the reference's timing macros
-    (``src/utilities.h:10-18``; README.md:63-75 times 11 stages),
-    surfaced through lineage manifests. Accumulators updated in
-    transformations are at-least-once: task retries / speculative
-    duplicates overcount, so treat the timing as an advisory profile,
-    not an exact meter."""
-    feature_names = [f.name for f in FEATURE_FIELDS]
-    pass_cols = ["doc_id", "tokens", "n_tok", "source", "event_ts"]
-
-    def extract(batches):
-        import time as _time
-
-        import pyarrow as pa
-
-        from .batch_kernels import batch_extract_arrow
-        for batch in batches:
-            t0 = _time.perf_counter()
-            names = batch.schema.names
-            toks = batch.column(names.index("tokens"))
-            rois_list = None
-            if roi_col is not None and roi_col in names:
-                rois_list = [
-                    None if cell is None
-                    else [(int(r["start"]), int(r["end"])) for r in cell]
-                    for cell in batch.column(names.index(roi_col)).to_pylist()]
-            timings = {} if stage_accs is not None else None
-            cols = batch_extract_arrow(toks, cfg, rois_list, timings=timings)
-            if stage_accs is not None:
-                for name, secs in timings.items():
-                    if name in stage_accs:
-                        stage_accs[name].add(secs)
-            if time_acc is not None:
-                time_acc.add(_time.perf_counter() - t0)
-            arrays = [batch.column(names.index(c)) for c in pass_cols]
-            arrays += [cols[n] for n in feature_names]
-            yield pa.RecordBatch.from_arrays(arrays,
-                                             pass_cols + feature_names)
-
-    return extract
-
-
 KERNEL_STAGES = ("stats_s", "hist_s", "autocorr_s", "bandpass_s",
                  "blur_fft_s", "palette_s", "peaks_s")
 
@@ -168,19 +113,53 @@ def extract_features_df(tokens_df: DataFrame,
     ``src/interface.c:24-27``); when given, the output ``sharpness`` column
     carries one per-ROI sharpness per entry (cap 10), else it is empty.
 
-    Stage shape: Scan -> [optional cost rebalance] -> MapInArrow. No
-    shuffle unless the caller opted into rebalancing. (r7: the Python
-    stage is mapInArrow — tokens flow in as flat Arrow buffers and
-    features flow out as Arrow arrays built from flat numpy, removing
-    the pandas conversion and all per-row list/dict assembly on the
-    boundary; values identical, parity-pinned in tests.)
+    Stage shape: Scan -> [optional cost rebalance] -> MapInArrow, the
+    token path's one Python stage (an arrow_stage; the streaming path
+    calls this function too). No shuffle unless the caller opted into
+    rebalancing. The kernel DAG runs straight off each record batch's
+    tokens ListArray (flat values + offsets — no per-row ndarray, no
+    pandas on either side) and the features come back as Arrow arrays
+    built from flat numpy buffers (batch_kernels.batch_extract_arrow);
+    the passthrough columns (doc_id, tokens, n_tok, source, event_ts)
+    are carried zero-copy. Values are parity-pinned in tests.
+
+    ``time_acc`` (optional Spark accumulator) collects TOTAL kernel wall
+    seconds across all workers; ``stage_accs`` (optional dict name ->
+    accumulator, keys from KERNEL_STAGES) splits it per kernel family —
+    the per-stage analog of the reference's timing macros
+    (``src/utilities.h:10-18``; README.md:63-75 times 11 stages),
+    surfaced through lineage manifests. Accumulators updated in
+    transformations are at-least-once: task retries / speculative
+    duplicates overcount, so treat the timing as an advisory profile,
+    not an exact meter.
     """
+    from .arrow_stage import arrow_stage
+
+    def extract(batch):
+        import time as _time
+
+        from .batch_kernels import batch_extract_arrow
+        t0 = _time.perf_counter()
+        rois_list = None
+        if roi_col is not None:
+            rois_list = [
+                None if cell is None
+                else [(int(r["start"]), int(r["end"])) for r in cell]
+                for cell in batch.column(roi_col).to_pylist()]
+        timings = {} if stage_accs is not None else None
+        cols = batch_extract_arrow(batch.column("tokens"), cfg, rois_list,
+                                   timings=timings)
+        if stage_accs is not None:
+            for name, secs in timings.items():
+                if name in stage_accs:
+                    stage_accs[name].add(secs)
+        if time_acc is not None:
+            time_acc.add(_time.perf_counter() - t0)
+        return None, cols
+
     cols = ["doc_id", "tokens", "n_tok", "source", "event_ts"]
-    if roi_col is not None:
-        cols.append(roi_col)
-    return tokens_df.select(*cols).mapInArrow(
-        _make_arrow_kernel(cfg, roi_col, time_acc, stage_accs),
-        FEATURE_SCHEMA)
+    src = tokens_df.select(*cols, *([roi_col] if roi_col is not None else []))
+    return arrow_stage(src, FEATURE_SCHEMA, extract, carry=cols)
 
 
 def flatten_features(features: DataFrame, n_palette: int = 100,

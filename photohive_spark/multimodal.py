@@ -84,17 +84,11 @@ def decode_stub(payload: bytes, kind: str, meta: dict, mode: str = "fake"
     return _fake_decode(payload, max(4, n))
 
 
-def _check_on_error(on_error: str) -> None:
-    if on_error not in ("fail", "skip"):
-        raise ValueError(f"on_error must be 'fail' or 'skip', "
-                         f"got {on_error!r}")
-
-
 def _media_stage(media: DataFrame, in_cols: list[str],
                  out_schema: T.StructType, decode, on_error: str,
                  row=None, rows=None) -> DataFrame:
-    """The one Arrow-native loop behind every media operator: a
-    shuffle-free mapInArrow stage over ``in_cols`` of ``media``.
+    """The one decode loop behind every media operator, run as an
+    arrow_stage over ``in_cols`` of ``media``.
 
     Per record batch, each row's payload (a null payload reads as b"")
     goes through ``decode(payload, ctx)``, where ``ctx`` maps the row's
@@ -109,46 +103,41 @@ def _media_stage(media: DataFrame, in_cols: list[str],
     after its decode (without ``row`` the decoded value is that dict),
     or ``rows([decoded, ...]) -> {column: sequence}`` over the batch's
     kept rows at once."""
-    _check_on_error(on_error)
-    from pyspark.sql.pandas.types import to_arrow_type
+    if on_error not in ("fail", "skip"):
+        raise ValueError(f"on_error must be 'fail' or 'skip', "
+                         f"got {on_error!r}")
+    from .arrow_stage import arrow_stage
 
-    names = [f.name for f in out_schema.fields]
-    computed = {f.name: to_arrow_type(f.dataType)
-                for f in out_schema.fields if f.name not in in_cols}
+    carry = [f.name for f in out_schema.fields if f.name in in_cols]
+    computed = [f.name for f in out_schema.fields if f.name not in in_cols]
     ctx_cols = [c for c in in_cols if c != "payload"]
 
-    def run(batches):
-        import pyarrow as pa
+    def body(batch):
+        ctx_vals = {c: batch.column(c).to_pylist() for c in ctx_cols}
+        payloads = batch.column("payload")
+        keep, done = [], []
+        for i in range(batch.num_rows):
+            ctx = {c: ctx_vals[c][i] for c in ctx_cols}
+            try:
+                x = decode(payloads[i].as_py() or b"", ctx)
+            except Exception as e:
+                if on_error == "skip":
+                    continue
+                # RuntimeError, not type(e): exception classes with
+                # non-string constructors (UnicodeDecodeError etc.)
+                # would crash the wrapper itself
+                where = " ".join(f"{c}={ctx[c]!r}"
+                                 for c in ("media_id", "kind") if c in ctx)
+                raise RuntimeError(f"{where}: {e}") from e
+            keep.append(i)
+            # the row body runs before the next decode, so only one
+            # row's decoded planes are alive at a time
+            done.append(row(x) if row else x)
+        out = rows(done) if rows else \
+            {c: [d[c] for d in done] for c in computed}
+        return keep, out
 
-        for batch in batches:
-            ctx_vals = {c: batch.column(c).to_pylist() for c in ctx_cols}
-            payloads = batch.column("payload")
-            keep, done = [], []
-            for i in range(batch.num_rows):
-                ctx = {c: ctx_vals[c][i] for c in ctx_cols}
-                try:
-                    x = decode(payloads[i].as_py() or b"", ctx)
-                except Exception as e:
-                    if on_error == "skip":
-                        continue
-                    # RuntimeError, not type(e): exception classes with
-                    # non-string constructors (UnicodeDecodeError etc.)
-                    # would crash the wrapper itself
-                    where = " ".join(f"{c}={ctx[c]!r}"
-                                     for c in ("media_id", "kind") if c in ctx)
-                    raise RuntimeError(f"{where}: {e}") from e
-                keep.append(i)
-                # the row body runs before the next decode, so only one
-                # row's decoded planes are alive at a time
-                done.append(row(x) if row else x)
-            out = rows(done) if rows else \
-                {c: [d[c] for d in done] for c in computed}
-            take = pa.array(keep, type=pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out[c], type=computed[c]) if c in computed
-                 else batch.column(c).take(take) for c in names], names)
-
-    return media.select(*in_cols).mapInArrow(run, out_schema)
+    return arrow_stage(media.select(*in_cols), out_schema, body, carry)
 
 
 def media_features(media: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,

@@ -33,7 +33,7 @@ def get_spark(app: str = "photohive_spark",
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # --- Arrow path for all pandas UDFs (the only Python boundary) ---
+        # --- Arrow transport for every Python stage (mapInArrow/pandas) ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(cfg.arrow_batch_rows))

@@ -14,7 +14,9 @@
 - choose_ann_index: sampled recall probe that picks the index + probe
   budget per corpus (LSH for angular-close, IVF otherwise).
 
-No Python UDFs; the hyperplanes are a broadcast literal array.
+The SQL paths use no Python (the hyperplanes are a broadcast literal
+array); the GEMM paths (IVF assign_fn="pandas", PQ encode/score,
+random projection, PCA) cross into Python through Arrow stages only.
 """
 
 from __future__ import annotations
@@ -89,13 +91,28 @@ def ivf_assign(emb: DataFrame, centroids: np.ndarray,
 
     ``assign_fn``: "sql" = per-centroid zip_with dot products, exactly
     reproducible in the DuckDB oracle BUT interpreted (HOF lambdas are
-    CodegenFallback — measured 465 s to assign 1M x 64 cells); "pandas" =
-    one Arrow-batched numpy GEMM per batch (the engine's kernel pattern;
-    measured ~20x faster), tie-broken like F.greatest(struct) (largest
-    cell wins) though FP summation order can flip true near-ties vs sql.
+    CodegenFallback — measured 465 s to assign 1M x 64 cells); "pandas"
+    (the value's name predates the Arrow boundary) = one numpy GEMM per
+    Arrow batch in an arrow_stage (the engine's kernel pattern; measured
+    ~20x faster): cell = argmax over V @ C^T (the per-row norm is a
+    positive scalar, so it cannot change the argmax — centroids are
+    unit-norm by construction), tie-broken like F.greatest(struct)
+    (largest cell wins) though FP summation order can flip true
+    near-ties vs sql.
     """
     if assign_fn == "pandas":
-        return _ivf_assign_pandas(emb, centroids, id_col, vec_col)
+        from .arrow_stage import arrow_stage, fixed_list
+
+        C = np.ascontiguousarray(np.asarray(centroids, dtype=np.float64).T)
+
+        def assign(batch):
+            V = _dense(batch.column(vec_col), C.shape[0])
+            return None, {"v": fixed_list(V),
+                          "ivf_cell": _ivf_cells(V, C).astype(np.int32)}
+
+        return arrow_stage(emb.select(id_col, vec_col),
+                           "v array<double>, ivf_cell int", assign,
+                           carry=[id_col])
     if assign_fn != "sql":
         raise ValueError(f"unknown assign_fn {assign_fn!r}")
     v = F.col(vec_col).cast("array<double>")
@@ -109,45 +126,59 @@ def ivf_assign(emb: DataFrame, centroids: np.ndarray,
                       best["cell"].alias("ivf_cell"))
 
 
-def _ivf_assign_pandas(emb: DataFrame, centroids: np.ndarray,
-                       id_col: str, vec_col: str) -> DataFrame:
-    """Arrow-batched GEMM assignment: cell = argmax over V @ C^T (the
-    per-row norm is a positive scalar, so it cannot change the argmax —
-    centroids are unit-norm by construction). Ties pick the LARGEST cell,
-    matching the sql path's F.greatest(struct(s, cell)) semantics."""
-    import pandas as pd
-    import pyspark.sql.types as T
+def _dense(col, dim: int | None = None) -> np.ndarray:
+    """Arrow list column of n vectors -> (n, dim) float64 matrix. A row
+    that is null or does not hold exactly ``dim`` values (default: the
+    widest row) raises ValueError instead of being broadcast."""
+    import pyarrow.compute as pc
 
-    C = np.ascontiguousarray(np.asarray(centroids, dtype=np.float64).T)
-    n_cells = C.shape[1]
-    schema = T.StructType([
-        emb.schema[id_col],
-        T.StructField("v", T.ArrayType(T.DoubleType())),
-        T.StructField("ivf_cell", T.IntegerType()),
-    ])
+    lens = pc.fill_null(pc.list_value_length(col), -1).to_numpy()
+    dim = int(lens.max()) if dim is None else dim
+    bad = lens[lens != dim]
+    if bad.size:
+        raise ValueError(f"vector width mismatch: expected {dim} values, "
+                         f"got {'null' if bad[0] < 0 else bad[0]} "
+                         f"({bad.size} such rows)")
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64).reshape(len(col), dim)
 
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:  # zero-row Arrow batch: np.stack([]) raises
-                continue
-            V = np.stack([np.asarray(x, dtype=np.float64)
-                          for x in pdf[vec_col]])
-            S = V @ C
-            cell = (n_cells - 1) - np.argmax(S[:, ::-1], axis=1)
-            yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
-                "v": list(V),
-                "ivf_cell": cell.astype(np.int32),
-            })
 
-    return emb.select(id_col, vec_col).mapInPandas(assign, schema)
+def _unit_rows(V: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm (all-zero rows stay zero)."""
+    return V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
+
+
+def _ivf_cells(V: np.ndarray, centroids_t: np.ndarray) -> np.ndarray:
+    """IVF cell per row: argmax over V @ C^T (``centroids_t`` is C^T).
+    Ties pick the LARGEST cell, matching the sql path's
+    F.greatest(struct(s, cell)) semantics."""
+    S = V @ centroids_t
+    return (S.shape[1] - 1) - np.argmax(S[:, ::-1], axis=1)
+
+
+def _code_bytes(unit: np.ndarray, codebooks: np.ndarray) -> list[bytes]:
+    """One m-byte PQ code per unit row (see _pq_codes)."""
+    return [c.tobytes() for c in _pq_codes(unit, codebooks).astype(np.uint8)]
+
+
+def _pq_codes(unit: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """(n, m) nearest-codeword index per PQ subspace of unit rows. Only
+    -2<x,c> of the expanded L2 distance depends on x, so each subspace
+    is one matmul plus the codewords' ||c||^2."""
+    m, _, dsub = codebooks.shape
+    cb = codebooks.astype(np.float64)
+    c_sq = (cb ** 2).sum(axis=2)                      # (m, n_codes)
+    return np.stack([
+        np.argmin(c_sq[j][None, :]
+                  - 2.0 * (unit[:, j * dsub:(j + 1) * dsub] @ cb[j].T),
+                  axis=1)
+        for j in range(m)], axis=1)
 
 
 def _kmeans_unit(sample: np.ndarray, n_cells: int,
                  iters: int = 5) -> np.ndarray:
     """Deterministic spherical mini k-means over L2-normalized rows."""
-    norms = np.linalg.norm(sample, axis=1, keepdims=True)
-    sample = sample / np.maximum(norms, 1e-12)
+    sample = _unit_rows(sample)
     cents = sample[:n_cells].copy()
     for _ in range(iters):
         assign = np.argmax(sample @ cents.T, axis=1)
@@ -244,8 +275,7 @@ def choose_ann_index(emb: DataFrame, k: int = 10,
     if n < 4 * k:
         raise ValueError(
             f"sample of {n} rows is too small to probe recall@{k}")
-    unit = sample / np.maximum(
-        np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
+    unit = _unit_rows(sample)
     qidx = list(range(min(n_queries, n)))
     sims = unit[qidx] @ unit.T
     true_topk = []
@@ -300,12 +330,7 @@ def choose_ann_index(emb: DataFrame, k: int = 10,
             _kmeans_l2(np.ascontiguousarray(
                 unit[:, j * dsub:(j + 1) * dsub]), ncb, 8)
             for j in range(pq_m)])
-        c_sq = (cbs ** 2).sum(axis=2)
-        pq_assign = np.empty((n, pq_m), dtype=np.int64)
-        for j in range(pq_m):
-            X = unit[:, j * dsub:(j + 1) * dsub]
-            pq_assign[:, j] = np.argmin(
-                c_sq[j][None, :] - 2.0 * (X @ cbs[j].T), axis=1)
+        pq_assign = _pq_codes(unit, cbs)
         for np_ in ivf_probes:
             rec = 0.0
             for row, qi in enumerate(qidx):
@@ -691,8 +716,7 @@ def train_pq(emb: DataFrame, m: int = 8, n_codes: int = 256,
     if n < n_codes:
         raise ValueError(f"sample of {n} rows cannot train {n_codes} "
                          f"codes — raise sample_rows")
-    unit = sample / np.maximum(
-        np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
+    unit = _unit_rows(sample)
     dsub = dim // m
     return np.stack([
         _kmeans_l2(np.ascontiguousarray(unit[:, j * dsub:(j + 1) * dsub]),
@@ -706,32 +730,16 @@ def pq_encode(emb: DataFrame, codebooks: np.ndarray,
     """Corpus -> (id, pq_code binary): per Arrow batch, one vectorized
     nearest-codeword argmin per subspace (GEMM-shaped, like the IVF
     fast assignment). Codes are ``m`` bytes per vector."""
-    import pandas as pd
+    from .arrow_stage import arrow_stage
 
-    m, n_codes, dsub = codebooks.shape
-    cb = codebooks.astype(np.float64)
-    # ||c||^2 terms of the expanded L2 distance; the -2<x,c> term is the
-    # only data-dependent part -> one matmul per subspace per batch
-    c_sq = (cb ** 2).sum(axis=2)                      # (m, n_codes)
+    m, _, dsub = codebooks.shape
 
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            V = V / np.maximum(
-                np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-            codes = np.empty((len(V), m), dtype=np.uint8)
-            for j in range(m):
-                X = V[:, j * dsub:(j + 1) * dsub]
-                d2 = c_sq[j][None, :] - 2.0 * (X @ cb[j].T)
-                codes[:, j] = np.argmin(d2, axis=1)
-            yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
-                "pq_code": [c.tobytes() for c in codes]})
+    def run(batch):
+        unit = _unit_rows(_dense(batch.column(vec_col), m * dsub))
+        return None, {"pq_code": _code_bytes(unit, codebooks)}
 
-    return emb.select(id_col, vec_col).mapInPandas(
-        run, f"{id_col} long, pq_code binary")
+    return arrow_stage(emb.select(id_col, vec_col), "pq_code binary", run,
+                       carry=[id_col])
 
 
 def pq_topk(codes: DataFrame, codebooks: np.ndarray,
@@ -747,11 +755,11 @@ def pq_topk(codes: DataFrame, codebooks: np.ndarray,
     ADC candidates are re-scored EXACTLY against the original vectors
     (a k*factor-row broadcast-join, the standard PQ recall recovery).
 
-    Scale shape: scan of m-byte codes -> mapInPandas scoring ->
+    Scale shape: scan of m-byte codes -> arrow_stage scoring ->
     TakeOrdered; at 10^12 vectors the scored index is 32x smaller than
     the raw embeddings and the exact re-rank touches only k*factor
     rows."""
-    import pandas as pd
+    from .arrow_stage import arrow_stage
 
     m, n_codes, dsub = codebooks.shape
     q = np.asarray(query_vec, dtype=np.float64)
@@ -759,18 +767,14 @@ def pq_topk(codes: DataFrame, codebooks: np.ndarray,
     lut = np.stack([codebooks[j] @ q[j * dsub:(j + 1) * dsub]
                     for j in range(m)]).astype(np.float64)  # (m, n_codes)
 
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.frombuffer(
-                b"".join(pdf["pq_code"].tolist()),
-                dtype=np.uint8).reshape(len(pdf), m)
-            score = lut[np.arange(m)[None, :], C].sum(axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(),
-                                "adc_score": np.round(score, 6)})
+    def run(batch):
+        C = np.frombuffer(b"".join(batch.column("pq_code").to_pylist()),
+                          dtype=np.uint8).reshape(batch.num_rows, m)
+        score = lut[np.arange(m)[None, :], C].sum(axis=1)
+        return None, {"adc_score": np.round(score, 6)}
 
-    scored = codes.mapInPandas(run, f"{id_col} long, adc_score double")
+    scored = arrow_stage(codes.select(id_col, "pq_code"), "adc_score double",
+                         run, carry=[id_col])
     if rerank_with is None:
         return scored.orderBy(F.desc("adc_score"), F.asc(id_col)).limit(k)
     cand = scored.orderBy(F.desc("adc_score"), F.asc(id_col)) \
@@ -795,34 +799,18 @@ def write_ivfpq_index(emb: DataFrame, path: str, centroids: np.ndarray,
     embeddings — the two pruning axes compose multiplicatively: at
     10^12 dim-64 vectors the probed bytes per query drop from 256 TB
     (brute) to ~tens of GB."""
-    import pandas as pd
+    from .arrow_stage import arrow_stage
 
     C = np.ascontiguousarray(np.asarray(centroids, dtype=np.float64).T)
-    n_cells = C.shape[1]
-    m, n_codes, dsub = codebooks.shape
-    cb = codebooks.astype(np.float64)
-    c_sq = (cb ** 2).sum(axis=2)
 
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            Vn = V / np.maximum(
-                np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-            cell = (n_cells - 1) - np.argmax((Vn @ C)[:, ::-1], axis=1)
-            codes = np.empty((len(Vn), m), dtype=np.uint8)
-            for j in range(m):
-                X = Vn[:, j * dsub:(j + 1) * dsub]
-                codes[:, j] = np.argmin(
-                    c_sq[j][None, :] - 2.0 * (X @ cb[j].T), axis=1)
-            yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
-                "pq_code": [c.tobytes() for c in codes],
-                "ivf_cell": cell.astype(np.int32)})
+    def run(batch):
+        unit = _unit_rows(_dense(batch.column(vec_col), C.shape[0]))
+        return None, {"pq_code": _code_bytes(unit, codebooks),
+                      "ivf_cell": _ivf_cells(unit, C).astype(np.int32)}
 
-    assigned = emb.select(id_col, vec_col).mapInPandas(
-        run, f"{id_col} long, pq_code binary, ivf_cell int")
+    assigned = arrow_stage(emb.select(id_col, vec_col),
+                           "pq_code binary, ivf_cell int", run,
+                           carry=[id_col])
     assigned.write.mode("overwrite").partitionBy("ivf_cell").parquet(path)
 
 
@@ -887,28 +875,25 @@ def rp_project(emb: DataFrame, matrix: np.ndarray,
                out_col: str = "proj",
                center: np.ndarray | None = None) -> DataFrame:
     """Project every embedding through ``matrix`` (out_dim, in_dim):
-    one GEMM per Arrow batch, shuffle-free mapInPandas (the pq_encode
+    one GEMM per Arrow batch, shuffle-free arrow_stage (the pq_encode
     shape) — at 10^12 rows this is a pure map stage whose output is
     out_dim/in_dim of the input bytes. ``center`` (in_dim,) is
     subtracted first when given (PCA's mean-centering); the identity
-    for plain JL. Output: (id, array<double> proj)."""
-    import pandas as pd
+    for plain JL. Output: (id, array<double> proj). A vector whose
+    width is not in_dim (or a null one) fails the task with a
+    ValueError naming both widths."""
+    from .arrow_stage import arrow_stage, fixed_list
 
     M = np.ascontiguousarray(matrix, dtype=np.float64)
     mu = (np.zeros(M.shape[1]) if center is None
           else np.asarray(center, dtype=np.float64))
 
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64) - mu
-            P = V @ M.T
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(),
-                                out_col: list(P)})
+    def run(batch):
+        V = _dense(batch.column(vec_col), M.shape[1]) - mu
+        return None, {out_col: fixed_list(V @ M.T)}
 
-    return emb.select(id_col, vec_col).mapInPandas(
-        run, f"{id_col} long, {out_col} array<double>")
+    return arrow_stage(emb.select(id_col, vec_col),
+                       f"{out_col} array<double>", run, carry=[id_col])
 
 
 def rp_project_expr(emb: DataFrame, out_dim: int,
@@ -939,15 +924,17 @@ def pca_partials_df(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """One (count, sum, Gram) partial row PER PARTITION (r7: accumulated
     across the Arrow batch iterator inside the task — the old per-batch
     yield made the driver collect scale with data size)."""
-    import pandas as pd
+    from .arrow_stage import fixed_list
 
     def partials(batches):
+        import pyarrow as pa
+
         n = 0
         s = g = None
-        for pdf in batches:
-            if len(pdf) == 0:
+        for b in batches:
+            if b.num_rows == 0:
                 continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            V = _dense(b.column(vec_col), None if s is None else s.size)
             n += len(V)
             if s is None:
                 s = V.sum(axis=0)
@@ -956,9 +943,11 @@ def pca_partials_df(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
                 s += V.sum(axis=0)
                 g += V.T @ V
         if n:
-            yield pd.DataFrame({"n": [n], "s": [s], "g": [g.ravel()]})
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([n], type=pa.int64()), fixed_list(s[None, :]),
+                 fixed_list(g.reshape(1, -1))], ["n", "s", "g"])
 
-    return emb.select(vec_col).mapInPandas(
+    return emb.select(vec_col).mapInArrow(
         partials, "n long, s array<double>, g array<double>")
 
 

@@ -25,7 +25,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
 from .config import DEFAULT_CONFIG, EngineConfig
-from .engine import FEATURE_SCHEMA, _make_arrow_kernel
+from .engine import extract_features_df
 
 TOKENS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType()),
@@ -49,9 +49,7 @@ def stream_features(tokens_stream: DataFrame,
                     cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
     """Stateless streaming feature extraction — identical kernels/schema to
     the batch path, so batch and stream outputs are row-for-row equal."""
-    cols = ["doc_id", "tokens", "n_tok", "source", "event_ts"]
-    return tokens_stream.select(*cols).mapInArrow(_make_arrow_kernel(cfg),
-                                                  FEATURE_SCHEMA)
+    return extract_features_df(tokens_stream, cfg)
 
 
 def windowed_source_stats(tokens_stream: DataFrame,

@@ -169,30 +169,19 @@ def repetition_stats(docs: DataFrame, text_col: str = "text",
     ``impl="expr"`` keeps the explode+groupBy form as the parity oracle.
     """
     if impl == "arrow":
-        import pyarrow as pa
+        from .arrow_stage import arrow_stage
 
-        src = docs.select(id_col, text_col)
-        id_type = src.schema[id_col].dataType.simpleString()
-
-        def f(batches):
+        def f(b):
             import numpy as np
             from photohive_spark.fast_hash import repetition_arrow
-            for b in batches:
-                names = b.schema.names
-                keep, nw, nd, tb, nb = repetition_arrow(
-                    b.column(names.index(text_col)))
-                if not keep.any():
-                    continue
-                ids = b.column(names.index(id_col)).filter(pa.array(keep))
-                yield pa.RecordBatch.from_arrays(
-                    [ids, pa.array(nw.astype(np.int32)),
-                     pa.array(nd.astype(np.int32)),
-                     pa.array(tb), pa.array(nb)],
-                    [id_col, "n_words", "n_distinct", "top_bg", "n_bg"])
+            keep, nw, nd, tb, nb = repetition_arrow(b.column(text_col))
+            return keep, {"n_words": nw.astype(np.int32),
+                          "n_distinct": nd.astype(np.int32),
+                          "top_bg": tb, "n_bg": nb}
 
-        top = src.mapInArrow(
-            f, f"{id_col} {id_type}, n_words int, n_distinct int, "
-               f"top_bg bigint, n_bg bigint")
+        top = arrow_stage(docs.select(id_col, text_col),
+                          "n_words int, n_distinct int, top_bg bigint, "
+                          "n_bg bigint", f, carry=[id_col])
     else:
         words = f"filter(split({text_col}, ' '), w -> length(w) > 0)"
         # <2 words -> no bigrams -> doc dropped by the explode (consistent

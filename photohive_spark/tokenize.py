@@ -84,29 +84,16 @@ def tokens_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tokens_from_documents(df: DataFrame) -> DataFrame:
     """Tokenize any (doc_id, text, source) documents DataFrame into the
     input_hint shape (see tokens_table)."""
-    import pyarrow as pa
-
+    from .arrow_stage import arrow_stage
     from .skew import rebalance_small_scan
 
-    src = rebalance_small_scan(df.select("doc_id", "text", "source"))
-    fields = [(f.name, f.dataType.simpleString()) for f in src.schema
-              if f.name != "text"]
-    out_schema = ", ".join([f"{n} {t}" for n, t in fields]
-                           + ["tokens array<int>"])
-
-    def tok(batches):
+    def tok(batch):
         from .fast_hash import tokenize_arrow_batch
-        for batch in batches:
-            cols, names = [], []
-            for i, name in enumerate(batch.schema.names):
-                if name != "text":
-                    cols.append(batch.column(i))
-                    names.append(name)
-            cols.append(tokenize_arrow_batch(batch.column("text")))
-            names.append("tokens")
-            yield pa.RecordBatch.from_arrays(cols, names)
+        return None, {"tokens": tokenize_arrow_batch(batch.column("text"))}
 
-    mapped = src.mapInArrow(tok, out_schema)
+    src = rebalance_small_scan(df.select("doc_id", "text", "source"))
+    mapped = arrow_stage(src, "tokens array<int>", tok,
+                         carry=("doc_id", "source"))
     return (
         mapped.select(
             F.col("doc_id").cast("string").alias("doc_id"),

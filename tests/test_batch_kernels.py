@@ -85,6 +85,17 @@ def test_nondefault_config_parity():
         assert np.allclose(gp, wp, rtol=1e-9), i
 
 
+def _peaks_batch(prof, cfg) -> list[list]:
+    """Per-row list view of batch_kernels._peaks_core."""
+    from photohive_spark.batch_kernels import _peaks_core
+
+    rows_idx, ang_flat, mag_flat = _peaks_core(prof, cfg)
+    out: list[list] = [[] for _ in range(prof.shape[0])]
+    for i in range(rows_idx.size):
+        out[rows_idx[i]].append((int(ang_flat[i]), float(mag_flat[i])))
+    return out
+
+
 def test_peaks_batch_parity_randomized():
     """_peaks_batch == K.spectral_peaks row-for-row across input families,
     including tie-heavy constant-region profiles where peak selection is
@@ -92,7 +103,6 @@ def test_peaks_batch_parity_randomized():
     np.convolve's oldest-first accumulation for exactly this reason)."""
     import numpy as np
     from photohive_spark import kernels as K
-    from photohive_spark.batch_kernels import _peaks_batch
     from photohive_spark.config import DEFAULT_CONFIG as CFG
 
     rng = np.random.default_rng(7)

@@ -61,9 +61,11 @@ def test_no_row_python_in_plan(spark, sf_dir):
 
 
 def test_arrow_is_the_only_python_boundary(spark, sf_dir, tmp_path):
-    """The streaming feature stage and every media operator cross into
-    Python through mapInArrow — no mapInPandas twin in any plan."""
-    from photohive_spark import multimodal, png, streaming
+    """The streaming feature stage, every media operator and every
+    per-batch text, dedup and vector stage cross into Python through
+    mapInArrow — no mapInPandas twin in any plan."""
+    from photohive_spark import (dedup, multimodal, png, similarity,
+                                 streaming, text, tokenize)
 
     src = str(tmp_path / "tokens")
     tokens_table(spark, sf_dir).limit(8).write.parquet(src)
@@ -83,6 +85,32 @@ def test_arrow_is_the_only_python_boundary(spark, sf_dir, tmp_path):
         df.collect()
         plans[op.__name__] = \
             df._jdf.queryExecution().executedPlan().toString()
+
+    docs = spark.createDataFrame(
+        [(1, "the cat sat on the cat mat", "web"), (2, "a", "web")],
+        "doc_id long, text string, source string")
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.5, 2.0]) for i in range(4)],
+        "vec_id long, embedding array<double>")
+    cb = np.arange(8, dtype=np.float64).reshape(2, 2, 2)
+    codes = similarity.pq_encode(emb, cb)
+    stages = {
+        "rp_project": similarity.rp_project(
+            emb, similarity.rp_matrix_formula(2, 4)),
+        "pq_encode": codes,
+        "pq_topk": similarity.pq_topk(codes, cb, [1.0, 0.0, 0.0, 0.0], k=2),
+        "ivf_assign": similarity.ivf_assign(
+            emb, similarity.unit_hyperplanes(4, 2), assign_fn="pandas"),
+        "pca_partials_df": similarity.pca_partials_df(emb),
+        "word_shingles": dedup.word_shingles(docs),
+        "minhash_signatures": dedup.minhash_signatures(docs),
+        "simhash": dedup.simhash(docs),
+        "repetition_stats": text.repetition_stats(docs),
+        "tokens_from_documents": tokenize.tokens_from_documents(docs),
+    }
+    for name, df in stages.items():
+        df.collect()
+        plans[name] = df._jdf.queryExecution().executedPlan().toString()
     for name, plan in plans.items():
         assert "MapInArrow" in plan, name
         assert "MapInPandas" not in plan, name
