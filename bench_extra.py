@@ -11,12 +11,15 @@ Usage:
   python bench_extra.py plans [before|after]  # dump explain() per query
   python bench_extra.py one <query> [n]     # single query, n timed passes
   python bench_extra.py pytask [passes]     # fixed cost of a Python task
+  python bench_extra.py codegen [passes]    # generated-code cost per pass
+  python bench_extra.py codegen --suite     # same, queries() run twice
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -204,6 +207,88 @@ def run_pytask(passes=7):
     print(json.dumps({"cpus": CPUS, "pytask": out}))
 
 
+def _jvm_counters(spark) -> dict:
+    """Cumulative counters of the session's JVM, which in local mode
+    runs the tasks too: Janino compiles (one per generated class) and their
+    ms, classes loaded, JIT ms, plus the process tree's CPU from /proc.
+    Metaspace is a level, not a count."""
+    jvm = spark._jvm
+    mf = jvm.java.lang.management.ManagementFactory
+    cg = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    meta = next(p for p in mf.getMemoryPoolMXBeans()
+                if p.getName() == "Metaspace")
+    jvm_cpu, py_cpu = _tree_cpu()
+    return {"compiles": metrics.METRIC_COMPILATION_TIME().getCount(),
+            "compile_ms": cg.compileTime() / 1e6,
+            "classes_loaded": mf.getClassLoadingMXBean()
+                                .getTotalLoadedClassCount(),
+            "jit_ms": mf.getCompilationMXBean().getTotalCompilationTime(),
+            "jvm_cpu_s": jvm_cpu, "python_cpu_s": py_cpu,
+            "metaspace_mb": meta.getUsage().getUsed() / 2**20}
+
+
+def _measured(spark, fn) -> dict:
+    """Run ``fn()`` and return the counter deltas and its wall."""
+    c0 = _jvm_counters(spark)
+    t0 = time.perf_counter()
+    fn()
+    wall = time.perf_counter() - t0
+    c1 = _jvm_counters(spark)
+    out = {k: round(c1[k] - c0[k], 2) for k in c1 if k != "metaspace_mb"}
+    return {"wall_s": round(wall, 2), **out,
+            "metaspace_mb": round(c1["metaspace_mb"], 1)}
+
+
+def run_codegen(passes=4, suite=False):
+    """Where the JVM's CPU goes on a repeated workload: per pass, Janino
+    compiles and their ms, classes loaded, JIT ms, JVM and Python-worker
+    CPU and JVM Metaspace. The default runs the benchmark's
+    ``curation`` pass (seed 301, benchmark size) ``passes`` times in one
+    session; ``--suite`` runs every ``__spark_entry__.queries()`` entry
+    at $SPARK_GRAFT_SF_DIR to a noop sink, twice. Once the codegen cache
+    holds the working set, passes after the first compile almost
+    nothing."""
+    from perfbench import inputs
+    from perfbench.run import WORK, session
+    from perfbench.tracing import Tracer
+    from perfbench.workloads import Curation
+    work = os.path.join(WORK, "codegen")
+    shutil.rmtree(work, ignore_errors=True)   # else lineage writes resume
+    spark = session(work)
+    out = []
+    if suite:
+        import __spark_entry__ as E
+        failed = []
+
+        def one_round():
+            for name, q in E.queries().items():
+                try:
+                    _noop(q(spark, SF_DIR))
+                except Exception as e:      # report it, keep measuring
+                    failed.append(f"{name}: {type(e).__name__}")
+        for r in range(2):
+            out.append(_measured(spark, one_round))
+            print(f"round {r + 1}: {out[-1]}", file=sys.stderr)
+        extra = {"sf_dir": SF_DIR, "queries": len(E.queries()),
+                 "failed": failed}
+    else:
+        inp, props, truth = inputs.materialize(WORK, "curation", 301, 1.0)
+        wl = Curation(spark, inp, props, truth, Tracer(enabled=False), work)
+        wl.read()
+        for n in range(passes):
+            # the digest is the benchmark pass's own read-back action
+            out.append(_measured(spark, lambda: wl.run_pass()()))
+            print(f"pass {n + 1}: {out[-1]}", file=sys.stderr)
+        extra = {"workload": "curation", "docs": wl.items()}
+    conf = {k: spark.sparkContext.getConf().get(k, "default") for k in (
+        "spark.sql.codegen.cache.maxEntries",
+        "spark.sql.codegen.useIdInClassName")}
+    spark.stop()
+    print(json.dumps({"cpus": len(os.sched_getaffinity(0)), **extra,
+                      "conf": conf, "passes": out}))
+
+
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "headline"
     if mode == "headline":
@@ -218,5 +303,11 @@ if __name__ == "__main__":
         run_one(sys.argv[2], int(sys.argv[3]) if len(sys.argv) > 3 else 3)
     elif mode == "pytask":
         run_pytask(int(sys.argv[2]) if len(sys.argv) > 2 else 7)
+    elif mode == "codegen":
+        arg = sys.argv[2] if len(sys.argv) > 2 else "4"
+        if arg == "--suite":
+            run_codegen(suite=True)
+        else:
+            run_codegen(int(arg))
     else:
         raise SystemExit(f"unknown mode {mode}")

@@ -26,7 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
-from .config import VOCAB_SIZE
 from .tokenize import TOKEN_MULT, TOKEN_SEED
 
 # MinHash universal-hash constants: h_j(x) = (A[j]*x + B[j]) mod MERSENNE,

@@ -28,7 +28,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
 from . import kernels as K
-from .config import DEFAULT_CONFIG, VOCAB_SIZE, EngineConfig
+from .config import DEFAULT_CONFIG, EngineConfig
 
 # Output schema — analog of Full_Report_Data (src/utilities.h:30-37) with
 # the fixed-width flattening precedent of to_json (reference core.py:388-436):

@@ -241,26 +241,36 @@ def decode_png(data: bytes) -> np.ndarray:
             .sum(axis=2).astype(np.uint8)
         return vals[:, :, None]
 
-    raw = np.frombuffer(zlib.decompress(b"".join(idat)), dtype=np.uint8)
+    # (x0, y0, x step, y step, width, height) of each non-empty pass
+    if interlace == 0:
+        passes = [(0, 0, 1, 1, w, h)]
+    else:
+        passes = [(xs, ys, xst, yst, (w - xs + xst - 1) // xst,
+                   (h - ys + yst - 1) // yst) for xs, ys, xst, yst in _ADAM7]
+        passes = [p for p in passes if p[4] > 0 and p[5] > 0]
+    expected = sum(ph * (sbytes(pw) + 1) for *_, pw, ph in passes)
+    # inflate at most one byte past the size IHDR implies: a legal stream
+    # never gets there, and a few hundred KB of compressed zeros would
+    # otherwise inflate to hundreds of MB before the length check
+    z = zlib.decompressobj()
+    raw = z.decompress(b"".join(idat), expected + 1)
+    if len(raw) > expected:
+        raise ValueError("IDAT inflates past the size IHDR declares")
+    if not z.eof:
+        raise ValueError("truncated IDAT zlib stream")
+    raw = np.frombuffer(raw, dtype=np.uint8)
     if interlace == 0:
         st = sbytes(w)
         px = to_samples(_unfilter(raw, h, w, bypp, stride=st), h, w)
     else:
         px = np.zeros((h, w, nch), dtype=np.uint8)
         pos = 0
-        for xs, ys, xst, yst in _ADAM7:
-            pw = (w - xs + xst - 1) // xst
-            ph = (h - ys + yst - 1) // yst
-            if pw <= 0 or ph <= 0:            # pass empty for small dims
-                continue
+        for xs, ys, xst, yst, pw, ph in passes:
             st = sbytes(pw)
             need = ph * (st + 1)
             sub = _unfilter(raw[pos:pos + need], ph, pw, bypp, stride=st)
             px[ys::yst, xs::xst] = to_samples(sub, ph, pw)
             pos += need
-        if pos != len(raw):
-            raise ValueError(
-                "IDAT length does not match Adam7 pass layout")
     if depth < 8 and ctype == 0:
         # expand to full 8-bit range: 255/(2^d - 1) is integral for 1/2/4
         px = (px * (255 // ((1 << depth) - 1))).astype(np.uint8)

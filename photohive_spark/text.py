@@ -1,7 +1,9 @@
 """Text analysis operators for training-data pipelines: language-ID
 (stopword heuristic), quality scoring, token counting, document
-fingerprinting. All pure Catalyst expressions (regexp/string built-ins) —
-SQL-expressible for the DuckDB oracle, whole-stage-codegen'd at scale.
+fingerprinting. Catalyst expressions (regexp/string built-ins) —
+SQL-expressible for the DuckDB oracle, whole-stage-codegen'd at scale —
+except ``repetition_stats``, whose default computes its per-doc counts in
+one shuffle-free Arrow stage.
 """
 
 from __future__ import annotations

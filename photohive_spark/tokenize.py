@@ -8,9 +8,10 @@ The token function is a polynomial rolling hash over character codes —
 ``acc0=7; acc=(acc*31 + ascii(c)) % VOCAB_SIZE`` — chosen because it is
 expressible with *built-in higher-order functions* in BOTH Spark SQL and
 DuckDB (the correctness oracle), and in numpy for kernel-side goldens.
-Everything stays JVM-side / whole-stage-codegen'd: no Python UDF touches
-the tokenize path, so at 100 TB this is a pure scan+project stage with
-column pruning and predicate pushdown intact.
+The engine runs the numpy form (``fast_hash``) in one shuffle-free Arrow
+stage (``tokens_from_documents``); the scan in front of it still prunes to
+(doc_id, text, source) with predicate pushdown intact, and everything
+around the hash (casts, ``event_ts``, ``n_tok``) stays Catalyst.
 
 Reference analog: the ingest normalization boundary
 (``utils.py:30-46`` pil->numpy/255; ``src/image_processing.c:122-173``

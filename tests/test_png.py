@@ -242,6 +242,52 @@ def test_wavefront_long_run_exact_and_linear_memory(shape, filter_type):
     assert peak < 32 * img.nbytes, (peak, img.nbytes)
 
 
+def _png_with_idat(w, h, interlace, idat):
+    """An RGB PNG whose IHDR declares w x h and whose IDAT is ``idat``."""
+    def chunk(typ, body):
+        return (struct.pack(">I", len(body)) + typ + body
+                + struct.pack(">I", zlib.crc32(typ + body) & 0xFFFFFFFF))
+
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, interlace)
+    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+            + chunk(b"IDAT", idat) + chunk(b"IEND", b""))
+
+
+@pytest.mark.parametrize("interlace", [0, 1])
+def test_inflate_stops_at_the_size_ihdr_declares(interlace):
+    """A 204 KB payload that declares 350x350 RGB (368 KB of scanlines)
+    but whose IDAT inflates to 200 MB of zeros raises after inflating at
+    most one byte past the declared size. An uncapped inflate peaked at
+    437 MB under tracemalloc before the length check raised."""
+    import tracemalloc
+
+    c = zlib.compressobj(9)
+    zeros = bytes(1 << 20)
+    idat = b"".join(c.compress(zeros) for _ in range(200)) + c.flush()
+    data = _png_with_idat(350, 350, interlace, idat)
+    assert len(data) < 256 << 10
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="past the size IHDR declares"):
+            png.decode_png(data)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 4 << 20, peak
+
+
+@pytest.mark.parametrize("interlace", [0, 1])
+def test_truncated_or_short_idat_raises(interlace):
+    stride = 11 * 3 + 1                      # filter byte + one RGB row
+    full = zlib.compress(b"\x00" * (9 * stride))
+    with pytest.raises(ValueError, match="truncated"):
+        png.decode_png(_png_with_idat(11, 9, interlace, full[:-6]))
+    # a complete stream that inflates short of the declared size
+    with pytest.raises(ValueError, match="does not match"):
+        png.decode_png(_png_with_idat(
+            11, 9, interlace, zlib.compress(b"\x00" * (8 * stride))))
+
+
 def test_decode_rgb_contract():
     """decode_rgb matches the reference pil_image_to_image_rgb contract:
     planar float [0,1], gray expands to equal planes, alpha dropped."""
