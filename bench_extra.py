@@ -13,6 +13,7 @@ Usage:
   python bench_extra.py pytask [passes]     # fixed cost of a Python task
   python bench_extra.py codegen [passes]    # generated-code cost per pass
   python bench_extra.py codegen --suite     # same, queries() run twice
+  python bench_extra.py jobs [passes]       # Spark jobs per curation phase
 """
 
 from __future__ import annotations
@@ -289,6 +290,73 @@ def run_codegen(passes=4, suite=False):
                       "conf": conf, "passes": out}))
 
 
+def _group_counts(sc, group: str) -> dict:
+    """Jobs, stages that ran a task and tasks run under job group
+    ``group``, from the status tracker (skipped stages count 0)."""
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    stages = tasks = 0
+    for j in jobs:
+        for sid in st.getJobInfo(j).stageIds:
+            info = st.getStageInfo(sid)
+            if info is not None and info.numCompletedTasks:
+                stages += 1
+                tasks += info.numCompletedTasks
+    return {"jobs": len(jobs), "stages": stages, "tasks": tasks}
+
+
+def run_jobs(passes=3):
+    """Where a ``curation`` pass's Spark jobs go: the benchmark's pass
+    (seed 301, benchmark size) split into its phases — the countmin
+    collect, the ``minhash_lsh_pairs`` call, connected components (the
+    call also runs the LSH verify its rounds read) and the lineage write.
+    Per phase: Spark jobs, stages and tasks (status tracker, by job
+    group), wall, and JVM and Python-worker CPU from /proc. Pass 1 is
+    cold; later passes show the steady state."""
+    from photohive_spark import lineage
+    from perfbench import inputs
+    from perfbench.run import WORK, session
+    from perfbench.tracing import Tracer
+    from perfbench.workloads import Curation
+    work = os.path.join(WORK, "jobs")
+    shutil.rmtree(work, ignore_errors=True)   # else lineage writes resume
+    spark = session(work)
+    sc = spark.sparkContext
+    inp, props, truth = inputs.materialize(WORK, "curation", 301, 1.0)
+    wl = Curation(spark, inp, props, truth, Tracer(enabled=False), work)
+    wl.read()
+    out = []
+    for n in range(1, passes + 1):
+        s = wl.stages()
+        phases = {
+            "countmin_collect": lambda: s.countmin.collect(),
+            "minhash_lsh_pairs": lambda: s.lsh,
+            "connected_components": lambda: s.kept,
+            "lineage_write": lambda: lineage.run_resumable(
+                spark, s.kept, os.path.join(work, "lineage", f"pass-{n}"))}
+        row = {}
+        for name, fn in phases.items():
+            group = f"pass{n}:{name}"
+            sc.setJobGroup(group, group)
+            j0, p0 = _tree_cpu()
+            t0 = time.perf_counter()
+            fn()
+            wall = time.perf_counter() - t0
+            j1, p1 = _tree_cpu()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            row[name] = {**_group_counts(sc, group), "wall_s": round(wall, 3),
+                         "jvm_cpu_s": round(j1 - j0, 2),
+                         "python_cpu_s": round(p1 - p0, 2)}
+        row["total"] = {k: round(sum(r[k] for r in row.values()), 3)
+                        for k in next(iter(row.values()))}
+        out.append(row)
+        print(f"pass {n}: {json.dumps(row)}", file=sys.stderr)
+    spark.stop()
+    print(json.dumps({"cpus": len(os.sched_getaffinity(0)),
+                      "workload": "curation", "docs": wl.items(),
+                      "passes": out}))
+
+
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "headline"
     if mode == "headline":
@@ -309,5 +377,7 @@ if __name__ == "__main__":
             run_codegen(suite=True)
         else:
             run_codegen(int(arg))
+    elif mode == "jobs":
+        run_jobs(int(sys.argv[2]) if len(sys.argv) > 2 else 3)
     else:
         raise SystemExit(f"unknown mode {mode}")

@@ -51,11 +51,10 @@ def main() -> None:
                     help="codebook entries per subspace (<= 256)")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from photohive_spark import similarity
+    from photohive_spark.session import job_spark
 
-    spark = SparkSession.builder.appName("photohive-ann-index").getOrCreate()
+    spark = job_spark("photohive-ann-index")
     t0 = time.time()
     emb = spark.read.parquet(args.embeddings)
     # infer (and validate) the embedding dimension from one row: hyperplanes

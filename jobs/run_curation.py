@@ -96,11 +96,11 @@ def main() -> None:
     args = ap.parse_args()
 
     import pyspark.sql.functions as F
-    from pyspark.sql import SparkSession
 
     from photohive_spark import dedup, lineage, pit, sampling, text
+    from photohive_spark.session import job_spark
 
-    spark = SparkSession.builder.appName("photohive-curation").getOrCreate()
+    spark = job_spark("photohive-curation")
     t0 = time.time()
     docs = spark.read.parquet(args.docs) \
         .withColumn("doc_id", F.col("doc_id").cast("string"))

@@ -17,8 +17,9 @@ Usage:
       [--threshold 0.9] [--hash fast] [--k 3] [--max-bucket-size 1024] \\
       [--cc-method star] [--n-buckets 64]
 
-``--hash fast`` (default) is the codegen xxhash64 path for 10^12-doc
-corpora; ``poly`` is the DuckDB-oracle-parity hash. Verified pairs are
+``--hash fast`` (default) hashes words with xxhash64 for 10^12-doc
+corpora; ``poly`` is the DuckDB-oracle-parity hash. Either way the
+MinHash signatures are one shuffle-free Arrow stage. Verified pairs are
 exact either way (the string-Jaccard verify stage is shared). Prints one
 JSON line with run totals.
 """
@@ -50,11 +51,11 @@ def main() -> None:
     args = ap.parse_args()
 
     import pyspark.sql.functions as F
-    from pyspark.sql import SparkSession
 
     from photohive_spark import dedup, lineage
+    from photohive_spark.session import job_spark
 
-    spark = SparkSession.builder.appName("photohive-dedup").getOrCreate()
+    spark = job_spark("photohive-dedup")
     t0 = time.time()
     docs = spark.read.parquet(args.docs) \
         .withColumn("doc_id", F.col("doc_id").cast("string"))

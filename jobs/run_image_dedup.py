@@ -63,12 +63,11 @@ def main() -> None:
     args = ap.parse_args()
 
     import pyspark.sql.functions as F
-    from pyspark.sql import SparkSession
 
     from photohive_spark import dedup, lineage, multimodal
+    from photohive_spark.session import job_spark
 
-    spark = SparkSession.builder.appName("photohive-image-dedup") \
-        .getOrCreate()
+    spark = job_spark("photohive-image-dedup")
     t0 = time.time()
     media = spark.read.parquet(args.media) \
         .withColumn("media_id", F.col("media_id").cast("string"))

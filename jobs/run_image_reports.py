@@ -41,11 +41,11 @@ def main() -> None:
     import os
 
     import pyspark.sql.functions as F
-    from pyspark.sql import SparkSession
 
     from photohive_spark import lineage, multimodal
+    from photohive_spark.session import job_spark
 
-    spark = SparkSession.builder.appName("photohive-images").getOrCreate()
+    spark = job_spark("photohive-images")
     t0 = time.time()
 
     # pin --mode for the lifetime of the output dir: resuming a fake-mode

@@ -37,15 +37,14 @@ def main() -> None:
                     help="cost-aware repartition for long-tail n_tok skew")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from photohive_spark import lineage
     from photohive_spark.engine import (extract_features_df,
                                         kernel_stage_accumulators)
+    from photohive_spark.session import job_spark
     from photohive_spark.skew import rebalance_by_cost
     from photohive_spark.tokenize import validate_tokens
 
-    spark = SparkSession.builder.appName("photohive-extract").getOrCreate()
+    spark = job_spark("photohive-extract")
     t0 = time.time()
     toks = spark.read.parquet(args.tokens)
     toks = validate_tokens(toks, args.min_tok, args.max_tok)

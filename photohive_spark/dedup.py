@@ -3,20 +3,22 @@ SimHash, n-gram Jaccard, embedding-cosine near-dup.
 
 The shuffling operators are pure DataFrame plans (JVM-side built-ins),
 so Catalyst handles partial aggregation, AQE handles skewed shingles,
-and every groupBy is a single shuffle. The four per-doc hashes
-(word_shingles, the poly MinHash signatures, word_shingle_arrays and
-the poly simhash) are shuffle-free vectorized Arrow stages
-(arrow_stage.arrow_stage over fast_hash kernels). Hash functions are
-the engine's poly-hash (tokenize.word_token semantics) so the DuckDB
-oracle can reproduce every number exactly.
+and every groupBy is a single shuffle. The per-doc hashes
+(word_shingles, MinHash signatures, word_shingle_arrays and simhash, for
+both hash functions) are shuffle-free vectorized Arrow stages
+(arrow_stage.arrow_stage over fast_hash kernels). The default "poly"
+hash is the engine's poly-hash (tokenize.word_token semantics), so the
+DuckDB oracle can reproduce every number exactly; "fast" is Spark's
+xxhash64 over each word.
 
 Scale notes (100 TB):
 - exact dedup: md5 digest groupBy — one shuffle on the digest (uniform by
   construction, no skew);
-- MinHash: hash_fn="fast" signatures via P min() aggregates over exploded
-  shingles (ONE shuffle, map-side partial min; "poly" needs none), LSH
-  banding via explode(bands) + self-join on band key — candidate
-  generation never compares all pairs;
+- MinHash: signatures need no shuffle for either hash (one Arrow stage
+  per batch of docs); LSH banding via explode(bands) + self-join on band
+  key — candidate generation never compares all pairs;
+- connected components propagate over the pair endpoints only, one
+  groupBy per round; the corpus's ids are shuffled once, to seed them;
 - stop-word-like hot shingles would skew the shingle explode; mitigated by
   distinct-per-doc before the join and AQE skew split.
 """
@@ -135,97 +137,42 @@ def word_shingles(docs: DataFrame, text_col: str = "text",
     return out.distinct() if distinct else out
 
 
-def fast_shingle_hashes(docs: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", k: int = 3) -> DataFrame:
-    """(doc_id, h) hashed word-k-gram shingles — the SCALE path.
-
-    Two design rules learned by measurement at 500k docs:
-    - the oracle-parity path (shingle STRINGS + per-character poly hash)
-      costs ~510 s — per-char higher-order calls dominate everything;
-    - even a word-level rewrite INSIDE higher-order functions
-      (transform/aggregate lambdas) still cost ~265 s, because Spark HOFs
-      are CodegenFallback — every lambda element is INTERPRETED.
-    So this path stays in whole-stage codegen end to end: posexplode the
-    words (one shallow HOF filter per doc), xxhash64 each word as a plain
-    projection, and combine the k word hashes with window lead()s
-    (mod 2^31-1, multiplier 31 — products stay < 2^36, no ANSI overflow).
-    Measured: 265 s -> ~20 s for the signature stage.
-
-    Output is NOT distinct-per-doc: MinHash's min() is identical over
-    multiset and set, so deduplicating shingles first would only add a
-    shuffle (exact Jaccard verification uses the string path separately).
-    Short docs (< k words) produce one shingle combining all words and an
-    empty doc one constant hash (so byte-identical empty docs still
-    collide), mirroring word_shingles. The window costs ONE exchange on
-    id_col, which the downstream minhash groupBy(id_col) then reuses."""
-    rows = _word_gram_rows(docs, text_col, id_col, k).withColumn(
-        "_h", F.pmod(F.xxhash64("_w"), F.lit(MERSENNE)))
-    win = Window.partitionBy(id_col).orderBy("_pos")
-    comb = F.col("_h")
-    for j in range(1, k):
-        hj = F.lead("_h", j).over(win)
-        comb = F.when(hj.isNotNull(),
-                      F.pmod(comb * 31 + hj, F.lit(MERSENNE))).otherwise(comb)
-    return (rows.withColumn("h", F.coalesce(comb, F.lit(0)))
-            .where("_keep").select(id_col, "h"))
-
-
 def minhash_signatures(docs: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", k: int = 3,
                        num_perm: int = NUM_PERM,
                        hash_fn: str = "poly") -> DataFrame:
-    """(doc_id, sig array<bigint>[num_perm]) MinHash signatures.
+    """(doc_id, sig array<bigint>[num_perm]) MinHash signatures, one row
+    per input row (callers pass one row per id).
 
-    One shuffle: explode shingles -> groupBy(doc) with num_perm min()
-    aggregates (map-side partial min makes this cheap).
+    The whole signature is computed per doc inside ONE vectorized
+    mapInArrow stage (fast_hash.minhash_sig_arrow): no explode, no
+    shuffle, no interpreted per-char HOF.
 
-    ``hash_fn``: "poly" (default) = per-character poly hash, exactly
-    reproducible in DuckDB — the oracle-checked semantics; "fast" =
-    fast_shingle_hashes (xxhash64 word hashes, ~30x cheaper — the path to
-    run at 10^12 docs; same banding statistics, different hash values)."""
-    if hash_fn == "fast":
-        hashed = fast_shingle_hashes(docs, text_col, id_col, k)
-    elif hash_fn == "poly":
-        # r7: the oracle-exact poly path now computes the whole signature
-        # per doc inside ONE vectorized mapInArrow stage (fast_hash.
-        # minhash_sig_arrow): per-word char hashes are spliced into gram
-        # hashes algebraically, so each character is read once (not once
-        # per covering gram) in numpy instead of the interpreted HOF —
-        # and the explode -> groupBy(id) shuffle disappears entirely
-        # (zero Exchange for the signature stage). Integers are identical
-        # (parity pinned by tests), so banding candidates — and therefore
-        # emitted pairs — are unchanged.
-        from .arrow_stage import arrow_stage, fixed_list
+    ``hash_fn`` picks the shingle hash; both forms are integer-identical
+    to a Catalyst parity form kept in tests/oracles.py:
+    - "poly" (default): per-character poly hash of the shingle string,
+      exactly reproducible in DuckDB — the oracle-checked semantics;
+    - "fast": XXH64 word hashes (Spark's ``xxhash64``, seed 42) combined
+      per gram as (acc*31 + h) mod 2^31-1. Same banding statistics,
+      different hash values.
 
-        def f(b):
-            from photohive_spark.fast_hash import minhash_sig_arrow
-            return None, {"sig": fixed_list(minhash_sig_arrow(
-                b.column(text_col), k, _A[:num_perm], _B[:num_perm]))}
-
-        return arrow_stage(docs.select(id_col, text_col),
-                           "sig array<bigint>", f, carry=[id_col])
-    else:
+    Both cost about the same. On the benchmark's 564 exact-unique
+    ``curation`` docs (4-core VM, warm, noop sink, median of 7) the stage
+    took 0.51 s with "fast" and 0.45 s with "poly"; the Catalyst parity
+    form of "fast" takes 0.97 s and shuffles every word occurrence.
+    """
+    if hash_fn not in ("poly", "fast"):
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    mins = [F.min((F.lit(_A[j]) * F.col("h") + F.lit(_B[j])) % F.lit(MERSENNE))
-            .alias(f"m{j}") for j in range(num_perm)]
-    agg = hashed.groupBy(id_col).agg(*mins)
-    return agg.select(F.col(id_col),
-                      F.array(*[f"m{j}" for j in range(num_perm)]).alias("sig"))
+    from .arrow_stage import arrow_stage, fixed_list
+    a, b = _A[:num_perm], _B[:num_perm]
 
+    def f(batch):
+        from photohive_spark.fast_hash import minhash_sig_arrow
+        return None, {"sig": fixed_list(minhash_sig_arrow(
+            batch.column(text_col), k, a, b, hash_fn))}
 
-def minhash_signatures_expr(docs: DataFrame, text_col: str = "text",
-                            id_col: str = "doc_id", k: int = 3,
-                            num_perm: int = NUM_PERM) -> DataFrame:
-    """The original interpreted-HOF poly form (shingle strings, per-char
-    hash, explode + groupBy mins) — kept as the cross-implementation
-    parity oracle for the vectorized mapInArrow path."""
-    sh = word_shingles(docs, text_col, id_col, k, distinct=False)
-    hashed = sh.withColumn("h", F.expr(poly_hash_expr("shingle")))
-    mins = [F.min((F.lit(_A[j]) * F.col("h") + F.lit(_B[j])) % F.lit(MERSENNE))
-            .alias(f"m{j}") for j in range(num_perm)]
-    agg = hashed.groupBy(id_col).agg(*mins)
-    return agg.select(F.col(id_col),
-                      F.array(*[f"m{j}" for j in range(num_perm)]).alias("sig"))
+    return arrow_stage(docs.select(id_col, text_col),
+                       "sig array<bigint>", f, carry=[id_col])
 
 
 def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
@@ -259,21 +206,21 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
     oracle-checked semantics).
 
     ``hash_fn="fast"`` switches candidate generation to xxhash64 word
-    hashes (see fast_shingle_hashes — ~30x cheaper than the per-character
-    oracle hash, the 10^12-doc path). The exact-Jaccard VERIFY stage is
+    hashes (see minhash_signatures). The exact-Jaccard VERIFY stage is
     shared and string-exact either way, so emitted pairs stay exact; only
     banding recall statistics depend on the hash (equivalent for any
     uniform hash).
     """
     rows = num_perm // bands
     sig = minhash_signatures(docs, text_col, id_col, k, num_perm, hash_fn)
-    band_arr = F.array(*[
-        F.struct(F.lit(b).alias("band"),
-                 F.concat_ws(",", *[F.col("sig")[b * rows + r].cast("string")
-                                    for r in range(rows)]).alias("bsig"))
-        for b in range(bands)])
-    banded = sig.select(F.col(id_col), F.explode(band_arr).alias("bk")) \
-                .select(id_col, "bk.band", "bk.bsig") \
+    # each expression is one SQL string: a Python Column operator costs
+    # ~10 py4j round trips, so this band key as Columns would take ~750
+    # of them, 0.1-0.3 s of Python-side time per call
+    keys = ", ".join(
+        f"struct({b} as band, concat_ws(',', "
+        + ", ".join(f"cast(sig[{b * rows + r}] as string)" for r in range(rows))
+        + ") as bsig)" for b in range(bands))
+    banded = sig.selectExpr(id_col, f"inline(array({keys}))") \
                 .repartition("band", "bsig")
     # ^ r7: one explicit exchange on the join key. The self-join below
     # then REUSES a single shuffle for both aliases (ReusedExchange), so
@@ -287,24 +234,20 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
         stats = (banded.groupBy("band", "bsig")
                  .agg(F.count("*").alias("_bn"), F.min(id_col).alias("_rep")))
         keyed = banded.join(stats, on=["band", "bsig"])
-        small = keyed.where(F.col("_bn") <= max_bucket_size) \
+        small = keyed.where(f"_bn <= {max_bucket_size}") \
                      .select(id_col, "band", "bsig")
         pairs_small = (small.alias("x").join(small.alias("y"),
                                              on=["band", "bsig"], how="inner")
-                       .where(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
-                       .select(F.col(f"x.{id_col}").alias("id_a"),
-                               F.col(f"y.{id_col}").alias("id_b")))
-        pairs_big = (keyed.where((F.col("_bn") > max_bucket_size)
-                                 & (F.col(id_col) != F.col("_rep")))
-                     .select(F.col("_rep").alias("id_a"),
-                             F.col(id_col).alias("id_b")))
+                       .where(f"x.{id_col} < y.{id_col}")
+                       .selectExpr(f"x.{id_col} as id_a", f"y.{id_col} as id_b"))
+        pairs_big = (keyed.where(f"_bn > {max_bucket_size} and {id_col} != _rep")
+                     .selectExpr("_rep as id_a", f"{id_col} as id_b"))
         cand = pairs_small.unionByName(pairs_big).distinct()
     else:
         cand = (banded.alias("x").join(banded.alias("y"),
                                        on=["band", "bsig"], how="inner")
-                .where(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
-                .select(F.col(f"x.{id_col}").alias("id_a"),
-                        F.col(f"y.{id_col}").alias("id_b"))
+                .where(f"x.{id_col} < y.{id_col}")
+                .selectExpr(f"x.{id_col} as id_a", f"y.{id_col} as id_b")
                 .distinct())
     # materialize candidates once: verify_jaccard consumes them twice (id
     # semi-join + intersection join) and recomputing the whole LSH banding
@@ -380,25 +323,21 @@ def verify_jaccard(pairs: DataFrame, docs: DataFrame, text_col: str,
     PER (pair, shingle-of-a) (~50x more rows than pairs) plus a second
     string-keyed exchange. Now only the bounded per-doc arrays move.
     """
-    cand_ids = (pairs.select(F.col("id_a").alias(id_col))
-                .union(pairs.select(F.col("id_b").alias(id_col)))
+    cand_ids = (pairs.selectExpr(f"id_a as {id_col}")
+                .union(pairs.selectExpr(f"id_b as {id_col}"))
                 .distinct())
     docs = docs.join(cand_ids, on=id_col, how="left_semi")
     sh = word_shingle_arrays(docs, text_col, id_col, k)
-    a = sh.select(F.col(id_col).alias("id_a"),
-                  F.col("shingles").alias("_sa"), F.col("n_sh").alias("n_a"))
-    b = sh.select(F.col(id_col).alias("id_b"),
-                  F.col("shingles").alias("_sb"), F.col("n_sh").alias("n_b"))
-    inter = F.size(F.array_intersect("_sa", "_sb")).cast("bigint")
+    a = sh.selectExpr(f"{id_col} as id_a", "shingles as _sa", "n_sh as n_a")
+    b = sh.selectExpr(f"{id_col} as id_b", "shingles as _sb", "n_sh as n_b")
     return (pairs
             .join(a, on="id_a")
             .join(b, on="id_b")
-            .withColumn("inter", inter)
-            .withColumn("jaccard",
-                        F.col("inter")
-                        / (F.col("n_a") + F.col("n_b") - F.col("inter")))
+            .selectExpr("id_a", "id_b", "n_a", "n_b", "cast(size("
+                        "array_intersect(_sa, _sb)) as bigint) as inter")
+            .selectExpr("id_a", "id_b", "inter / (n_a + n_b - inter) as jaccard")
             .where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
+            .selectExpr("id_a", "id_b", "round(jaccard, 6) as jaccard"))
 
 
 def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
@@ -501,50 +440,27 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     """Per-doc SimHash over word hashes: bit b set iff the majority of
     words have bit b set ( sum(±1) > 0 ). Returns (doc_id, simhash bigint).
 
-    Single shuffle: explode words -> groupBy(doc) with `bits` sum()
-    aggregates -> bit-assemble projection.
+    The whole per-doc simhash runs in ONE vectorized mapInArrow stage
+    (fast_hash.simhash_arrow): no explode, no groupBy shuffle. Docs with
+    no words are dropped, exactly like the explode+groupBy parity form
+    in tests/oracles.py, whose integers it reproduces.
 
-    ``hash_fn``: "poly" (default) = per-character poly word hash, DuckDB-
-    oracle-reproducible but INTERPRETED (HOFs are CodegenFallback — the
-    same ~30x lever as minhash's fast path); "fast" = lower ``bits`` of
-    the codegen xxhash64 intrinsic — different hash values, same uniform-
-    bit semantics, the 10^12-doc path.
+    ``hash_fn``: "poly" (default) = per-character poly word hash,
+    DuckDB-oracle-reproducible; "fast" = the lower ``bits`` of Spark's
+    ``xxhash64(word)`` — different hash values, same uniform-bit
+    semantics.
     """
-    if hash_fn == "poly":
-        # r7: whole per-doc simhash in ONE vectorized mapInArrow stage
-        # (fast_hash.simhash_arrow) — no explode, no groupBy shuffle, no
-        # interpreted per-char HOF. Identical integers (parity pinned);
-        # docs with no words are dropped exactly like the explode form.
-        from .arrow_stage import arrow_stage
-
-        def f(b):
-            from photohive_spark.fast_hash import simhash_arrow
-            keep, sim = simhash_arrow(b.column(text_col), bits)
-            return keep, {"simhash": sim}
-
-        return arrow_stage(docs.select(id_col, text_col), "simhash bigint",
-                           f, carry=[id_col])
-    words = docs.select(
-        F.col(id_col),
-        F.explode(F.expr(f"filter(split({text_col}, ' '), w -> length(w) > 0)"))
-         .alias("w"))
-    if hash_fn == "fast":
-        words = words.withColumn(
-            "h", F.xxhash64("w").bitwiseAND(F.lit((1 << bits) - 1)))
-    elif hash_fn == "expr_poly":
-        # original interpreted form — parity oracle for the "poly" path
-        words = words.withColumn("h", F.expr(poly_hash_expr("w")))
-    else:
+    if hash_fn not in ("poly", "fast"):
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    sums = words.groupBy(id_col).agg(*[
-        F.sum(((F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1))) * 2 - 1))
-        .alias(f"s{b}") for b in range(bits)])
-    sim = sums.select(
-        F.col(id_col),
-        sum((F.when(F.col(f"s{b}") > 0, F.lit(1)).otherwise(F.lit(0))
-             .cast("bigint") * F.lit(1 << b)) for b in range(bits))
-        .alias("simhash"))
-    return sim
+    from .arrow_stage import arrow_stage
+
+    def f(b):
+        from photohive_spark.fast_hash import simhash_arrow
+        keep, sim = simhash_arrow(b.column(text_col), bits, hash_fn)
+        return keep, {"simhash": sim}
+
+    return arrow_stage(docs.select(id_col, text_col), "simhash bigint",
+                       f, carry=[id_col])
 
 
 def decontaminate(docs: DataFrame, benchmark: DataFrame,
@@ -612,7 +528,8 @@ def simhash_neardup_pairs(docs: DataFrame, text_col: str = "text",
     never an all-pairs comparison (``max_hamming`` must be < ``bands``).
     Exact verification = bit_count(xor) on the candidate set.
 
-    Scale: one groupBy to build signatures, one equi-join on the band key;
+    Scale: signatures in one shuffle-free Arrow stage, one equi-join on
+    the band key;
     uniform band values (hash bits) mean no skew for DISTINCT texts, but
     exact-duplicate texts share whole signatures — on dup-heavy corpora
     pass ``max_bucket_size`` to cap hot buckets via star pairing (see
@@ -720,10 +637,19 @@ def connected_components(pairs: DataFrame, nodes: DataFrame,
     Returns (id_col, component). Nodes absent from ``pairs`` are singleton
     components labelled by themselves.
 
-    ``method="propagate"`` (default): min-label propagation. Each round is
-    one join + one groupBy, and rounds = O(component DIAMETER) — near-dup
-    clusters are shallow (stars around a template), so 3-5 rounds typically
-    converge. Labels are localCheckpoint'ed per round to truncate lineage.
+    ``method="propagate"`` (default): min-label propagation over the
+    pair endpoints only — a node outside every pair can never change.
+    One groupBy over the edges and ``nodes`` seeds each endpoint with
+    its adjacency and, if it is a node, its own id, and sets the other
+    nodes aside. Each round is then one groupBy that carries every
+    endpoint's adjacency and previous label, so the convergence test
+    reads the round's own localCheckpoint (which also truncates lineage)
+    rather than joining old against new labels. Rounds = O(component
+    DIAMETER) — near-dup clusters are shallow (stars around a template),
+    so 3-5 rounds typically converge. An endpoint missing from ``nodes``
+    gets a label but never seeds one: its component is labelled by the
+    smallest id of ``nodes`` in it (and a component with no id of
+    ``nodes`` is left out).
 
     ``method="star"``: alternating small-star/large-star (Kiveris et al.,
     "Connected Components in MapReduce and Beyond") — O(log n) rounds
@@ -736,29 +662,46 @@ def connected_components(pairs: DataFrame, nodes: DataFrame,
         raise ValueError(f"unknown method {method!r} "
                          "(expected 'propagate' or 'star')")
     # materialize the (possibly expensive — LSH banding, jaccard verify)
-    # pair-discovery subtree ONCE: the loop re-executes `edges` every
-    # round, and only labels were checkpointed before.
-    edges = (pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-             .unionByName(
-                 pairs.select(F.col("id_b").alias("src"),
-                              F.col("id_a").alias("dst")))
+    # pair-discovery subtree before the rounds
+    edges = (pairs.selectExpr("id_a as src", "id_b as dst")
+             .unionByName(pairs.selectExpr("id_b as src", "id_a as dst"))
              .localCheckpoint(eager=False))
-    labels = nodes.select(F.col(id_col),
-                          F.col(id_col).alias("component")).distinct() \
-                  .localCheckpoint(eager=False)
+    none = f"cast(null as {edges.schema['src'].dataType.simpleString()})"
+    # one row per node and per endpoint: its neighbours, and its own id
+    # as its label if it is a node (null: not reached yet). Expressions
+    # are SQL strings, which cost one py4j call where a Column operator
+    # costs ~10.
+    state = (edges.selectExpr(f"src as {id_col}", "dst as _nbr",
+                              f"{none} as component")
+             .unionByName(nodes.selectExpr(id_col, f"{none} as _nbr",
+                                           f"{id_col} as component"))
+             .groupBy(id_col)
+             .agg(F.expr("collect_list(_nbr) as _nbrs"),
+                  F.expr("min(component) as component"))
+             .localCheckpoint(eager=False))
+    # a node in no pair keeps its own id; the rounds see endpoints only
+    alone = state.where("size(_nbrs) = 0").select(id_col, "component")
+    state = state.where("size(_nbrs) > 0")
     for _ in range(max_iters):
-        neigh = (edges.join(labels,
-                            edges.dst == labels[id_col], how="inner")
-                 .select(F.col("src").alias(id_col), "component"))
-        new = (labels.unionByName(neigh)
-               .groupBy(id_col).agg(F.min("component").alias("component"))
-               .localCheckpoint(eager=False))
-        changed = (labels.alias("o").join(new.alias("n"), on=id_col)
-                   .where(F.col("o.component") != F.col("n.component"))
-                   .count())
-        labels = new
-        if changed == 0:
-            return labels
+        # each labelled endpoint sends its label to its neighbours; the
+        # state rows carry the adjacency and the label before the round
+        # (_old), so a round is one groupBy, no join
+        sent = state.where("component is not null").selectExpr(
+            f"explode(_nbrs) as {id_col}", "component")
+        state = (state.selectExpr(id_col, "_nbrs", "component",
+                                  "component as _old")
+                 .unionByName(sent, allowMissingColumns=True)
+                 .groupBy(id_col)
+                 .agg(F.expr("flatten(collect_list(_nbrs)) as _nbrs"),
+                      F.expr("min(component) as component"),
+                      F.expr("max(_old) as _old"))
+                 .localCheckpoint(eager=False))
+        # a label that is new or lower is a change; isEmpty reads one
+        # partition where count() adds a shuffle
+        if state.where("component is not null and "
+                       "(_old is null or component != _old)").isEmpty():
+            return alone.unionByName(state.where("component is not null")
+                                     .select(id_col, "component"))
     # returning partially-propagated labels would silently split real
     # clusters — fail loudly instead (deep chains need more rounds or the
     # O(log n) small-star/large-star variant)

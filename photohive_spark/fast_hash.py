@@ -1,6 +1,7 @@
-"""Vectorized (numpy) implementations of the engine's polynomial string
-hash — bit-identical to the Catalyst higher-order-function forms, at
-native-code speed.
+"""Vectorized (numpy) string hashes over Arrow string buffers, at
+native-code speed: the engine's polynomial hash, bit-identical to the
+Catalyst higher-order-function forms, and XXH64, bit-identical to
+Spark's ``xxhash64``.
 
 Why this exists (optimization guide §4.2): Spark higher-order functions
 (``transform``/``aggregate`` lambdas) are CodegenFallback — every element
@@ -8,7 +9,8 @@ is INTERPRETED in the JVM. The per-character poly hash
 (``tokenize.SPARK_TOKENS_EXPR`` / ``dedup.poly_hash_expr``) therefore costs
 ~100x more than the same arithmetic on a flat numpy byte buffer. These
 kernels run inside ``mapInArrow`` over the Arrow string buffers directly
-(zero-copy offsets + data), so the whole hot loop is C.
+(zero-copy offsets + data), so the whole hot loop is C, and a per-doc
+result (a MinHash signature, a simhash) needs no explode and no shuffle.
 
 Exactness contract: the recurrence ``acc = (acc*MULT + codepoint) % mod``
 is pure integer arithmetic — the numpy forms below produce the SAME
@@ -16,7 +18,8 @@ integers as the interpreted SQL expressions for any input (pinned by
 tests), so every DuckDB oracle stays hash-identical. Non-ASCII words fall
 back to a per-word Python loop over Unicode codepoints (Spark's ``ascii``
 / ``substr`` operate on characters, not bytes); ASCII words — the common
-case — stay fully vectorized.
+case — stay fully vectorized. XXH64 hashes UTF-8 bytes, as Spark does,
+so it has no such fallback.
 """
 
 from __future__ import annotations
@@ -149,16 +152,98 @@ def tokenize_arrow_batch(texts):
         pa.array(offsets, type=pa.int32()), pa.array(toks))
 
 
-def simhash_arrow(texts, bits: int = 32):
-    """Per-doc SimHash over word poly-hashes for one Arrow batch of texts
-    — identical integers to dedup.simhash's interpreted "poly" form.
+# XXH64 primes (Collet's xxHash spec; Spark's XXH64 uses the same)
+_P1 = np.uint64(0x9E3779B185EBCA87)
+_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
+_P3 = np.uint64(0x165667B19E3779F9)
+_P4 = np.uint64(0x85EBCA77C2B2AE63)
+_P5 = np.uint64(0x27D4EB2F165667C5)
+XXH_SEED = 42                       # F.xxhash64's seed
+
+
+def _rotl(x, r: int):
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _lanes(data, pos, width: int):
+    """Little-endian ``width``-byte unsigned words at byte offsets
+    ``pos`` of ``data``, as uint64."""
+    b = data[pos[:, None] + np.arange(width)]
+    return b.view(f"<u{width}").ravel().astype(np.uint64)
+
+
+def _xxh_round(acc, lane):
+    return _rotl(acc + lane * _P2, 31) * _P1
+
+
+def xxh64_flat(data: np.ndarray, starts: np.ndarray, lens: np.ndarray,
+               seed: int = XXH_SEED) -> np.ndarray:
+    """XXH64 of ``n`` byte strings packed in one uint8 buffer — the same
+    int64 as Spark's ``xxhash64(col)`` of those strings (UTF-8 bytes).
+
+    Each branch of the spec (32-byte stripes, then 8-byte, 4-byte and
+    1-byte tails) runs as a numpy step over the words still active in
+    it, so the loops run max-length times, not once per word."""
+    starts = starts.astype(np.int64)
+    lens = lens.astype(np.int64)
+    sd = np.uint64(seed)
+    with np.errstate(over="ignore"):
+        h = np.full(lens.size, sd + _P5, dtype=np.uint64)
+        big = np.flatnonzero(lens >= 32)
+        if big.size:
+            st, ns = starts[big], lens[big] // 32
+            v = [np.full(big.size, x, dtype=np.uint64)
+                 for x in (sd + _P1 + _P2, sd + _P2, sd, sd - _P1)]
+            for s in range(int(ns.max())):
+                a = ns > s
+                base = st[a] + 32 * s
+                for i in range(4):
+                    v[i][a] = _xxh_round(v[i][a], _lanes(data, base + 8 * i, 8))
+            acc = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+                   + _rotl(v[3], 18))
+            for x in v:
+                acc = (acc ^ _xxh_round(np.uint64(0), x)) * _P1 + _P4
+            h[big] = acc
+        h += lens.astype(np.uint64)
+        off = starts + lens // 32 * 32
+        n8 = (starts + lens - off) // 8
+        for i in range(int(n8.max()) if n8.size else 0):
+            a = n8 > i
+            k1 = _xxh_round(np.uint64(0), _lanes(data, off[a], 8))
+            h[a] = _rotl(h[a] ^ k1, 27) * _P1 + _P4
+            off[a] += 8
+        a = starts + lens - off >= 4
+        if a.any():
+            h[a] = _rotl(h[a] ^ (_lanes(data, off[a], 4) * _P1), 23) * _P2 + _P3
+            off[a] += 4
+        rem = starts + lens - off
+        for i in range(3):
+            a = rem > i
+            c = data[off[a] + i].astype(np.uint64)
+            h[a] = _rotl(h[a] ^ (c * _P5), 11) * _P1
+        h ^= h >> np.uint64(33)
+        h *= _P2
+        h ^= h >> np.uint64(29)
+        h *= _P3
+        h ^= h >> np.uint64(32)
+    return h.view(np.int64)
+
+
+def simhash_arrow(texts, bits: int = 32, hash_fn: str = "poly"):
+    """Per-doc SimHash over word hashes for one Arrow batch of texts —
+    identical integers to the explode+groupBy forms of dedup.simhash:
+    "poly" word hashes mod 2^31-1, or "fast" = the low ``bits`` of
+    Spark's ``xxhash64(word)``.
 
     Returns (keep_mask bool ndarray, simhash int64 ndarray over kept
     docs). Docs with no words (empty/null text) are DROPPED, exactly like
     the explode form (explode of an empty array emits no row).
     """
     data, starts, lens, counts, _null = split_words(texts)
-    h = poly_hash_flat(data, starts, lens, MERSENNE)
+    if hash_fn == "fast":
+        h = xxh64_flat(data, starts, lens) & np.int64((1 << bits) - 1)
+    else:
+        h = poly_hash_flat(data, starts, lens, MERSENNE)
     keep = counts > 0
     if not keep.any():
         return keep, np.zeros(0, dtype=np.int64)
@@ -173,80 +258,91 @@ def simhash_arrow(texts, bits: int = 32):
     return keep, sim
 
 
-def minhash_sig_arrow(texts, k: int, a_consts, b_consts,
-                      mult: int = TOKEN_MULT, seed: int = TOKEN_SEED):
-    """Per-doc MinHash signatures over word k-gram shingles for one Arrow
-    batch of texts — identical integers to the interpreted "poly" form of
-    dedup.minhash_signatures (shingle strings joined by ' ', per-character
-    poly hash mod 2^31-1, then per-permutation min of (A*h+B) mod 2^31-1).
-
-    The shingle hash is NOT recomputed per character: poly(s1+' '+s2) ==
-    ((poly(s1)*31 + ascii(' ')) - seed*L2 + seed*L2 ... algebraically
-    ((t)*L2 + poly7(s2)) % M with t = (acc*31 + 32 - seed) % M, where
-    poly7 is the word hash from ``seed`` and L2 = 31^len(s2) % M — so each
-    word's characters are read ONCE, not once per covering gram.
-
-    Empty docs (no words) emit the single "" shingle (hash == seed),
-    mirroring _word_gram_rows' posexplode_outer; docs with 0 < nw < k
-    emit one all-words gram.
-
-    Returns an (n_docs, num_perm) int64 matrix.
-    """
-    M = MERSENNE
-    space = 32                                  # ascii(' ')
-    data, starts, lens, counts, _null = split_words(texts)
-    h7, L = poly_hash_flat(data, starts, lens, M, want_pow=True)
-    n_docs = counts.size
+def _gram_starts(counts: np.ndarray, k: int):
+    """Word k-gram layout of docs with ``counts`` words packed doc-major:
+    (first word index, words in the gram, grams per doc). Full k-grams
+    start at every loc <= nw-k; a doc with 0 < nw < k has one all-words
+    gram at loc 0; an empty doc has none."""
     nw_rep = np.repeat(counts, counts)
     word_off = np.concatenate([[0], np.cumsum(counts)])
     loc = np.arange(nw_rep.size, dtype=np.int64) - np.repeat(
         word_off[:-1], counts)
-    # gram start flags: full k-grams at loc <= nw-k; short docs (0<nw<k)
-    # one gram at loc 0
     is_start = (loc + k <= nw_rep) | ((loc == 0) & (nw_rep < k))
     g_start = np.flatnonzero(is_start)
     g_len = np.minimum(nw_rep[g_start] - loc[g_start], k)
-    acc = h7[g_start].copy()
-    for j in range(1, k):
-        act = g_len > j
-        idx = g_start[act] + j
-        t = (acc[act] * mult + (space - seed)) % M
-        acc[act] = (t * L[idx] + h7[idx]) % M
-    # per-doc gram counts (>= 1 once empty docs get the "" gram)
     gcnt = np.where(counts >= k, counts - k + 1,
                     np.where(counts > 0, 1, 0)).astype(np.int64)
+    return g_start, g_len, gcnt
+
+
+def _with_empty_grams(counts: np.ndarray, gcnt: np.ndarray):
+    """Give each empty doc one gram: the new grams-per-doc, and the slot
+    of each existing gram (doc-major) in the spliced order."""
+    full_cnt = np.where(counts == 0, 1, gcnt)
+    slots = (np.repeat(np.cumsum(full_cnt) - full_cnt, gcnt)
+             + np.arange(int(gcnt.sum()))
+             - np.repeat(np.cumsum(gcnt) - gcnt, gcnt))
+    return full_cnt, slots
+
+
+def minhash_sig_arrow(texts, k: int, a_consts, b_consts,
+                      hash_fn: str = "poly",
+                      mult: int = TOKEN_MULT, seed: int = TOKEN_SEED):
+    """Per-doc MinHash signatures over word k-gram shingles for one Arrow
+    batch of texts: per permutation j, the min over the doc's gram
+    hashes h of (A[j]*h + B[j]) mod 2^31-1. Returns an (n_docs,
+    num_perm) int64 matrix. Gram hashes by ``hash_fn``:
+
+    - "poly": the per-character poly hash mod 2^31-1 of the gram string
+      (words joined by ' ') — identical integers to the interpreted
+      shingle-string form. It is not recomputed per character:
+      poly(s1+' '+s2) == (t*L2 + poly7(s2)) % M with t = (acc*31 + 32 -
+      seed) % M, where poly7 is the word hash from ``seed`` and L2 =
+      31^len(s2) % M, so each word's characters are read ONCE, not once
+      per covering gram. The empty doc's "" shingle hashes to a Spark
+      quirk, replicated exactly: poly_hash_expr("") evaluates
+      sequence(1, length('')) = sequence(1, 0) = [1, 0] (Spark sequences
+      run BACKWARDS when start > stop) and ascii(substr('', i, 1)) = 0,
+      so it is ((seed*31 + 0)*31 + 0) % M, not seed.
+    - "fast": word hashes pmod(xxhash64(word), M) folded over the gram
+      as acc = (acc*31 + h) % M — identical integers to the Catalyst
+      posexplode + lead() window form. An empty doc's gram is
+      xxhash64(null) = its seed.
+
+    Empty docs (no words) get one gram, mirroring the posexplode_outer
+    of the Catalyst forms; docs with 0 < nw < k one all-words gram.
+    """
+    M = MERSENNE
+    data, starts, lens, counts, _null = split_words(texts)
+    g_start, g_len, gcnt = _gram_starts(counts, k)
+    if hash_fn == "fast":
+        h = xxh64_flat(data, starts, lens) % M
+        acc = h[g_start]
+        for j in range(1, k):
+            act = g_len > j
+            acc[act] = (acc[act] * 31 + h[g_start[act] + j]) % M
+        empty = XXH_SEED % M
+    else:
+        space = 32                              # ascii(' ')
+        h7, L = poly_hash_flat(data, starts, lens, M, want_pow=True)
+        acc = h7[g_start]
+        for j in range(1, k):
+            act = g_len > j
+            idx = g_start[act] + j
+            t = (acc[act] * mult + (space - seed)) % M
+            acc[act] = (t * L[idx] + h7[idx]) % M
+        empty = (seed * mult * mult) % M
     if (counts == 0).any():
-        # splice one seed-hash gram per empty doc, in doc order
-        g_doc = np.repeat(np.arange(n_docs), gcnt)
-        full = np.empty(acc.size + int((counts == 0).sum()), dtype=np.int64)
-        full_doc = np.empty(full.size, dtype=np.int64)
-        pos = 0
-        out_i = 0
-        # vectorized splice: order grams of all docs by doc id with
-        # empties contributing one constant gram
-        gcnt2 = np.where(counts == 0, 1, gcnt)
-        new_off = np.concatenate([[0], np.cumsum(gcnt2)])
-        # Spark quirk, replicated exactly: poly_hash_expr("") evaluates
-        # sequence(1, length('')) = sequence(1, 0) = [1, 0] (Spark
-        # sequences run BACKWARDS when start > stop), and
-        # ascii(substr('', i, 1)) = 0 — so the empty shingle hashes to
-        # ((seed*31 + 0)*31 + 0) % M, not to seed.
-        full[:] = (seed * mult * mult) % M
-        take = np.repeat(new_off[:-1][counts > 0], gcnt[counts > 0]) + (
-            np.arange(acc.size) - np.repeat(
-                np.concatenate([[0], np.cumsum(gcnt[counts > 0])])[:-1],
-                gcnt[counts > 0]))
-        full[take] = acc
+        gcnt, slots = _with_empty_grams(counts, gcnt)
+        full = np.full(int(gcnt.sum()), empty, dtype=np.int64)
+        full[slots] = acc
         acc = full
-        gcnt = gcnt2
-    g_off = np.concatenate([[0], np.cumsum(gcnt)])
-    num_perm = len(a_consts)
-    sig = np.empty((n_docs, num_perm), dtype=np.int64)
+    g_off = np.concatenate([[0], np.cumsum(gcnt)])[:-1]
     A = np.asarray(a_consts, dtype=np.int64)
     B = np.asarray(b_consts, dtype=np.int64)
-    for j in range(num_perm):
-        v = (A[j] * acc + B[j]) % M
-        sig[:, j] = np.minimum.reduceat(v, g_off[:-1])
+    sig = np.empty((counts.size, A.size), dtype=np.int64)
+    for j in range(A.size):
+        sig[:, j] = np.minimum.reduceat((A[j] * acc + B[j]) % M, g_off)
     return sig
 
 
@@ -279,20 +375,11 @@ def shingles_arrow(texts, k: int):
         pa.py_buffer(w_data.tobytes()))
 
     n_docs = counts.size
-    nw_rep = np.repeat(counts, counts)
-    word_off = np.concatenate([[0], np.cumsum(counts)])
-    loc = np.arange(nw_rep.size, dtype=np.int64) - np.repeat(
-        word_off[:-1], counts)
-    is_start = (loc + k <= nw_rep) | ((loc == 0) & (nw_rep < k))
-    g_start = np.flatnonzero(is_start)
-    g_len = np.minimum(nw_rep[g_start] - loc[g_start], k)
-    gcnt = np.where(counts >= k, counts - k + 1,
-                    np.where(counts > 0, 1, 0)).astype(np.int64)
+    g_start, g_len, gcnt = _gram_starts(counts, k)
     g_doc = np.repeat(np.arange(n_docs), gcnt)
 
     if g_start.size:
         # gram -> list<word> -> binary_join(" ")
-        n_g = g_start.size
         tot_w = int(g_len.sum())
         gl_off = np.concatenate([[0], np.cumsum(g_len)]).astype(np.int32)
         widx = np.repeat(g_start, g_len) + (
@@ -307,17 +394,11 @@ def shingles_arrow(texts, k: int):
 
     # splice the "" shingle for empty docs (doc-major order preserved)
     if (counts == 0).any():
-        gcnt2 = np.where(counts == 0, 1, gcnt)
-        g_doc = np.repeat(np.arange(n_docs), gcnt2)
-        new_off = np.concatenate([[0], np.cumsum(gcnt2)])
-        full_idx = np.full(int(gcnt2.sum()), -1, dtype=np.int64)
-        take = np.repeat(new_off[:-1][counts > 0], gcnt[counts > 0]) + (
-            np.arange(g_start.size) - np.repeat(
-                np.concatenate([[0], np.cumsum(gcnt[counts > 0])])[:-1],
-                gcnt[counts > 0]))
-        full_idx[take] = np.arange(g_start.size)
+        gcnt, slots = _with_empty_grams(counts, gcnt)
+        g_doc = np.repeat(np.arange(n_docs), gcnt)
+        full_idx = np.full(int(gcnt.sum()), g_start.size, dtype=np.int64)
+        full_idx[slots] = np.arange(g_start.size)       # others: the "" slot
         grams = pa.concat_arrays([grams, pa.array([""], type=pa.string())])
-        full_idx[full_idx < 0] = g_start.size          # -> the "" slot
         grams = grams.take(pa.array(full_idx))
 
     # exact per-doc distinct: dictionary codes are exact string identity

@@ -1,7 +1,9 @@
-"""SparkSession factory with scale-tuned defaults.
+"""SparkSession factories with scale-tuned defaults.
 
-Single place where the engine's Spark configuration lives, so tests, bench,
-and spark-submit drivers all get the same plan-shaping knobs:
+Single place where the engine's Spark configuration lives
+(``engine_conf``), so tests, bench (``get_spark``, which adds a local
+master) and spark-submit jobs (``job_spark``, where submitted confs win)
+all get the same plan-shaping knobs:
 
 - AQE on (runtime re-plan, skew-join mitigation, partition coalescing) —
   at 100 TB the static plan is always wrong somewhere;
@@ -27,30 +29,24 @@ from pyspark.sql import SparkSession
 from .config import DEFAULT_CONFIG, EngineConfig
 
 
-def get_spark(app: str = "photohive_spark",
-              master: str | None = None,
-              cfg: EngineConfig = DEFAULT_CONFIG,
-              extra: dict[str, str] | None = None) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's standard config."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
-        SparkSession.builder.appName(app)
-        .master(master or f"local[{cpus}]")
+def engine_conf(cfg: EngineConfig = DEFAULT_CONFIG) -> dict[str, str]:
+    """The engine's plan-shaping Spark confs — what every session running
+    this package should get, local harness or cluster."""
+    return {
         # --- adaptive execution: runtime skew handling + shuffle sizing ---
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
         # --- Arrow transport for every Python stage (mapInArrow/pandas) ---
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(cfg.arrow_batch_rows))
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch":
+            str(cfg.arrow_batch_rows),
         # bytes cap slices a batch early when token arrays are wide, so a
         # large row cap (good for length-grouped kernel batching) cannot
         # blow the Python-worker heap on long-doc corpora
-        .config("spark.sql.execution.arrow.maxBytesPerBatch",
-                cfg.arrow_batch_bytes)
+        "spark.sql.execution.arrow.maxBytesPerBatch": cfg.arrow_batch_bytes,
         # --- shuffle sizing; production overrides via --conf ---
-        .config("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
+        "spark.sql.shuffle.partitions": str(cfg.shuffle_partitions),
         # parquet scan split size (r7): parameterised via env. The local
         # default (16m) splits the harness's small multi-row-group
         # fixture tables (e.g. a 128 MB lineitem) across the 32 local
@@ -58,10 +54,10 @@ def get_spark(app: str = "photohive_spark",
         # wants 128m-1g splits (guide §6 — fewer, larger map tasks) and
         # sets SPARK_GRAFT_MAX_PARTITION_BYTES or --conf accordingly.
         # Split granularity is bounded by parquet row groups either way.
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
+        "spark.sql.files.maxPartitionBytes":
+            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
         # --- generated-code cache. The size is a static SQL conf, read
-        # once per JVM, so it is set here before the first query.
+        # once per JVM, so it is set before the first query.
         # Working sets measured against the default of 100 entries: a
         # cold curation pass compiles 132-157 classes, the 71
         # __spark_entry__ queries at sf0.01 642 and features_images 24
@@ -71,11 +67,38 @@ def get_spark(app: str = "photohive_spark",
         # classes and its prefix ladder 54; without it 2 and 26. The id
         # stays in the generated code's comment and in explain()'s
         # ``*(n)``.
-        .config("spark.sql.codegen.cache.maxEntries", "2000")
-        .config("spark.sql.codegen.useIdInClassName", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
-    )
-    for k, v in (extra or {}).items():
+        "spark.sql.codegen.cache.maxEntries": "2000",
+        "spark.sql.codegen.useIdInClassName": "false",
+    }
+
+
+def get_spark(app: str = "photohive_spark",
+              master: str | None = None,
+              cfg: EngineConfig = DEFAULT_CONFIG,
+              extra: dict[str, str] | None = None) -> SparkSession:
+    """Build (or reuse) a local-harness SparkSession: ``master`` (default
+    local[$SPARK_GRAFT_CPUS]) with the engine's confs, then ``extra``
+    over them."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    builder = SparkSession.builder.appName(app).master(master or f"local[{cpus}]")
+    # harness-only: no progress bar, and the UI only when $SPARK_UI asks
+    harness = {"spark.ui.showConsoleProgress": "false",
+               "spark.ui.enabled": os.environ.get("SPARK_UI", "false")}
+    for k, v in {**engine_conf(cfg), **harness, **(extra or {})}.items():
         builder = builder.config(k, v)
+    return builder.getOrCreate()
+
+
+def job_spark(app: str, cfg: EngineConfig = DEFAULT_CONFIG) -> SparkSession:
+    """The SparkSession of a spark-submit job: the engine's confs wherever
+    the submitted SparkConf (``--conf``, spark-defaults.conf) leaves them
+    unset. The master and every submitted value are the submitter's."""
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()     # so SparkConf() reads the JVM's
+    submitted = SparkConf()
+    builder = SparkSession.builder.appName(app)
+    for k, v in engine_conf(cfg).items():
+        if not submitted.contains(k):
+            builder = builder.config(k, v)
     return builder.getOrCreate()

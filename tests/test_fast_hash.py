@@ -6,8 +6,12 @@ after the optimization round."""
 
 import datetime as dt
 
+import numpy as np
+import pyarrow as pa
 import pyspark.sql.functions as F
+import pytest
 
+from oracles import minhash_signatures_expr, simhash_expr
 from photohive_spark import dedup
 
 
@@ -22,6 +26,8 @@ EDGE_DOCS = [
     ("e7", " leading and trailing ", "s"),
     ("e8", None, "s"),
     ("e9", "a b", "s"),
+    ("e10", "short " + "x" * 33 + " tail", "s"),
+    ("e11", "y" * 70 + " mid " + "z" * 70, "s"),
 ]
 
 
@@ -34,14 +40,14 @@ def test_simhash_arrow_matches_expr(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         F.col("doc_id").cast("string").alias("doc_id"), "text", "source")
     fast = dedup.simhash(docs).orderBy("doc_id").collect()
-    slow = dedup.simhash(docs, hash_fn="expr_poly").orderBy("doc_id").collect()
+    slow = simhash_expr(docs).orderBy("doc_id").collect()
     assert fast == slow and len(fast) > 0
 
 
 def test_simhash_arrow_edge_cases(spark):
     docs = _edge_df(spark)
     fast = dedup.simhash(docs).orderBy("doc_id").collect()
-    slow = dedup.simhash(docs, hash_fn="expr_poly").orderBy("doc_id").collect()
+    slow = simhash_expr(docs).orderBy("doc_id").collect()
     assert fast == slow
     # empty/null docs are dropped in both forms
     ids = {r.doc_id for r in fast}
@@ -52,7 +58,7 @@ def test_minhash_sig_arrow_matches_expr(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         F.col("doc_id").cast("string").alias("doc_id"), "text", "source")
     fast = dedup.minhash_signatures(docs, k=3).orderBy("doc_id").collect()
-    slow = dedup.minhash_signatures_expr(docs, k=3).orderBy("doc_id").collect()
+    slow = minhash_signatures_expr(docs, k=3).orderBy("doc_id").collect()
     assert len(fast) == len(slow) > 0
     for a, b in zip(fast, slow):
         assert a.doc_id == b.doc_id and list(a.sig) == list(b.sig)
@@ -62,7 +68,7 @@ def test_minhash_sig_arrow_edge_cases(spark):
     docs = _edge_df(spark)
     for k in (1, 2, 3, 5):
         fast = dedup.minhash_signatures(docs, k=k).orderBy("doc_id").collect()
-        slow = dedup.minhash_signatures_expr(docs, k=k) \
+        slow = minhash_signatures_expr(docs, k=k) \
             .orderBy("doc_id").collect()
         assert len(fast) == len(slow) == len(EDGE_DOCS)
         for a, b in zip(fast, slow):
@@ -128,3 +134,49 @@ def test_repetition_arrow_one_word_batches(spark):
         got = sorted(map(tuple, fast.collect()))
         assert got == sorted(map(tuple, ref.collect()))
     assert [r[0] for r in got] == ["m0", "m2"]
+
+
+def test_xxh64_flat_matches_spark_xxhash64(spark):
+    """The numpy XXH64 == F.xxhash64 (seed 42) on random words of 0-90
+    bytes, which cover the 1-byte, 4-byte, 8-byte and 32-byte-stripe
+    branches, and on non-ASCII words (hashed as their UTF-8 bytes)."""
+    from photohive_spark.fast_hash import _string_buffers, xxh64_flat
+    rng = np.random.default_rng(5)
+    alpha = list("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789")
+    words = ["".join(rng.choice(alpha, n)) for n in rng.integers(1, 91, 600)]
+    words += ["a" * n for n in range(0, 70)]
+    words += ["café", "über", "straße", "日本語のテキスト", "ü" * 20, "é" * 33]
+    df = spark.createDataFrame([(w,) for w in words], "w string")
+    want = [r.h for r in df.select(F.xxhash64("w").alias("h")).collect()]
+    data, starts, lens = _string_buffers(pa.array(words))
+    assert xxh64_flat(data, starts, lens).tolist() == want
+
+
+@pytest.mark.parametrize("k", [1, 3, 5])
+def test_minhash_fast_arrow_matches_catalyst(spark, sf_dir, k):
+    """hash_fn="fast" signatures from the Arrow stage == the Catalyst
+    posexplode + window + groupBy form, on the corpus and edge docs."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        F.col("doc_id").cast("string").alias("doc_id"), "text", "source")
+    for frame in (_edge_df(spark), docs):
+        fast = dedup.minhash_signatures(frame, k=k, hash_fn="fast") \
+            .orderBy("doc_id").collect()
+        slow = minhash_signatures_expr(frame, k=k, hash_fn="fast") \
+            .orderBy("doc_id").collect()
+        assert len(fast) == len(slow) > 0
+        for a, b in zip(fast, slow):
+            assert a.doc_id == b.doc_id and list(a.sig) == list(b.sig), k
+
+
+def test_simhash_fast_arrow_matches_catalyst(spark, sf_dir):
+    """hash_fn="fast" simhash from the Arrow stage == the explode +
+    groupBy form; docs with no words are dropped by both."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        F.col("doc_id").cast("string").alias("doc_id"), "text", "source")
+    for frame in (_edge_df(spark), docs):
+        fast = dedup.simhash(frame, hash_fn="fast").orderBy("doc_id").collect()
+        slow = simhash_expr(frame, hash_fn="fast").orderBy("doc_id").collect()
+        assert fast == slow and len(fast) > 0
+    ids = {r.doc_id for r in dedup.simhash(_edge_df(spark), hash_fn="fast")
+           .collect()}
+    assert not ids & {"e1", "e2", "e8"}

@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 import pyspark.sql.functions as F
 
+from oracles import fast_shingle_hashes
 from photohive_spark import dedup, similarity, text
 from photohive_spark.tokenize import word_token
 
@@ -240,16 +241,11 @@ def test_lsh_bucket_cap_noop_when_buckets_small(spark, docs):
     assert base == capped and base
 
 
-def test_connected_components_vs_union_find(spark):
-    """Property: min-label propagation == classic union-find on random
-    graphs (components labelled by their minimum node id)."""
-    import random
-
-    rng = random.Random(7)
-    nodes = [f"n{i:02d}" for i in range(40)]
-    edges = [tuple(sorted(rng.sample(nodes, 2))) for _ in range(25)]
-
-    parent = {n: n for n in nodes}
+def _node_seeded_union_find(nodes, edges):
+    """Union-find over ``nodes`` and the pair endpoints; each vertex is
+    labelled by the smallest id of ``nodes`` in its component, and a
+    component without one is left out."""
+    parent = {v: v for v in list(nodes) + [x for e in edges for x in e]}
 
     def find(a):
         while parent[a] != a:
@@ -261,13 +257,82 @@ def test_connected_components_vs_union_find(spark):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    want = {n: find(n) for n in nodes}
+    low = {}
+    for n in nodes:
+        low[find(n)] = min(low.get(find(n), n), n)
+    return {v: low[find(v)] for v in parent if find(v) in low}
+
+
+def test_connected_components_vs_union_find(spark):
+    """Property: min-label propagation == classic union-find on random
+    graphs (components labelled by their minimum node id)."""
+    import random
+
+    rng = random.Random(7)
+    nodes = [f"n{i:02d}" for i in range(40)]
+    edges = [tuple(sorted(rng.sample(nodes, 2))) for _ in range(25)]
+    want = _node_seeded_union_find(nodes, edges)
 
     pairs = spark.createDataFrame(sorted(set(edges)), "id_a string, id_b string")
     nodes_df = spark.createDataFrame([(n,) for n in nodes], "doc_id string")
     got = {r.doc_id: r.component
            for r in dedup.connected_components(pairs, nodes_df).collect()}
     assert got == want
+
+
+@pytest.mark.parametrize("seed", range(5))
+def test_connected_components_endpoints_outside_nodes(spark, seed):
+    """Pair endpoints missing from ``nodes`` get a label but never seed
+    one: every vertex gets the smallest id of ``nodes`` in its component.
+    Random graphs, a third of the ids left out of ``nodes``."""
+    import random
+
+    rng = random.Random(seed)
+    ids = [f"v{i:02d}" for i in range(60)]
+    nodes = sorted(rng.sample(ids, 40))
+    edges = sorted({tuple(sorted(rng.sample(ids, 2))) for _ in range(45)})
+    pairs = spark.createDataFrame(edges, "id_a string, id_b string")
+    nodes_df = spark.createDataFrame([(n,) for n in nodes], "doc_id string")
+    got = {r.doc_id: r.component
+           for r in dedup.connected_components(pairs, nodes_df).collect()}
+    assert got == _node_seeded_union_find(nodes, edges)
+
+
+def test_connected_components_bridge_outside_nodes(spark):
+    """Two nodes joined only through an endpoint missing from ``nodes``
+    share a component. Propagation used to stop after the round that
+    first labelled the bridge, because that round changed no node's
+    label, and left n2 labelled by itself."""
+    pairs = spark.createDataFrame([("n1", "x5"), ("n2", "x5"), ("x6", "x7")],
+                                  "id_a string, id_b string")
+    nodes = spark.createDataFrame([("n1",), ("n2",), ("n3",)],
+                                  "doc_id string")
+    got = {r.doc_id: r.component
+           for r in dedup.connected_components(pairs, nodes).collect()}
+    assert got == {"n1": "n1", "n2": "n1", "n3": "n3", "x5": "n1"}
+
+
+def test_connected_components_job_count(spark):
+    """Propagation works on the pair endpoints only and carries each
+    endpoint's previous label and adjacency through its one groupBy per
+    round. A two-round graph (a triangle plus four singletons) then takes
+    at most 8 Spark jobs, the call and collecting its labels together;
+    relabelling every node and joining old against new labels each round
+    took 20."""
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame([("a", "b"), ("a", "c"), ("b", "c")],
+                                  "id_a string, id_b string")
+    nodes = spark.createDataFrame([(x,) for x in "abcdefg"], "doc_id string")
+    sc.setJobGroup("cc-job-count", "connected_components job count")
+    try:
+        got = dict(map(tuple, dedup.connected_components(pairs, nodes)
+                       .collect()))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == {"a": "a", "b": "a", "c": "a", "d": "d", "e": "e",
+                   "f": "f", "g": "g"}
+    jobs = sc.statusTracker().getJobIdsForGroup("cc-job-count")
+    assert len(jobs) <= 8, len(jobs)
 
 
 def test_simhash_neardup_pigeonhole_and_verify(spark, docs):
@@ -587,7 +652,7 @@ def test_fast_shingle_hashes_short_docs(spark):
     """Docs with fewer than k words produce exactly one shingle hash
     (all words), mirroring word_shingles."""
     df = spark.createDataFrame([("s", "one two")], "doc_id string, text string")
-    assert dedup.fast_shingle_hashes(df, k=3).count() == 1
+    assert fast_shingle_hashes(df, k=3).count() == 1
 
 
 def test_simhash_fast_hash_properties(docs):
@@ -619,7 +684,7 @@ def test_word_shingles_empty_doc_parity(spark):
     assert got["e1"] == {""} and got["e2"] == {""}
     assert len(got["w1"]) == 2
     fast = {}
-    for r in dedup.fast_shingle_hashes(df).collect():
+    for r in fast_shingle_hashes(df).collect():
         fast.setdefault(r.doc_id, []).append(r.h)
     # one constant hash per empty doc (xxhash64(null) = its seed, 42)
     assert fast["e1"] == fast["e2"] and len(fast["e1"]) == 1

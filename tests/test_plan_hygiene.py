@@ -138,3 +138,17 @@ def test_countmin_partial_aggregates_map_side(spark, sf_dir):
 
     est_plan = _plan(sketch.cms_estimate(cms, [1, 2, 3]))
     assert "BroadcastHashJoin" in est_plan
+
+
+@pytest.mark.parametrize("op", ["minhash_signatures", "simhash"])
+def test_fast_hash_dedup_stages_do_not_shuffle(spark, sf_dir, op):
+    """hash_fn="fast" MinHash signatures and simhash run as one Arrow
+    stage: the executed plan has no Exchange (the explode + window /
+    groupBy form shuffled every word occurrence) and no Window."""
+    from photohive_spark import dedup
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = getattr(dedup, op)(docs, hash_fn="fast")
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan, plan
+    assert "Exchange" not in plan and "Window" not in plan, plan
