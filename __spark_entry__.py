@@ -79,7 +79,7 @@ def _cents(col: str) -> F.Column:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: tokenize sf0.001 documents into the input_hint schema and
-    run the full DSP feature extraction (mapInPandas kernel DAG)."""
+    run the full DSP feature extraction (mapInArrow kernel DAG)."""
     toks = tokens_table(spark, "/root/testdata/sf0.001")
     return extract_features_df(toks, CFG)
 
@@ -140,11 +140,12 @@ def q_asof_join_strict(spark, sf_dir):
 
 
 def q_asof_join_pandas(spark, sf_dir):
-    """Cogrouped applyInPandas merge_asof variant — same oracle as
-    asof_join, so the two implementations are cross-checked by the gate."""
+    """Cogrouped Arrow as-of variant (sort + binary search per key) — same
+    oracle as asof_join, so the two implementations are cross-checked by
+    the gate. The key keeps its historical name."""
     probes, snaps = _probes_snaps(spark, sf_dir)
-    return pit.asof_join_pandas(probes, snaps, "user_id", "probe_ts",
-                                "snapshot_ts", ["purchase_value"])
+    return pit.asof_join_cogroup(probes, snaps, "user_id", "probe_ts",
+                                 "snapshot_ts", ["purchase_value"])
 
 
 def q_asof_join_salted(spark, sf_dir):
@@ -336,7 +337,7 @@ _ROI_SPECS = [(5, 25), (0, 60)]
 
 def q_sharpness_rois(spark, sf_dir):
     """Per-ROI sharpness through the FULL engine path: ROI column ->
-    mapInPandas kernel -> per-ROI ``sharpness`` array (Sharpnesses analog,
+    mapInArrow kernel -> per-ROI ``sharpness`` array (Sharpnesses analog,
     src/utilities.h:25-28; cap 10 per README.md:137). The oracle recomputes
     the Laplacian variance/mean fold over each token slice in SQL."""
     toks = tokens_table(spark, sf_dir).withColumn(
@@ -689,7 +690,7 @@ def _digest(*cols: str) -> F.Column:
 
 
 def q_extract_features(spark, sf_dir):
-    """The flagship through the FULL engine (tokenize -> mapInPandas kernel
+    """The flagship through the FULL engine (tokenize -> mapInArrow kernel
     DAG), oracle-checked on its five SQL-expressible scalar features; the
     FFT/palette array outputs are covered by q_extract_features_digest
     (rows-only) and the engine's golden/parity tests."""
@@ -1022,9 +1023,9 @@ def q_audio_decode_stats(spark, sf_dir):
     import wave
 
     import numpy as np
-    import pandas as pd
+    import pyspark.sql.types as T
 
-    from photohive_spark import png as _png
+    from photohive_spark import multimodal, png as _png
 
     rows = []
     for i in range(40):
@@ -1040,24 +1041,20 @@ def q_audio_decode_stats(spark, sf_dir):
         rows.append((f"wav{i:02d}", buf.getvalue()))
     media = spark.createDataFrame(rows, "media_id string, payload binary")
 
-    def run(batches):
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                x = _png.decode_wav_samples(bytes(payload))
-                ints = (np.rint(x * 65535.0) - 32768.0).astype(np.int64)
-                out.append({
-                    "media_id": mid, "n_samples": int(x.size),
-                    "sample_sum": int(ints.sum()),
-                    "amp_mean": float(x.mean()),
-                    "amp_std": float(np.sqrt(np.var(x)))})
-            yield pd.DataFrame(
-                out, columns=["media_id", "n_samples", "sample_sum",
-                              "amp_mean", "amp_std"])
+    def stats(x):
+        ints = (np.rint(x * 65535.0) - 32768.0).astype(np.int64)
+        return {"n_samples": int(x.size), "sample_sum": int(ints.sum()),
+                "amp_mean": float(x.mean()),
+                "amp_std": float(np.sqrt(np.var(x)))}
 
-    out = media.mapInPandas(
-        run, "media_id string, n_samples int, sample_sum long, "
-             "amp_mean double, amp_std double")
+    out = multimodal._media_stage(
+        media, ["media_id", "payload"],
+        T.StructType([T.StructField("media_id", T.StringType()),
+                      T.StructField("n_samples", T.IntegerType()),
+                      T.StructField("sample_sum", T.LongType()),
+                      T.StructField("amp_mean", T.DoubleType()),
+                      T.StructField("amp_std", T.DoubleType())]),
+        lambda p, ctx: _png.decode_wav_samples(p), "fail", row=stats)
     return out.select(
         "media_id", "n_samples", "sample_sum",
         F.round("amp_mean", 6).alias("amp_mean"),

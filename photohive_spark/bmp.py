@@ -16,6 +16,8 @@ import struct
 
 import numpy as np
 
+from .png import check_pixels
+
 
 def _mask_shift(mask: int) -> tuple[int, int]:
     """(right shift, value span) extracting a channel from its mask."""
@@ -47,6 +49,7 @@ def _decode_bmp(data: bytes) -> np.ndarray:
         raise ValueError("bad BMP dimensions")
     top_down = h_raw < 0
     h = -h_raw if top_down else h_raw
+    check_pixels(w, h, "BMP")
     if comp == 3:                        # BI_BITFIELDS
         # masks sit at offset 54 both for BITMAPINFOHEADER (appended
         # right after the 40-byte header) and V4/V5 (embedded fields)

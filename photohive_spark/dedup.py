@@ -7,7 +7,7 @@ and every groupBy is a single shuffle. The per-doc hashes
 (word_shingles, MinHash signatures, word_shingle_arrays and simhash, for
 both hash functions) are shuffle-free vectorized Arrow stages
 (arrow_stage.arrow_stage over fast_hash kernels). The default "poly"
-hash is the engine's poly-hash (tokenize.word_token semantics), so the
+hash is the tokenizer's poly hash with a wider modulus, so the
 DuckDB oracle can reproduce every number exactly; "fast" is Spark's
 xxhash64 over each word.
 
@@ -43,7 +43,7 @@ SIMHASH_BITS = 32
 
 def poly_hash_expr(col_sql: str, mod: int = MERSENNE) -> str:
     """Spark SQL snippet hashing a string column with the engine poly hash
-    (same recurrence as tokenize.word_token, wider modulus)."""
+    (the token hash's recurrence, wider modulus)."""
     return (f"aggregate(transform(sequence(1, length({col_sql})), "
             f"i -> ascii(substr({col_sql}, i, 1))), "
             f"cast({TOKEN_SEED} as bigint), (a, b) -> (a * {TOKEN_MULT} + b) % {mod})")
@@ -70,8 +70,9 @@ def exact_dedup(docs: DataFrame, text_col: str = "text",
 
 def _word_gram_rows(docs: DataFrame, text_col: str, id_col: str,
                     k: int) -> DataFrame:
-    """Shared k-gram scaffolding for both shingle builders: one row per
-    kept gram start position with columns (id_col, _pos, _w, _keep).
+    """Shared k-gram scaffolding of the window-form gram builders
+    (dup_span_stats and the parity oracles): one row per kept gram
+    start position with columns (id_col, _pos, _w, _keep).
 
     posexplode_OUTER so a zero-word doc still yields one row (null
     _pos/_w) — the HOF form and the DuckDB oracle emit one empty-string
@@ -96,45 +97,26 @@ def _word_gram_rows(docs: DataFrame, text_col: str, id_col: str,
 
 
 def word_shingles(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id", k: int = 3,
-                  distinct: bool = True) -> DataFrame:
+                  id_col: str = "doc_id", k: int = 3) -> DataFrame:
     """Distinct word k-gram shingles per doc: (doc_id, shingle string).
-    ``distinct=False`` skips the per-doc dedup exchange for consumers
-    whose aggregate is multiset-invariant (MinHash min()); set-counting
-    consumers (Jaccard verify, decontaminate, ngram) need the default.
+    A doc with fewer than k words gives one shingle of all its words, and
+    an empty or null doc the "" shingle.
 
-    Codegen form: posexplode the words (one shallow HOF filter per doc),
-    then assemble each k-gram with window lead()s + concat_ws (which
-    skips the null leads of a short doc, reproducing the single
-    all-words shingle; an empty doc's all-null row becomes the ""
-    shingle), then distinct. Set-identical to the original all-HOF form
-    (split -> transform(sequence) -> array_join -> array_distinct), which
-    ran INTERPRETED per element (Spark HOFs are CodegenFallback) and
-    dominated 500k-doc dedup profiles; the window pays one exchange on
-    id_col instead."""
-    if distinct:
-        # r7: distinct shingles per doc in ONE vectorized mapInArrow
-        # stage (fast_hash.shingles_arrow — pyarrow take/binary_join for
-        # the strings, dictionary_encode for EXACT per-doc dedup). Same
-        # row set as the window form (parity-pinned); removes the window
-        # exchange+sort AND the distinct exchange. Assumes one row per
-        # id (true of every caller): the old global .distinct() would
-        # additionally merge byte-identical duplicate-id rows.
-        from .arrow_stage import arrow_stage
+    One vectorized Arrow stage (fast_hash.shingles_arrow: pyarrow
+    take/binary_join builds the strings, dictionary_encode dedups them
+    per doc), so there is no exchange. Assumes one row per id (true of
+    every caller); a global distinct would also merge byte-identical
+    duplicate-id rows. The window/lead() form in tests/oracles.py gives
+    the same row set."""
+    from .arrow_stage import arrow_stage
 
-        def f(b):
-            from photohive_spark.fast_hash import shingles_arrow
-            doc_idx, grams = shingles_arrow(b.column(text_col), k)
-            return doc_idx, {"shingle": grams}
+    def f(b):
+        from photohive_spark.fast_hash import shingles_arrow
+        doc_idx, grams = shingles_arrow(b.column(text_col), k)
+        return doc_idx, {"shingle": grams}
 
-        return arrow_stage(docs.select(id_col, text_col), "shingle string",
-                           f, carry=[id_col])
-    rows = _word_gram_rows(docs, text_col, id_col, k)
-    win = Window.partitionBy(id_col).orderBy("_pos")
-    parts = [F.col("_w")] + [F.lead("_w", j).over(win) for j in range(1, k)]
-    out = (rows.withColumn("shingle", F.concat_ws(" ", *parts))
-           .where("_keep").select(id_col, "shingle"))
-    return out.distinct() if distinct else out
+    return arrow_stage(docs.select(id_col, text_col), "shingle string",
+                       f, carry=[id_col])
 
 
 def minhash_signatures(docs: DataFrame, text_col: str = "text",
@@ -287,7 +269,7 @@ def word_shingle_arrays(docs: DataFrame, text_col: str = "text",
     word-k-gram shingle SET as one array row, emitted straight from the
     vectorized builder (fast_hash.shingles_arrow): no explode, no
     groupBy/collect_list, zero shuffles. Same sets as
-    word_shingles(distinct=True) grouped per doc."""
+    word_shingles grouped per doc."""
     from .arrow_stage import arrow_stage
 
     def f(b):

@@ -168,8 +168,9 @@ def _rotl(x, r: int):
 def _lanes(data, pos, width: int):
     """Little-endian ``width``-byte unsigned words at byte offsets
     ``pos`` of ``data``, as uint64."""
-    b = data[pos[:, None] + np.arange(width)]
-    return b.view(f"<u{width}").ravel().astype(np.uint64)
+    words = np.ndarray((max(data.size - width + 1, 0),), f"<u{width}",
+                       buffer=data, strides=(1,))
+    return words[pos].astype(np.uint64)
 
 
 def _xxh_round(acc, lane):
@@ -348,9 +349,9 @@ def minhash_sig_arrow(texts, k: int, a_consts, b_consts,
 
 def shingles_arrow(texts, k: int):
     """DISTINCT word k-gram shingle strings per doc for one Arrow batch —
-    identical row set to dedup.word_shingles(distinct=True): full k-grams
-    for docs with >= k words, one all-words gram for 0 < nw < k, and the
-    "" shingle for empty/null docs.
+    the rows of dedup.word_shingles (same set as the window form in
+    tests/oracles.py): full k-grams for docs with >= k words, one
+    all-words gram for 0 < nw < k, and the "" shingle for empty/null docs.
 
     Returns (doc_idx int64 ndarray, grams pyarrow StringArray) aligned.
     Gram strings are assembled with pyarrow C kernels (take +

@@ -30,6 +30,8 @@ import struct
 
 import numpy as np
 
+from .png import check_pixels
+
 # GIF interlace passes: (row_start, row_step)
 _PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 
@@ -167,6 +169,7 @@ def _decode_gif(data: bytes) -> dict:
     w, h = struct.unpack("<HH", data[6:10])
     if w == 0 or h == 0:
         raise ValueError("zero-dimension GIF")
+    check_pixels(w, h, "GIF")
     flags, bg_idx, _aspect = data[10], data[11], data[12]
     gct, pos = _color_table(data, 13, flags)
 

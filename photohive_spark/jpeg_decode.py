@@ -36,6 +36,8 @@ import struct
 
 import numpy as np
 
+from .png import check_pixels
+
 ZIGZAG = np.array([
     0,  1,  8, 16,  9,  2,  3, 10, 17, 24, 32, 25, 18, 11,  4,  5,
     12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13,  6,  7, 14, 21, 28,
@@ -758,6 +760,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 body[5]
             if prec != 8:
                 raise ValueError(f"unsupported sample precision {prec}")
+            check_pixels(w, h, "JPEG")
             if nc not in (1, 3):
                 raise ValueError(
                     f"unsupported component count {nc} (grayscale or "

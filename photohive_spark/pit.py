@@ -4,9 +4,10 @@ gap-based sessionization.
 These are the operators the reference lacks entirely (it is a single-image
 batch library — SURVEY §2.6); they are what makes the engine a
 *point-in-time feature store* over the snapshot table. All four are pure
-Catalyst window/join plans — no Python in the hot path — plus an
-``applyInPandas``/``merge_asof`` variant of the as-of join used to
-cross-check semantics and to handle per-group logic Catalyst can't express.
+Catalyst window/join plans — no Python in the hot path — except
+``asof_join_cogroup``, a cogrouped Arrow as-of join (one sort and one
+binary search per key) that runs shuffle-free over bucketed tables and
+cross-checks the window form's semantics.
 
 Zero-temporal-leakage contract: a probe at time t only ever sees the
 snapshot with the greatest snapshot_ts <= t (strictly < t with
@@ -157,44 +158,47 @@ def asof_join_broadcast(probes: DataFrame, snapshots: DataFrame, key: str,
     )
 
 
-def asof_join_pandas(probes: DataFrame, snapshots: DataFrame, key: str,
-                     probe_ts: str, snapshot_ts: str,
-                     value_cols: list[str], strict: bool = False) -> DataFrame:
-    """Cogrouped ``applyInPandas`` + ``pd.merge_asof`` variant.
+def asof_join_cogroup(probes: DataFrame, snapshots: DataFrame, key: str,
+                      probe_ts: str, snapshot_ts: str,
+                      value_cols: list[str], strict: bool = False) -> DataFrame:
+    """Cogrouped Arrow as-of join: per key, sort the snapshots once and
+    binary-search every probe timestamp in them. A probe with a null
+    timestamp or no earlier snapshot gets a null match, and (as in
+    :func:`asof_join_broadcast`) a null-timestamp snapshot is never
+    matched. One shuffle per side, none over bucketed tables
+    (:func:`asof_join_bucketed`)."""
+    import pyspark.sql.types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    Same semantics as :func:`asof_join`; used as a cross-check and as the
-    extension point for per-group logic (e.g. interpolation) that the
-    window form can't express. Cost: one shuffle per side (cogroup).
-    """
-    import pandas as pd  # local import: only reaches Python workers
+    out = T.StructType(
+        [T.StructField(f.name, f.dataType) for f in probes.schema.fields]
+        + [T.StructField("matched_ts", T.TimestampType())]
+        + [T.StructField(c, snapshots.schema[c].dataType) for c in value_cols])
+    # Spark accepts the zone it names (UTC), not the workers' Etc/UTC
+    schema = to_arrow_schema(out)
+    side = "left" if strict else "right"
 
-    probe_fields = probes.schema.fields
-    out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in probe_fields)
-        + f", matched_ts timestamp, "
-        + ", ".join(f"{c} {snapshots.schema[c].dataType.simpleString()}"
-                    for c in value_cols)
-    )
+    def merge(p, s):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        s = s.take(pc.sort_indices(s, [(snapshot_ts, "ascending")]))
+        s = s.slice(0, s.num_rows - s.column(snapshot_ts).null_count)
+        sts = pc.cast(s.column(snapshot_ts), pa.int64()).to_numpy()
+        pts = p.column(probe_ts)
+        idx = np.searchsorted(
+            sts, pc.cast(pts, pa.int64()).fill_null(0).to_numpy(),
+            side=side) - 1
+        miss = (idx < 0) | pts.is_null().to_numpy()
+        got = s.select([snapshot_ts, *value_cols]).take(
+            pa.array(idx, mask=miss))
+        return pa.Table.from_arrays(p.columns + got.columns,
+                                    names=schema.names).cast(schema)
+
     snap_sel = snapshots.select(key, snapshot_ts, *value_cols)
-
-    def merge(p: pd.DataFrame, s: pd.DataFrame) -> pd.DataFrame:
-        p = p.sort_values(probe_ts, kind="mergesort")
-        s = (s.sort_values(snapshot_ts, kind="mergesort")
-             .rename(columns={snapshot_ts: "matched_ts"}))
-        if s.empty:
-            m = p.copy()
-            m["matched_ts"] = pd.NaT
-            for c in value_cols:
-                m[c] = None
-            return m
-        m = pd.merge_asof(
-            p, s.drop(columns=[key]),
-            left_on=probe_ts, right_on="matched_ts",
-            allow_exact_matches=not strict, direction="backward")
-        return m
-
     return (probes.groupBy(key).cogroup(snap_sel.groupBy(key))
-            .applyInPandas(merge, out_schema))
+            .applyInArrow(merge, out))
 
 
 def write_bucketed(df: DataFrame, table: str, key: str, n_buckets: int,
@@ -222,11 +226,11 @@ def asof_join_bucketed(spark, probe_table: str, snapshot_table: str,
     the cogroup's ClusteredDistribution on BOTH sides, so the physical
     plan contains NO Exchange at all (plan-asserted in
     tests/test_pit.py — the non-bucketed cogroup pays two). Same
-    semantics as :func:`asof_join` / :func:`asof_join_pandas`."""
-    return asof_join_pandas(spark.table(probe_table),
-                            spark.table(snapshot_table),
-                            key, probe_ts, snapshot_ts, value_cols,
-                            strict)
+    semantics as :func:`asof_join` / :func:`asof_join_cogroup`."""
+    return asof_join_cogroup(spark.table(probe_table),
+                             spark.table(snapshot_table),
+                             key, probe_ts, snapshot_ts, value_cols,
+                             strict)
 
 
 def backfill(df: DataFrame, key: str, ts: str, cols: list[str]) -> DataFrame:

@@ -33,6 +33,22 @@ _SIG = b"\x89PNG\r\n\x1a\n"
 # color type -> samples per pixel (palette counts as 1 index sample)
 _CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
+# Per-row decode budget, checked by every codec on the size its header
+# declares before any pixel buffer exists: decoding to float planes costs
+# about 23 B a pixel, so one row stays near 0.4 GB.
+MAX_DECODE_PIXELS = 1 << 24
+
+
+class DecodeBudgetError(ValueError):
+    """An image header declares more than MAX_DECODE_PIXELS pixels."""
+
+
+def check_pixels(w: int, h: int, fmt: str) -> None:
+    """Raise DecodeBudgetError if a ``fmt`` header's w x h is over budget."""
+    if w * h > MAX_DECODE_PIXELS:
+        raise DecodeBudgetError(f"{fmt} declares {w}x{h} pixels, over the "
+                                f"{MAX_DECODE_PIXELS}-pixel decode budget")
+
 
 def _chunks(data: bytes):
     if data[:8] != _SIG:
@@ -219,6 +235,7 @@ def decode_png(data: bytes) -> np.ndarray:
         raise ValueError(f"unknown interlace method {interlace}")
     if w == 0 or h == 0:
         raise ValueError("zero-dimension image")
+    check_pixels(w, h, "PNG")
     nch = _CHANNELS[ctype]
     # filter left-distance is whole BYTES (1 for sub-byte depths)
     bypp = max(1, nch * (depth // 8))

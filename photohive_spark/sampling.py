@@ -3,9 +3,8 @@
 Random sampling (``df.sample``) is neither reproducible across engines nor
 stable under retries; training pipelines instead hash a stable key and keep
 rows whose hash bucket falls under the target rate. Both operators here use
-the engine's poly hash (tokenize.word_token semantics), so the DuckDB
-oracle — and any re-run at any cluster size — selects EXACTLY the same
-rows.
+the tokenizer's poly hash, so the DuckDB oracle — and any re-run at any
+cluster size — selects EXACTLY the same rows.
 
 Scale: pure Catalyst projections + filter (whole-stage codegen'd, pushdown
 intact); sampling never shuffles.

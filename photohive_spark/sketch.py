@@ -73,7 +73,14 @@ def countmin(df: DataFrame, tokens_col: str = "tokens",
     groupBy(d, bucket).count(). The groupBy key space is at most
     ``depth x width``, so partial aggregation collapses each task to a
     bounded row count before the (tiny) shuffle — the whole token stream
-    is consumed map-side."""
+    is consumed map-side.
+
+    On a stream (outputMode 'update' or 'complete') the state stays at
+    most ``depth x width`` counter rows with no watermark, and each
+    snapshot's counters are CUMULATIVE, equal to the batch sketch over
+    every row seen so far. So never cms_merge two snapshots of the SAME
+    stream (that double-counts); merge sketches over disjoint row sets
+    and, within one stream, take the latest snapshot."""
     tok = df.select(F.explode(tokens_col).alias("t"))
     keys = tok.select(F.explode(F.array(*[
         F.struct(F.lit(d).cast("int").alias("d"),

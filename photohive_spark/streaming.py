@@ -2,10 +2,15 @@
 windowed aggregates, and stateful gap sessionization.
 
 The reference is strictly batch-one-image (SURVEY §2.7); this module is the
-engine's incremental-ingest path: new token sequences land as files (or a
-Kafka topic in production), features are extracted with the SAME
-Arrow-batched kernels as the batch path (stateless mapInArrow is
-streaming-safe), and late data is bounded by event-time watermarks.
+engine's incremental-ingest path: new token sequences or media rows land as
+files (or a Kafka topic in production) and late data is bounded by
+event-time watermarks.
+
+The batch operators need no stream twin: a stateless ``mapInArrow`` stage
+lifts to Structured Streaming unchanged, so ``engine.extract_features_df``,
+``multimodal.image_report`` and ``multimodal.media_features`` run on these
+streams as they are, row-for-row equal to batch (tests/test_streaming.py),
+and ``sketch.countmin`` runs as a streaming aggregation.
 
 Scale notes: the feature stream is stateless => unbounded parallelism, no
 state store; the windowed aggregate keeps O(windows x sources) state; the
@@ -24,8 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
-from .config import DEFAULT_CONFIG, EngineConfig
-from .engine import extract_features_df
 
 TOKENS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType()),
@@ -43,13 +46,6 @@ def read_tokens_stream(spark: SparkSession, path: str,
     return (spark.readStream.schema(TOKENS_SCHEMA)
             .option("maxFilesPerTrigger", max_files_per_trigger)
             .parquet(path))
-
-
-def stream_features(tokens_stream: DataFrame,
-                    cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Stateless streaming feature extraction — identical kernels/schema to
-    the batch path, so batch and stream outputs are row-for-row equal."""
-    return extract_features_df(tokens_stream, cfg)
 
 
 def windowed_source_stats(tokens_stream: DataFrame,
@@ -257,56 +253,6 @@ def read_media_stream(spark: SparkSession, path: str,
     return (spark.readStream.schema(MEDIA_SCHEMA)
             .option("maxFilesPerTrigger", max_files_per_trigger)
             .parquet(path))
-
-
-def image_report_stream(media_stream: DataFrame,
-                        cfg: EngineConfig = DEFAULT_CONFIG,
-                        mode: str = "real") -> DataFrame:
-    """Streaming image_report: the batch operator is a stateless
-    mapInArrow stage (no shuffle, no state), so it lifts to
-    Structured Streaming unchanged — batch and stream outputs are
-    row-for-row equal (pinned by tests/test_streaming.py). Unbounded
-    parallelism, no state store; real decode (PNG incl. Adam7/16-bit,
-    baseline + progressive JPEG) happens inside the stream's tasks."""
-    from .multimodal import image_report
-
-    return image_report(media_stream, cfg=cfg, mode=mode)
-
-
-def media_features_stream(media_stream: DataFrame,
-                          cfg: EngineConfig = DEFAULT_CONFIG,
-                          mode: str = "fake") -> DataFrame:
-    """Streaming media_features (1-D sample-stream DSP features) — same
-    stateless lift as image_report_stream. The default ``mode`` matches
-    the BATCH operator ('fake') so lifting a pipeline never silently
-    changes decode semantics; pass mode='real' for real ingest."""
-    from .multimodal import media_features
-
-    return media_features(media_stream, cfg=cfg, mode=mode)
-
-
-def countmin_stream(tokens_stream: DataFrame, tokens_col: str = "tokens",
-                    depth: int | None = None,
-                    width: int | None = None) -> DataFrame:
-    """Streaming CountMin: live token-frequency tracking on an unbounded
-    stream with PROVABLY bounded state — the streaming aggregation keeps
-    at most ``depth x width`` counter rows no matter how much data flows
-    (contrast dedup_stream, whose state needs a watermark to stay
-    bounded; the sketch bounds itself by construction). Query with
-    outputMode('update'/'complete'); counters are CUMULATIVE and exactly
-    equal the batch sketch over all rows seen so far. Merge caveat:
-    because snapshots are cumulative, summing two snapshots of the SAME
-    stream via sketch.cms_merge double-counts — cms_merge is for
-    sketches over DISJOINT row sets (different streams / days); within
-    one stream, always take the latest snapshot."""
-    from . import sketch
-
-    kwargs = {}
-    if depth is not None:
-        kwargs["depth"] = depth
-    if width is not None:
-        kwargs["width"] = width
-    return sketch.countmin(tokens_stream, tokens_col, **kwargs)
 
 
 def run_to_memory(stream_df: DataFrame, name: str, mode: str = "append"):

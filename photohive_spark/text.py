@@ -154,54 +154,31 @@ def bigram_logprob(tokens_df: DataFrame, id_col: str = "doc_id",
 
 
 def repetition_stats(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id",
-                     impl: str = "arrow") -> DataFrame:
+                     id_col: str = "doc_id") -> DataFrame:
     """Gopher-style repetition signals: fraction of the doc covered by its
     most frequent word bigram, and the duplicate-word fraction
     (1 - distinct/total). High values = boilerplate / spam.
 
-    ``impl="arrow"`` (default, r7): the statistic is entirely row-local,
-    so the per-doc integers (n_words / n_distinct / top-bigram
-    multiplicity / bigram count) come from ONE vectorized mapInArrow
-    stage — no explode, no groupBy, ZERO shuffles (the old form shuffled
-    the whole bigram stream twice, keyed by (doc, bigram string)). The
-    final round()/division expressions are the SAME Catalyst ops over
-    the same integer types, so outputs are bit-identical (parity
-    test-pinned; the DuckDB oracle stays green unchanged).
-    ``impl="expr"`` keeps the explode+groupBy form as the parity oracle.
-    """
-    if impl == "arrow":
-        from .arrow_stage import arrow_stage
+    The statistic is row-local, so the per-doc integers (n_words,
+    n_distinct, top-bigram multiplicity, bigram count) come from ONE
+    vectorized Arrow stage: no explode, no groupBy, no shuffle. The final
+    round()/division expressions are Catalyst ops over those integers, so
+    the outputs equal the explode+groupBy form kept as the parity oracle
+    in tests/oracles.py (docs with fewer than two words emit no row in
+    either)."""
+    from .arrow_stage import arrow_stage
 
-        def f(b):
-            import numpy as np
-            from photohive_spark.fast_hash import repetition_arrow
-            keep, nw, nd, tb, nb = repetition_arrow(b.column(text_col))
-            return keep, {"n_words": nw.astype(np.int32),
-                          "n_distinct": nd.astype(np.int32),
-                          "top_bg": tb, "n_bg": nb}
+    def f(b):
+        import numpy as np
+        from photohive_spark.fast_hash import repetition_arrow
+        keep, nw, nd, tb, nb = repetition_arrow(b.column(text_col))
+        return keep, {"n_words": nw.astype(np.int32),
+                      "n_distinct": nd.astype(np.int32),
+                      "top_bg": tb, "n_bg": nb}
 
-        top = arrow_stage(docs.select(id_col, text_col),
-                          "n_words int, n_distinct int, top_bg bigint, "
-                          "n_bg bigint", f, carry=[id_col])
-    else:
-        words = f"filter(split({text_col}, ' '), w -> length(w) > 0)"
-        # <2 words -> no bigrams -> doc dropped by the explode (consistent
-        # with the DuckDB oracle; avoids engine-divergent concat-null rules)
-        bigrams = (f"case when size({words}) < 2 then array() "
-                   f"else transform(sequence(1, size({words}) - 1), "
-                   f"i -> concat(element_at({words}, i), ' ', "
-                   f"element_at({words}, i + 1))) end")
-        base = docs.select(
-            F.col(id_col),
-            F.size(F.expr(words)).alias("n_words"),
-            F.size(F.expr(f"array_distinct({words})")).alias("n_distinct"),
-            F.explode(F.expr(bigrams)).alias("bg"))
-        counts = (base.groupBy(id_col, "n_words", "n_distinct", "bg")
-                  .agg(F.count("*").alias("cnt")))
-        top = (counts.groupBy(id_col, "n_words", "n_distinct")
-               .agg(F.max("cnt").alias("top_bg"),
-                    F.sum("cnt").alias("n_bg")))
+    top = arrow_stage(docs.select(id_col, text_col),
+                      "n_words int, n_distinct int, top_bg bigint, "
+                      "n_bg bigint", f, carry=[id_col])
     return top.select(
         id_col, "n_words",
         F.round(F.col("top_bg") / F.col("n_bg"), 6).alias("top_bigram_frac"),

@@ -20,7 +20,6 @@ read_image) — raw modality -> fixed numeric arrays.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
@@ -30,7 +29,8 @@ TOKEN_SEED = 7
 TOKEN_MULT = 31
 
 # Spark SQL expression for tokens (identical semantics to DUCKDB_TOKENS_SQL
-# and word_token() below — parity is pinned by tests/test_tokenize.py).
+# and the pure-Python word_token in tests/oracles.py — parity is pinned by
+# tests/test_tokenize.py).
 SPARK_TOKENS_EXPR = f"""
 transform(
   filter(split(text, ' '), w -> length(w) > 0),
@@ -51,20 +51,6 @@ list_transform(
 """
 
 
-def word_token(word: str) -> int:
-    """Pure-Python reference implementation of the token hash."""
-    acc = TOKEN_SEED
-    for ch in word:
-        acc = (acc * TOKEN_MULT + ord(ch)) % VOCAB_SIZE
-    return acc
-
-
-def tokenize_text(text: str) -> np.ndarray:
-    """Local (oracle) tokenization of one document."""
-    return np.array([word_token(w) for w in text.split(" ") if w],
-                    dtype=np.int32)
-
-
 def tokens_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet -> input_hint-shaped tokens DataFrame.
 
@@ -73,7 +59,8 @@ def tokens_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The token hash itself runs as a vectorized numpy kernel inside ONE
     ``mapInArrow`` stage (photohive_spark.fast_hash) — bit-identical
-    integers to SPARK_TOKENS_EXPR (parity pinned by tests/test_tokenize),
+    integers to SPARK_TOKENS_EXPR (parity pinned by tests/test_tokenize
+    against the HOF form in tests/oracles.py),
     ~100x faster than the interpreted higher-order-function form (Spark
     HOF lambdas are CodegenFallback; optimization guide §4.2). The scan
     reads only (doc_id, text, source); everything around the hash
@@ -99,24 +86,6 @@ def tokens_from_documents(df: DataFrame) -> DataFrame:
         mapped.select(
             F.col("doc_id").cast("string").alias("doc_id"),
             F.col("tokens"),
-            F.col("source"),
-            (F.to_timestamp(F.lit("2026-01-01 00:00:00"))
-             + F.make_interval(secs=F.col("doc_id") * 37)).alias("event_ts"),
-        )
-        .withColumn("n_tok", F.size("tokens").cast("int"))
-        .select("doc_id", "tokens", "n_tok", "source", "event_ts")
-    )
-
-
-def tokens_table_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The original all-Catalyst form of tokens_table (SPARK_TOKENS_EXPR
-    per character, interpreted HOFs) — kept as the cross-implementation
-    parity oracle for the fast mapInArrow path."""
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (
-        df.select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            F.expr(SPARK_TOKENS_EXPR).alias("tokens"),
             F.col("source"),
             (F.to_timestamp(F.lit("2026-01-01 00:00:00"))
              + F.make_interval(secs=F.col("doc_id") * 37)).alias("event_ts"),

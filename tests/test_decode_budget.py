@@ -1,0 +1,79 @@
+"""The per-row decode budget: every image codec checks the size its header
+declares against png.MAX_DECODE_PIXELS before allocating pixels, and an
+over-budget row is an ordinary decode error for on_error."""
+
+import struct
+import tracemalloc
+import zlib
+
+import numpy as np
+import pytest
+
+from photohive_spark import multimodal, png
+
+
+def _png_chunk(typ: bytes, body: bytes) -> bytes:
+    return (struct.pack(">I", len(body)) + typ + body
+            + struct.pack(">I", zlib.crc32(typ + body) & 0xFFFFFFFF))
+
+
+def _zero_png(w: int, h: int) -> bytes:
+    """A PNG declaring w x h 8-bit RGB over an all-zero IDAT (filter-0
+    rows of zeros), compressed row by row so it is never held inflated."""
+    z = zlib.compressobj(9)
+    row = bytes(w * 3 + 1)
+    idat = b"".join(z.compress(row) for _ in range(h)) + z.flush()
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    return (png._SIG + _png_chunk(b"IHDR", ihdr) + _png_chunk(b"IDAT", idat)
+            + _png_chunk(b"IEND", b""))
+
+
+# 4097 x 4096 is the smallest near-square size over the 2^24 budget
+W, H = 4097, 4096
+HEADERS = {
+    "gif": b"GIF89a" + struct.pack("<HH", W, H) + bytes(3) + b";",
+    "bmp": (b"BM" + struct.pack("<IHHI", 0, 0, 0, 54)
+            + struct.pack("<IiiHHI", 40, W, H, 1, 24, 0) + bytes(20)),
+    "jpeg": (b"\xff\xd8\xff\xc0" + struct.pack(">HBHHB", 11, 8, H, W, 1)
+             + bytes([1, 0x11, 0]) + b"\xff\xd9"),
+}
+
+
+def test_budget_boundary():
+    png.check_pixels(4096, 4096, "PNG")
+    with pytest.raises(png.DecodeBudgetError, match="4097x4096"):
+        png.check_pixels(W, H, "PNG")
+    assert issubclass(png.DecodeBudgetError, ValueError)
+
+
+def test_over_budget_png_stops_at_the_header():
+    """A ~105 KB payload declaring 6000 x 6000 RGB used to inflate its
+    IDAT and build float planes (an 825 MB peak); it now raises after
+    the IHDR, allocating next to nothing."""
+    payload = _zero_png(6000, 6000)
+    assert len(payload) < 200_000
+    tracemalloc.start()
+    try:
+        with pytest.raises(png.DecodeBudgetError, match="6000x6000"):
+            png.decode_image_rgb(payload)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 4 << 20, peak
+
+
+@pytest.mark.parametrize("fmt", sorted(HEADERS))
+def test_over_budget_header_raises_before_allocating(fmt):
+    with pytest.raises(png.DecodeBudgetError, match=f"{W}x{H}"):
+        png.decode_image_rgb(HEADERS[fmt])
+
+
+def test_over_budget_row_follows_on_error(spark):
+    img = np.zeros((8, 8, 3), dtype=np.uint8)
+    rows = [("ok", "image", bytearray(png.encode_png(img)), 8, 8, None, None),
+            ("big", "image", bytearray(HEADERS["gif"]), W, H, None, None)]
+    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA).coalesce(1)
+    got = multimodal.image_decode_stats(media, on_error="skip").collect()
+    assert [r.media_id for r in got] == ["ok"]
+    with pytest.raises(Exception, match="media_id='big'.*decode budget"):
+        multimodal.image_decode_stats(media).collect()

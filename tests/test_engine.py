@@ -70,9 +70,9 @@ def test_arrow_is_the_only_python_boundary(spark, sf_dir, tmp_path):
     src = str(tmp_path / "tokens")
     tokens_table(spark, sf_dir).limit(8).write.parquet(src)
     q = streaming.run_to_memory(
-        streaming.stream_features(streaming.read_tokens_stream(spark, src)),
+        extract_features_df(streaming.read_tokens_stream(spark, src)),
         "plan_feats")
-    plans = {"stream_features": q._jsq.explainInternal(False)}
+    plans = {"extract_features_df stream": q._jsq.explainInternal(False)}
     q.stop()
 
     payload = bytearray(png.encode_png(np.zeros((4, 4, 3), dtype=np.uint8)))

@@ -11,7 +11,8 @@ import pyarrow as pa
 import pyspark.sql.functions as F
 import pytest
 
-from oracles import minhash_signatures_expr, simhash_expr
+from oracles import (minhash_signatures_expr, repetition_stats_expr,
+                     simhash_expr, word_shingles_window)
 from photohive_spark import dedup
 
 
@@ -92,8 +93,8 @@ def test_word_shingles_arrow_matches_window_form(spark, sf_dir):
     for frame in (docs, _edge_df(spark)):
         for k in (1, 3):
             fast = dedup.word_shingles(frame, k=k)
-            # legacy: non-distinct window form + global distinct
-            slow = dedup.word_shingles(frame, k=k, distinct=False).distinct()
+            # non-distinct window form + global distinct
+            slow = word_shingles_window(frame, k=k).distinct()
             assert fast.exceptAll(slow).count() == 0, k
             assert slow.exceptAll(fast).count() == 0, k
 
@@ -130,7 +131,7 @@ def test_repetition_arrow_one_word_batches(spark):
         src = spark.createDataFrame(rows, "doc_id string, text string") \
             .coalesce(1)
         fast = text.repetition_stats(src, id_col="doc_id")
-        ref = text.repetition_stats(src, id_col="doc_id", impl="expr")
+        ref = repetition_stats_expr(src, id_col="doc_id")
         got = sorted(map(tuple, fast.collect()))
         assert got == sorted(map(tuple, ref.collect()))
     assert [r[0] for r in got] == ["m0", "m2"]

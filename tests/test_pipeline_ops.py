@@ -7,9 +7,8 @@ import numpy as np
 import pytest
 import pyspark.sql.functions as F
 
-from oracles import fast_shingle_hashes
+from oracles import fast_shingle_hashes, repetition_stats_expr, word_token
 from photohive_spark import dedup, similarity, text
-from photohive_spark.tokenize import word_token
 
 
 @pytest.fixture(scope="module")
@@ -1177,6 +1176,6 @@ def test_repetition_stats_arrow_matches_expr(spark, sf_dir):
         .select("doc_id", "text")
     for src in (edge, docs):
         fast = text.repetition_stats(src, id_col="doc_id")
-        ref = text.repetition_stats(src, id_col="doc_id", impl="expr")
+        ref = repetition_stats_expr(src, id_col="doc_id")
         assert fast.exceptAll(ref).count() == 0
         assert ref.exceptAll(fast).count() == 0

@@ -1,6 +1,7 @@
-"""Point-in-time ops: the three as-of implementations agree with each other
-and with pandas merge_asof; zero-temporal-leakage property; backfill /
-lag-lead / sessionize vs hand-computed oracles."""
+"""Point-in-time ops: the union+window, broadcast and cogroup as-of joins
+agree with a row-by-row oracle and with each other, null probe timestamps
+included; zero-temporal-leakage property; backfill / lag-lead /
+sessionize vs hand-computed oracles."""
 
 import datetime as dt
 
@@ -49,7 +50,7 @@ def _oracle(probes_pd, snaps_pd, strict=False):
 def test_asof_three_impls_match_oracle(spark, strict):
     pdf, sdf, probes_pd, snaps_pd = _mk(spark)
     want = _oracle(probes_pd, snaps_pd, strict)
-    for impl in (pit.asof_join, pit.asof_join_broadcast, pit.asof_join_pandas):
+    for impl in (pit.asof_join, pit.asof_join_broadcast, pit.asof_join_cogroup):
         got = impl(pdf, sdf, "doc_id", "probe_ts", "snapshot_ts",
                    ["feat"], strict=strict).collect()
         assert len(got) == len(probes_pd), impl.__name__
@@ -155,7 +156,7 @@ def test_asof_join_bucketed_zero_shuffle(spark, tmp_path):
                                      "probe_ts", "snap_ts", ["score"])
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert plan.count("Exchange") == 0, plan
-        plain = out2 = pit.asof_join_pandas(
+        out2 = pit.asof_join_cogroup(
             probes, snaps, "user_id", "probe_ts", "snap_ts", ["score"])
         assert out2._jdf.queryExecution().executedPlan().toString() \
             .count("Exchange") == 2
@@ -167,3 +168,39 @@ def test_asof_join_bucketed_zero_shuffle(spark, tmp_path):
         assert got == want and len(got) == 2000
     finally:
         spark.sql("drop database if exists b5 cascade")
+
+
+@pytest.mark.parametrize("strict", [False, True])
+def test_null_probe_ts_gets_no_match(spark, tmp_path, strict):
+    """A probe whose timestamp is null keeps its row and gets a null match
+    in every as-of form. The cogroup form used to fail the whole task:
+    pandas' merge_asof rejects null keys."""
+    t0 = dt.datetime(2026, 1, 1)
+    sec = lambda s: t0 + dt.timedelta(seconds=s)  # noqa: E731
+    probes = spark.createDataFrame(
+        [("a", sec(10), 0), ("a", None, 1), ("b", None, 2), ("c", t0, 3),
+         ("a", sec(5), 4)],
+        "doc_id string, probe_ts timestamp, probe_id long")
+    snaps = spark.createDataFrame(
+        [("a", t0, 1.0), ("a", sec(5), 2.0), ("b", t0, 3.0)],
+        "doc_id string, snapshot_ts timestamp, feat double")
+    want = {0: (sec(5), 2.0), 1: (None, None), 2: (None, None),
+            3: (None, None), 4: (t0, 1.0) if strict else (sec(5), 2.0)}
+    spark.sql(f"create database if not exists pn "
+              f"location '{tmp_path / 'wh'}'")
+    try:
+        pit.write_bucketed(probes, "pn.p", "doc_id", 4)
+        pit.write_bucketed(snaps, "pn.s", "doc_id", 4)
+        forms = {
+            f.__name__: f(probes, snaps, "doc_id", "probe_ts", "snapshot_ts",
+                          ["feat"], strict=strict)
+            for f in (pit.asof_join, pit.asof_join_broadcast,
+                      pit.asof_join_cogroup)}
+        forms["asof_join_bucketed"] = pit.asof_join_bucketed(
+            spark, "pn.p", "pn.s", "doc_id", "probe_ts", "snapshot_ts",
+            ["feat"], strict=strict)
+        for name, df in forms.items():
+            got = {r.probe_id: (r.matched_ts, r.feat) for r in df.collect()}
+            assert got == want, name
+    finally:
+        spark.sql("drop database if exists pn cascade")

@@ -152,3 +152,26 @@ def test_fast_hash_dedup_stages_do_not_shuffle(spark, sf_dir, op):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan, plan
     assert "Exchange" not in plan and "Window" not in plan, plan
+
+
+def test_no_pandas_udf_in_source():
+    """Every Python stage of the package and of __spark_entry__.py
+    crosses on Arrow: no mapInPandas or applyInPandas call anywhere, and the one
+    pandas UDF left is the stream sessionizer's applyInPandasWithState
+    (stateful grouping has no Arrow form)."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    found = []
+    for path in [*sorted((root / "photohive_spark").glob("*.py")),
+                 root / "__spark_entry__.py"]:
+        src = path.read_text()
+        for name in ("mapInPandas(", "applyInPandas("):
+            if name in src:
+                found.append(f"{path.name}: {name}")
+        for fn in ast.walk(ast.parse(src)):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) and \
+                    "applyInPandasWithState(" in ast.get_source_segment(src, fn):
+                found.append(f"{path.name}:{fn.name}")
+    assert found == ["streaming.py:sessionize_stream"], found

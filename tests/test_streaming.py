@@ -17,7 +17,7 @@ def test_stream_features_equal_batch(spark, sf_dir, tmp_path):
     toks.repartition(3).write.parquet(src)
 
     stream = streaming.read_tokens_stream(spark, src, max_files_per_trigger=1)
-    streaming.run_to_memory(streaming.stream_features(stream), "feat_stream")
+    streaming.run_to_memory(extract_features_df(stream), "feat_stream")
     got = {r.doc_id: r for r in spark.sql("select * from feat_stream").collect()}
 
     want = {r.doc_id: r
@@ -391,7 +391,7 @@ def test_image_report_stream_equals_batch(spark, tmp_path):
     media.repartition(3).write.parquet(src)
 
     stream = streaming.read_media_stream(spark, src, max_files_per_trigger=1)
-    streaming.run_to_memory(streaming.image_report_stream(stream),
+    streaming.run_to_memory(multimodal.image_report(stream, mode="real"),
                             "img_stream")
     got = {r.media_id: r
            for r in spark.sql("select * from img_stream").collect()}
@@ -534,7 +534,7 @@ def test_countmin_stream_equals_batch(spark, sf_dir, tmp_path):
          .coalesce(1).write.mode("append").parquet(src))
     stream = streaming.read_tokens_stream(spark, src, max_files_per_trigger=1)
     streaming.run_to_memory(
-        streaming.countmin_stream(stream, width=64),
+        sketch.countmin(stream, width=64),
         "cms_stream", mode="complete")
     got = {(r.d, r.bucket): r.cnt
            for r in spark.sql("select * from cms_stream").collect()}

@@ -4,8 +4,9 @@ input_hint schema invariants."""
 import duckdb
 import numpy as np
 
-from photohive_spark.tokenize import (DUCKDB_TOKENS_SQL, tokenize_text,
-                                      tokens_table, validate_tokens)
+from oracles import tokenize_text
+from photohive_spark.tokenize import (DUCKDB_TOKENS_SQL, tokens_table,
+                                      validate_tokens)
 
 
 def test_three_way_parity(spark, sf_dir):
@@ -63,7 +64,7 @@ def test_tokenize_plan_shape(spark, sf_dir):
 def test_fast_tokenizer_matches_expr_form(spark, sf_dir):
     """Full-corpus exact parity: the vectorized numpy tokenizer ==
     the original all-Catalyst SPARK_TOKENS_EXPR form, every row."""
-    from photohive_spark.tokenize import tokens_table_expr
+    from oracles import tokens_table_expr
     fast = tokens_table(spark, sf_dir).orderBy("doc_id").collect()
     slow = tokens_table_expr(spark, sf_dir).orderBy("doc_id").collect()
     assert len(fast) == len(slow)
