@@ -95,7 +95,7 @@ def main() -> None:
     # query-side metadata lives NEXT TO the data (like _lineage): a reader
     # needs the same planes/centroids the writer used. Written through the
     # Hadoop FileSystem API so hdfs://... / s3a://... outputs work — a local
-    # open() would fail on the driver AFTER the expensive index write.
+    # file write would fail on the driver AFTER the expensive index write.
     from photohive_spark.lineage import hadoop_write_text
     hadoop_write_text(spark, os.path.join(args.output, "_ann_meta.json"),
                       json.dumps(meta))

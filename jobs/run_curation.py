@@ -29,9 +29,10 @@ Stage ORDER is deliberate: the quality gate is the cheapest test and
 shrinks everything downstream; exact dedup (one groupBy) runs before the
 shingle fan-out so identical re-scrapes never reach MinHash; the split
 comes last so leakage cannot re-enter across it. The expensive near-dup
-pair stage checkpoints to --pairs-dir exactly like jobs/run_dedup.py
-(parameter + corpus fingerprint; resume reuses the pairs, not just the
-output buckets).
+pair stage checkpoints to --pairs-dir through lineage.checkpointed, like
+jobs/run_dedup.py: resume reuses the pairs, not just the output buckets,
+when the parameters and corpus (docs path + row count) recorded with them
+match this run's, and fails with ValueError when they differ.
 
 Usage:
 
@@ -126,39 +127,12 @@ def main() -> None:
               "max_bucket_size": args.max_bucket_size,
               "min_quality": args.min_quality,
               "docs": args.docs, "n_docs": n_docs}
-    pairs_reused = False
-    if args.pairs_dir and lineage.hadoop_exists(
-            spark, f"{args.pairs_dir}/_SUCCESS"):
-        meta_path = f"{args.pairs_dir}/_pairs_meta.json"
-        recorded = (json.loads(lineage.hadoop_read_text(spark, meta_path))
-                    if lineage.hadoop_exists(spark, meta_path) else None)
-        if recorded != params:
-            raise SystemExit(
-                f"--pairs-dir {args.pairs_dir} was built with {recorded}, "
-                f"current run wants {params}; delete the dir or match "
-                f"the parameters")
-        pairs = spark.read.parquet(args.pairs_dir)
-        pairs_reused = True
-    else:
-        pairs = dedup.minhash_lsh_pairs(
+    pairs, pairs_reused = lineage.checkpointed(
+        spark, args.pairs_dir, params, lambda: dedup.minhash_lsh_pairs(
             docs_e, threshold=args.threshold, k=args.k,
-            max_bucket_size=args.max_bucket_size, hash_fn=args.hash)
-        if args.pairs_dir:
-            pairs.write.mode("overwrite").parquet(args.pairs_dir)
-            lineage.hadoop_write_text(
-                spark, f"{args.pairs_dir}/_pairs_meta.json",
-                json.dumps(params))
-            pairs = spark.read.parquet(args.pairs_dir)
-        else:
-            pairs = pairs.localCheckpoint()
+            max_bucket_size=args.max_bucket_size, hash_fn=args.hash))
     n_pairs = pairs.count()
-    dup_nodes = (pairs.select(F.col("id_a").alias("doc_id"))
-                 .union(pairs.select(F.col("id_b").alias("doc_id")))
-                 .distinct())
-    labels = dedup.connected_components(pairs, dup_nodes,
-                                        method=args.cc_method)
-    drop = labels.where(F.col("doc_id") != F.col("component")) \
-                 .select("doc_id")
+    drop = dedup.near_dup_drops(pairs, "doc_id", args.cc_method)
     docs_n = docs_e.join(drop, on="doc_id", how="left_anti")
     n_near = docs_n.count()
 

@@ -20,8 +20,10 @@ Usage:
 ``--hash fast`` (default) hashes words with xxhash64 for 10^12-doc
 corpora; ``poly`` is the DuckDB-oracle-parity hash. Either way the
 MinHash signatures are one shuffle-free Arrow stage. Verified pairs are
-exact either way (the string-Jaccard verify stage is shared). Prints one
-JSON line with run totals.
+exact either way (the string-Jaccard verify stage is shared). A re-run
+reuses the ``--pairs-dir`` pairs (lineage.checkpointed) if they were made
+with this run's parameters and corpus (docs path + row count), and fails
+with ValueError if not. Prints one JSON line with run totals.
 """
 
 from __future__ import annotations
@@ -61,53 +63,16 @@ def main() -> None:
         .withColumn("doc_id", F.col("doc_id").cast("string"))
     n_docs = docs.count()
 
-    # pairs checkpoint: Hadoop-FS detection (os.path.exists never sees
-    # hdfs://s3a:// paths) + a parameter fingerprint — resuming with
-    # different threshold/k/hash/cap against stale pairs would silently
-    # mislabel the output, so mismatches fail loudly. The fingerprint also
-    # pins the CORPUS (docs path + row count): resuming with a different
-    # --docs against an existing pairs checkpoint would otherwise apply
-    # another corpus's near-dup pairs and silently mis-deduplicate.
     params = {"threshold": args.threshold, "k": args.k, "hash": args.hash,
               "max_bucket_size": args.max_bucket_size,
               "docs": args.docs, "n_docs": n_docs}
-    pairs_reused = False
-    if args.pairs_dir and lineage.hadoop_exists(
-            spark, f"{args.pairs_dir}/_SUCCESS"):
-        meta_path = f"{args.pairs_dir}/_pairs_meta.json"
-        recorded = (json.loads(lineage.hadoop_read_text(spark, meta_path))
-                    if lineage.hadoop_exists(spark, meta_path) else None)
-        if recorded != params:
-            raise SystemExit(
-                f"--pairs-dir {args.pairs_dir} was built with {recorded}, "
-                f"current run wants {params}; delete the dir or match "
-                f"the parameters")
-        pairs = spark.read.parquet(args.pairs_dir)
-        pairs_reused = True
-    else:
-        pairs = dedup.minhash_lsh_pairs(
+    pairs, pairs_reused = lineage.checkpointed(
+        spark, args.pairs_dir, params, lambda: dedup.minhash_lsh_pairs(
             docs, threshold=args.threshold, k=args.k,
-            max_bucket_size=args.max_bucket_size,
-            hash_fn=args.hash)
-        if args.pairs_dir:
-            pairs.write.mode("overwrite").parquet(args.pairs_dir)
-            lineage.hadoop_write_text(
-                spark, f"{args.pairs_dir}/_pairs_meta.json",
-                json.dumps(params))
-            pairs = spark.read.parquet(args.pairs_dir)
-        else:
-            pairs = pairs.localCheckpoint()
+            max_bucket_size=args.max_bucket_size, hash_fn=args.hash))
     n_pairs = pairs.count()
 
-    # only docs that appear in a pair need cluster labels; everything else
-    # is a singleton and survives by definition (keeps the CC input small)
-    dup_nodes = (pairs.select(F.col("id_a").alias("doc_id"))
-                 .union(pairs.select(F.col("id_b").alias("doc_id")))
-                 .distinct())
-    labels = dedup.connected_components(pairs, dup_nodes,
-                                        method=args.cc_method)
-    drop = labels.where(F.col("doc_id") != F.col("component")) \
-                 .select("doc_id")
+    drop = dedup.near_dup_drops(pairs, "doc_id", args.cc_method)
     n_drop = drop.count()
     clean = docs.join(drop, on="doc_id", how="left_anti")
 

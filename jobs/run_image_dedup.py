@@ -21,9 +21,11 @@ Usage:
       [--on-error skip]
 
 ``--hashes-dir`` checkpoints the decode+hash stage (the expensive pass:
-every payload is decoded once); a resumed run reuses it after a
-parameter/corpus fingerprint check, exactly like run_dedup's
---pairs-dir. Prints one JSON line with run totals.
+every payload is decoded once) through lineage.checkpointed, like
+run_dedup's --pairs-dir: a resumed run reuses it when the recorded
+corpus (media path + row count) and --on-error match this run's, and
+fails with ValueError when they differ. Prints one JSON line with run
+totals.
 """
 
 from __future__ import annotations
@@ -75,30 +77,9 @@ def main() -> None:
 
     params = {"media": args.media, "n_media": n_media,
               "on_error": args.on_error}
-    hashes_reused = False
-    if args.hashes_dir and lineage.hadoop_exists(
-            spark, f"{args.hashes_dir}/_SUCCESS"):
-        meta_path = f"{args.hashes_dir}/_hashes_meta.json"
-        recorded = (json.loads(lineage.hadoop_read_text(spark, meta_path))
-                    if lineage.hadoop_exists(spark, meta_path) else None)
-        if recorded != params:
-            raise SystemExit(
-                f"--hashes-dir {args.hashes_dir} was built with "
-                f"{recorded}, current run wants {params}; delete the "
-                f"dir or match the parameters")
-        hashes = spark.read.parquet(args.hashes_dir)
-        hashes_reused = True
-    else:
-        hashes = multimodal.image_phash(media, mode="real",
-                                        on_error=args.on_error)
-        if args.hashes_dir:
-            hashes.write.mode("overwrite").parquet(args.hashes_dir)
-            lineage.hadoop_write_text(
-                spark, f"{args.hashes_dir}/_hashes_meta.json",
-                json.dumps(params))
-            hashes = spark.read.parquet(args.hashes_dir)
-        else:
-            hashes = hashes.localCheckpoint()
+    hashes, hashes_reused = lineage.checkpointed(
+        spark, args.hashes_dir, params, lambda: multimodal.image_phash(
+            media, mode="real", on_error=args.on_error))
     n_hashed = hashes.count()
 
     pairs = dedup.hamming_pairs(hashes, "phash", "media_id",
@@ -108,14 +89,7 @@ def main() -> None:
         .localCheckpoint()
     n_pairs = pairs.count()
 
-    dup_nodes = (pairs.select(F.col("id_a").alias("media_id"))
-                 .union(pairs.select(F.col("id_b").alias("media_id")))
-                 .distinct())
-    labels = dedup.connected_components(pairs, dup_nodes,
-                                        id_col="media_id",
-                                        method=args.cc_method)
-    drop = labels.where(F.col("media_id") != F.col("component")) \
-                 .select("media_id")
+    drop = dedup.near_dup_drops(pairs, "media_id", args.cc_method)
     n_drop = drop.count()
     # restrict to rows that actually hashed: with on_error='skip',
     # undecodable payloads never reach the pair stage, and a plain

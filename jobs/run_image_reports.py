@@ -15,7 +15,9 @@ Usage (multi-executor cluster — the sandbox runs the same command with
 binary, meta_*). ``--mode real`` decodes PNG payloads via the pure-stdlib
 codec (png.py); ``fake`` exercises the full plumbing with the
 deterministic pseudo-decode. Resume is implicit via lineage's per-bucket
-manifests (re-run skips completed buckets). Prints one JSON line.
+manifests: a re-run decodes only the media of uncommitted buckets.
+``--mode`` is pinned by lineage.pin for the life of the output; resuming
+with the other mode fails with ValueError. Prints one JSON line.
 """
 
 from __future__ import annotations
@@ -38,8 +40,6 @@ def main() -> None:
     ap.add_argument("--n-buckets", type=int, default=16)
     args = ap.parse_args()
 
-    import os
-
     import pyspark.sql.functions as F
 
     from photohive_spark import lineage, multimodal
@@ -51,35 +51,15 @@ def main() -> None:
     # pin --mode for the lifetime of the output dir: resuming a fake-mode
     # run with --mode real (or vice versa) would silently mix pseudo and
     # real features in one schema-identical table
-    os.makedirs(os.path.join(args.output, "_lineage"), exist_ok=True)
-    mode_path = os.path.join(args.output, "_lineage", "job_meta.json")
-    if os.path.exists(mode_path):
-        with open(mode_path) as fh:
-            recorded = json.load(fh)["mode"]
-        if recorded != args.mode:
-            raise SystemExit(
-                f"{args.output} was started with --mode {recorded}; "
-                f"resuming with --mode {args.mode} would mix decode "
-                f"semantics — delete the dir or match the mode")
-    else:
-        with open(mode_path, "w") as fh:
-            json.dump({"mode": args.mode}, fh)
+    lineage.pin(spark, f"{args.output}/_lineage/job_meta.json",
+                {"mode": args.mode})
 
     media = spark.read.parquet(args.media) \
         .withColumn("media_id", F.col("media_id").cast("string")) \
         .where(F.col("kind") == "image")
-    # resume optimization: a bucket filter above image_report's
-    # mapInArrow cannot be pushed below it, so without this pre-filter a
-    # resume would RE-DECODE the whole corpus just to write the missing
-    # buckets. bucket_of is the same deterministic hash run_resumable
-    # partitions by, computed on the pass-through media_id, so filtering
-    # the input to missing buckets is exactly equivalent — and skips the
-    # decode+FFT (the dominant cost) for completed ones.
-    missing = [b for b in range(args.n_buckets)
-               if b not in lineage.completed_buckets(args.output)]
-    if 0 < len(missing) < args.n_buckets:
-        media = media.where(
-            lineage.bucket_of("media_id", args.n_buckets).isin(missing))
+    # resume skips the decode+FFT (the dominant cost) of committed buckets
+    media = lineage.drop_done_buckets(media, args.output, "media_id",
+                                      args.n_buckets)
     reports = multimodal.image_report(media, mode=args.mode,
                                       on_error=args.on_error)
     entries = lineage.run_resumable(spark, reports, args.output,

@@ -48,17 +48,9 @@ def main() -> None:
     t0 = time.time()
     toks = spark.read.parquet(args.tokens)
     toks = validate_tokens(toks, args.min_tok, args.max_tok)
-    # resume optimization: the bucket filter run_resumable applies sits
-    # ABOVE extract_features' mapInArrow and cannot be pushed below it —
-    # without this input pre-filter a resume re-runs the feature kernels
-    # for the whole corpus just to write the missing buckets. bucket_of
-    # is the identical deterministic hash on the pass-through doc_id, so
-    # filtering the input to missing buckets is exactly equivalent.
-    missing = [b for b in range(args.n_buckets)
-               if b not in lineage.completed_buckets(args.output)]
-    if 0 < len(missing) < args.n_buckets:
-        toks = toks.where(
-            lineage.bucket_of("doc_id", args.n_buckets).isin(missing))
+    # resume skips the feature kernels of committed buckets
+    toks = lineage.drop_done_buckets(toks, args.output, "doc_id",
+                                     args.n_buckets)
     if args.rebalance:
         toks = rebalance_by_cost(toks)
     kernel_acc = spark.sparkContext.accumulator(0.0)

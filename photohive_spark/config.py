@@ -58,8 +58,6 @@ class EngineConfig:
 
     # --- Spark-side scale knobs (no reference counterpart) ---
     shuffle_partitions: int = 32
-    salt_buckets: int = 8               # skew salting for hot doc_ids
-    long_tail_ntok: int = 8192          # n_tok above this gets its own salt space
     # Arrow batch sizing: the length-grouped batch kernels scale with GROUP
     # size, and groups live inside one Arrow batch — 256-row batches gave
     # ~4-row groups on an LLM-length corpus and left 2.5x throughput on the

@@ -162,9 +162,7 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
                       num_perm: int = NUM_PERM, bands: int = LSH_BANDS,
                       threshold: float = 0.5,
                       max_bucket_size: int | None = None,
-                      materialize: str = "local_checkpoint",
-                      hash_fn: str = "poly",
-                      cache_handle: list | None = None) -> DataFrame:
+                      hash_fn: str = "poly") -> DataFrame:
     """Candidate near-dup pairs via LSH banding, verified with exact
     shingle Jaccard. Returns (id_a, id_b, jaccard) with id_a < id_b,
     jaccard >= threshold.
@@ -233,33 +231,8 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
                 .distinct())
     # materialize candidates once: verify_jaccard consumes them twice (id
     # semi-join + intersection join) and recomputing the whole LSH banding
-    # subtree per consumer doubles the cost. Strategy is a knob because the
-    # tradeoffs differ by deployment:
-    # - "local_checkpoint" (default, right for local/ephemeral runs):
-    #   truncates lineage AND lets the ContextCleaner release blocks when
-    #   the plan is GC'd (r1 leaked an unreleased persist()); BUT losing an
-    #   executor holding checkpoint blocks is unrecoverable — no recompute
-    #   path.
-    # - "checkpoint": reliable checkpoint to spark.checkpoint.dir —
-    #   survives executor loss; costs an fs write. Right for multi-node
-    #   clusters.
-    # - "persist": keeps lineage (recomputable on block loss). Pass
-    #   ``cache_handle=[]`` to receive the persisted candidates DataFrame
-    #   (appended to the list) so you can ``handle.unpersist()`` after
-    #   materializing the result — an attribute on the returned DataFrame
-    #   would be lost on the first downstream transformation, which is why
-    #   the out-param exists. Without a handle, blocks are still released
-    #   by the ContextCleaner once the plan is GC'd, just not promptly.
-    if materialize == "local_checkpoint":
-        cand = cand.localCheckpoint(eager=False)
-    elif materialize == "checkpoint":
-        cand = cand.checkpoint(eager=False)
-    elif materialize == "persist":
-        cand = cand.persist()
-    elif materialize != "none":
-        raise ValueError(f"unknown materialize strategy {materialize!r}")
-    if materialize != "none" and cache_handle is not None:
-        cache_handle.append(cand)
+    # subtree per consumer doubles the cost
+    cand = cand.localCheckpoint(eager=False)
     return verify_jaccard(cand, docs, text_col, id_col, k, threshold)
 
 
@@ -605,6 +578,16 @@ def hamming_pairs(hashed: DataFrame, hash_col: str, id_col: str,
     else:
         cand = _self_join(keyed).distinct()
     return cand.where(F.col("hamming") <= max_hamming)
+
+
+def near_dup_drops(pairs: DataFrame, id_col: str, method: str) -> DataFrame:
+    """(id_col) of every pair endpoint that is not its component's min-id
+    representative: the rows near-dup dedup drops. Only endpoints need
+    labels; an id in no pair is a singleton and survives by definition."""
+    nodes = (pairs.selectExpr(f"id_a as {id_col}")
+             .union(pairs.selectExpr(f"id_b as {id_col}")).distinct())
+    return (connected_components(pairs, nodes, id_col=id_col, method=method)
+            .where(F.col(id_col) != F.col("component")).select(id_col))
 
 
 def connected_components(pairs: DataFrame, nodes: DataFrame,

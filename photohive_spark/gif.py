@@ -155,15 +155,19 @@ def decode_gif(data: bytes) -> dict:
     """GIF bytes -> {width, height, frames: [(H, W, 3) uint8, ...],
     durations_ms: [...]} — frames composited onto the logical screen
     with disposal methods applied (what a viewer displays)."""
+    return _decode(data, first_only=False)
+
+
+def _decode(data: bytes, first_only: bool) -> dict:
     try:
-        return _decode_gif(data)
+        return _decode_gif(data, first_only)
     except (struct.error, IndexError) as e:
         # fail-loud contract: truncated headers/descriptors surface as
         # ValueError like every other malformed-stream path
         raise ValueError(f"truncated GIF stream: {e}") from None
 
 
-def _decode_gif(data: bytes) -> dict:
+def _decode_gif(data: bytes, first_only: bool) -> dict:
     if data[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF: bad signature")
     w, h = struct.unpack("<HH", data[6:10])
@@ -240,8 +244,10 @@ def _decode_gif(data: bytes) -> dict:
             mask = rows == transparent
             rgb = np.where(mask[:, :, None], prev_region, rgb)
         screen[iy:iy + ih, ix:ix + iw] = rgb
-        frames.append(screen.copy())
+        frames.append(screen if first_only else screen.copy())
         durations.append(delay_ms)
+        if first_only:
+            break
         if disposal == 2:
             # Restore-to-background POLICY: the region is always reset
             # to the logical-screen background COLOR, including for
@@ -268,10 +274,10 @@ def _decode_gif(data: bytes) -> dict:
 
 def decode_rgb(data: bytes) -> dict:
     """GIF bytes -> the FIRST frame as the shared planar float contract
-    (png.planes_from_uint8)."""
+    (png.planes_from_uint8); decoding stops after that frame."""
     from .png import planes_from_uint8
 
-    return planes_from_uint8(decode_gif(data)["frames"][0])
+    return planes_from_uint8(_decode(data, first_only=True)["frames"][0])
 
 
 def _lzw_encode(idx: np.ndarray, min_code: int) -> bytes:

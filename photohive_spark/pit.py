@@ -44,7 +44,8 @@ def asof_join(probes: DataFrame, snapshots: DataFrame, key: str,
     """
     payload = F.struct(F.col(snapshot_ts).alias("matched_ts"),
                        *[F.col(c) for c in value_cols])
-    snaps = snapshots.select(
+    # a snapshot of unknown time matches no probe (a null _ts sorts first)
+    snaps = snapshots.where(F.col(snapshot_ts).isNotNull()).select(
         F.col(key).alias("_k"),
         F.col(snapshot_ts).alias("_ts"),
         F.lit(0).alias("_side"),

@@ -71,7 +71,7 @@ def rebalance_by_cost(df: DataFrame, cost_col: str = "n_tok",
     Hash-repartition on a full-width per-row key (hash of doc_id + cost —
     NOT pre-modded to n values, which would double-hash n balls into n bins
     and leave ~1/e of partitions empty): each doc lands in a pseudo-random
-    partition, so long-tail docs (n_tok >= cfg.long_tail_ntok) spread
+    partition, so the few docs with a long-tail ``cost_col`` spread
     ~uniformly instead of clumping wherever the input file layout put them.
     (A range partition on a cost tier would do the OPPOSITE — sort all
     heavy rows into the same final range.) One shuffle, paid only when the

@@ -9,7 +9,7 @@ import zlib
 import numpy as np
 import pytest
 
-from photohive_spark import multimodal, png
+from photohive_spark import gif, multimodal, png
 
 
 def _png_chunk(typ: bytes, body: bytes) -> bytes:
@@ -77,3 +77,30 @@ def test_over_budget_row_follows_on_error(spark):
     assert [r.media_id for r in got] == ["ok"]
     with pytest.raises(Exception, match="media_id='big'.*decode budget"):
         multimodal.image_decode_stats(media).collect()
+
+
+def _peak(fn, *args):
+    tracemalloc.start()
+    try:
+        out = fn(*args)
+        return out, tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+
+
+def test_gif_decode_rgb_keeps_only_the_first_frame():
+    """decode_rgb returns frame 0 and stops decoding there: an animation's
+    peak stays that of its first frame. It used to composite and keep
+    every frame (~4x the one-frame peak for these 24 frames)."""
+    y, x = np.mgrid[0:300, 0:300]
+    frames = [((x // 7 + y // 5 + i) % 200).astype(np.uint8)
+              for i in range(24)]
+    anim = gif.encode_gif(frames)
+    first, one_peak = _peak(gif.decode_rgb, gif.encode_gif(frames[0]))
+    got, anim_peak = _peak(gif.decode_rgb, anim)
+    want = png.planes_from_uint8(gif.decode_gif(anim)["frames"][0])
+    assert got.keys() == want.keys()
+    for k in want:
+        assert np.array_equal(got[k], want[k]), k
+        assert np.array_equal(got[k], first[k]), k
+    assert anim_peak < 1.25 * one_peak, (anim_peak, one_peak)

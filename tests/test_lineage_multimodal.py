@@ -95,6 +95,69 @@ def test_stage_timings_in_manifest(spark, sf_dir, tmp_path):
             e["stage_s"]["kernel_s"] + 0.05
 
 
+def test_resume_state_on_a_file_uri(spark, tmp_path, monkeypatch):
+    """A file:// output keeps its resume state next to its data: the
+    manifests count the real rows and every reader agrees with a
+    plain-path run. Local file calls used to put meta.json and the
+    manifests in a stray 'file:' directory under the working directory,
+    each recording rows 0, and read_result then found no rows."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    df = spark.range(100).selectExpr("cast(id as string) as doc_id",
+                                     "id as v")
+    plain, uri = str(tmp_path / "plain"), (tmp_path / "uri").as_uri()
+    want = lineage.run_resumable(spark, df, plain, n_buckets=4)
+    got = lineage.run_resumable(spark, df, uri, n_buckets=4)
+    assert [e["rows"] for e in got] == [e["rows"] for e in want]
+    assert sum(e["rows"] for e in got) == 100
+    assert lineage.completed_buckets(uri) == \
+        lineage.completed_buckets(plain) == {0, 1, 2, 3}
+
+    def rows(out):
+        return sorted(tuple(r) for r in lineage.read_result(spark, out)
+                      .select("doc_id", "v").collect())
+
+    def table(out):
+        return [(r.bucket, r.rows) for r in
+                lineage.lineage_table(spark, out).orderBy("bucket").collect()]
+
+    assert rows(uri) == rows(plain) and len(rows(uri)) == 100
+    assert table(uri) == table(plain)
+    assert lineage.run_resumable(spark, df, uri, n_buckets=4) == []
+    assert os.listdir(cwd) == []
+
+
+def test_checkpointed_builds_reuses_and_rejects(spark, tmp_path):
+    """lineage.checkpointed: the first call builds and records, a second
+    reuses without building, other params raise naming both sets, and
+    no path means a local checkpoint of a fresh build."""
+    built = []
+
+    def build():
+        built.append(1)
+        return spark.range(5).selectExpr("id", "id * 2 as v")
+
+    want = [(i, 2 * i) for i in range(5)]
+    path, params = str(tmp_path / "ckpt"), {"k": 3, "docs": "corpus"}
+    df, reused = lineage.checkpointed(spark, path, params, build)
+    assert (reused, len(built)) == (False, 1)
+    assert sorted(map(tuple, df.collect())) == want
+
+    df, reused = lineage.checkpointed(spark, path, dict(params), build)
+    assert (reused, len(built)) == (True, 1)
+    assert sorted(map(tuple, df.collect())) == want
+
+    with pytest.raises(ValueError, match=r"'k': 3.*'k': 4"):
+        lineage.checkpointed(spark, path, {**params, "k": 4}, build)
+    assert len(built) == 1
+
+    df, reused = lineage.checkpointed(spark, None, params, build)
+    assert (reused, len(built)) == (False, 2)
+    assert sorted(map(tuple, df.collect())) == want
+    assert "ExistingRDD" in df._jdf.queryExecution().executedPlan().toString()
+
+
 @pytest.fixture(scope="module")
 def media(spark):
     rows = [

@@ -173,8 +173,10 @@ def test_asof_join_bucketed_zero_shuffle(spark, tmp_path):
 @pytest.mark.parametrize("strict", [False, True])
 def test_null_probe_ts_gets_no_match(spark, tmp_path, strict):
     """A probe whose timestamp is null keeps its row and gets a null match
-    in every as-of form. The cogroup form used to fail the whole task:
-    pandas' merge_asof rejects null keys."""
+    in every as-of form, and a snapshot whose timestamp is null matches no
+    probe. The cogroup form used to fail the whole task (pandas'
+    merge_asof rejects null keys), and the union+window forms handed the
+    null-time snapshot's values to every later probe of its key."""
     t0 = dt.datetime(2026, 1, 1)
     sec = lambda s: t0 + dt.timedelta(seconds=s)  # noqa: E731
     probes = spark.createDataFrame(
@@ -182,7 +184,8 @@ def test_null_probe_ts_gets_no_match(spark, tmp_path, strict):
          ("a", sec(5), 4)],
         "doc_id string, probe_ts timestamp, probe_id long")
     snaps = spark.createDataFrame(
-        [("a", t0, 1.0), ("a", sec(5), 2.0), ("b", t0, 3.0)],
+        [("a", t0, 1.0), ("a", sec(5), 2.0), ("b", t0, 3.0),
+         ("c", None, 7.0)],
         "doc_id string, snapshot_ts timestamp, feat double")
     want = {0: (sec(5), 2.0), 1: (None, None), 2: (None, None),
             3: (None, None), 4: (t0, 1.0) if strict else (sec(5), 2.0)}
@@ -194,8 +197,8 @@ def test_null_probe_ts_gets_no_match(spark, tmp_path, strict):
         forms = {
             f.__name__: f(probes, snaps, "doc_id", "probe_ts", "snapshot_ts",
                           ["feat"], strict=strict)
-            for f in (pit.asof_join, pit.asof_join_broadcast,
-                      pit.asof_join_cogroup)}
+            for f in (pit.asof_join, pit.asof_join_salted,
+                      pit.asof_join_broadcast, pit.asof_join_cogroup)}
         forms["asof_join_bucketed"] = pit.asof_join_bucketed(
             spark, "pn.p", "pn.s", "doc_id", "probe_ts", "snapshot_ts",
             ["feat"], strict=strict)

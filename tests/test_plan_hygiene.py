@@ -175,3 +175,21 @@ def test_no_pandas_udf_in_source():
                     "applyInPandasWithState(" in ast.get_source_segment(src, fn):
                 found.append(f"{path.name}:{fn.name}")
     assert found == ["streaming.py:sessionize_stream"], found
+
+
+def test_resume_state_goes_through_lineage():
+    """Resume state is read and written only through lineage's Hadoop
+    FileSystem helper, so it lands next to the data on any output URI:
+    no local file call in lineage.py or a job (os.path.join is fine, and
+    so is a method named open, such as the Hadoop FileSystem's)."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    calls = re.compile(r"(?<![.\w])open\(|os\.(makedirs|listdir|replace)"
+                       r"|os\.path\.(exists|isdir)")
+    found = [f"{path.name}: {m.group(0)}"
+             for path in [root / "photohive_spark" / "lineage.py",
+                          *sorted((root / "jobs").glob("*.py"))]
+             for m in calls.finditer(path.read_text())]
+    assert found == [], found

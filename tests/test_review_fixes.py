@@ -250,22 +250,3 @@ def test_read_result_legacy_meta_without_schema(spark, tmp_path):
         json.dump(meta, fh)
     with pytest.raises(ValueError, match="legacy meta.json"):
         lineage.read_result(spark, out_dir)
-
-
-def test_minhash_materialize_strategies_agree(spark, tmp_path):
-    """All candidate-materialization strategies produce identical pairs."""
-    from photohive_spark import dedup as D
-    docs = spark.createDataFrame(
-        [("d0", "the cat sat on the mat and looked at the dog"),
-         ("d1", "the cat sat on the mat and looked at the dog"),
-         ("d2", "the cat sat on the mat and stared at the dog"),
-         ("d3", "completely different text about spark query engines")],
-        "doc_id string, text string")
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    base = sorted((r.id_a, r.id_b) for r in
-                  D.minhash_lsh_pairs(docs, threshold=0.4).collect())
-    for strat in ["checkpoint", "persist", "none"]:
-        got = sorted((r.id_a, r.id_b) for r in
-                     D.minhash_lsh_pairs(docs, threshold=0.4,
-                                         materialize=strat).collect())
-        assert got == base, strat
