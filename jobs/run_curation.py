@@ -40,7 +40,7 @@ Usage:
   spark-submit --py-files photohive_spark.zip jobs/run_curation.py \\
       --docs /path/to/documents_parquet --output /path/to/curated \\
       [--min-quality 0.3] [--threshold 0.9] [--hash fast] [--k 3] \\
-      [--max-bucket-size 1024] [--cc-method star] [--n-buckets 64] \\
+      [--max-bucket-size 1024] [--n-buckets 64] \\
       [--benchmark /path/to/benchmark_parquet] [--contam-threshold 0.5] \\
       [--val-rate 0.01] [--pairs-dir /path/to/pairs] \\
       [--max-dup-frac 0.7] [--span-k 5] \\
@@ -70,8 +70,6 @@ def main() -> None:
     ap.add_argument("--hash", choices=["fast", "poly"], default="fast")
     ap.add_argument("--k", type=int, default=3)
     ap.add_argument("--max-bucket-size", type=int, default=1024)
-    ap.add_argument("--cc-method", choices=["star", "propagate"],
-                    default="star")
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--benchmark", default=None,
                     help="parquet dir of benchmark docs (doc_id, text); "
@@ -132,7 +130,7 @@ def main() -> None:
             docs_e, threshold=args.threshold, k=args.k,
             max_bucket_size=args.max_bucket_size, hash_fn=args.hash))
     n_pairs = pairs.count()
-    drop = dedup.near_dup_drops(pairs, "doc_id", args.cc_method)
+    drop = dedup.near_dup_drops(pairs, "doc_id")
     docs_n = docs_e.join(drop, on="doc_id", how="left_anti")
     n_near = docs_n.count()
 

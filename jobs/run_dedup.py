@@ -15,7 +15,7 @@ Usage:
   spark-submit --py-files photohive_spark.zip jobs/run_dedup.py \\
       --docs /path/to/documents_parquet --output /path/to/clean \\
       [--threshold 0.9] [--hash fast] [--k 3] [--max-bucket-size 1024] \\
-      [--cc-method star] [--n-buckets 64]
+      [--n-buckets 64]
 
 ``--hash fast`` (default) hashes words with xxhash64 for 10^12-doc
 corpora; ``poly`` is the DuckDB-oracle-parity hash. Either way the
@@ -42,8 +42,6 @@ def main() -> None:
     ap.add_argument("--hash", choices=["fast", "poly"], default="fast")
     ap.add_argument("--k", type=int, default=3)
     ap.add_argument("--max-bucket-size", type=int, default=1024)
-    ap.add_argument("--cc-method", choices=["star", "propagate"],
-                    default="star")
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--pairs-dir", default=None,
                     help="optional parquet dir for the verified near-dup "
@@ -72,7 +70,7 @@ def main() -> None:
             max_bucket_size=args.max_bucket_size, hash_fn=args.hash))
     n_pairs = pairs.count()
 
-    drop = dedup.near_dup_drops(pairs, "doc_id", args.cc_method)
+    drop = dedup.near_dup_drops(pairs, "doc_id")
     n_drop = drop.count()
     clean = docs.join(drop, on="doc_id", how="left_anti")
 

@@ -16,9 +16,8 @@ Usage:
   zip -r photohive_spark.zip photohive_spark
   spark-submit --py-files photohive_spark.zip jobs/run_image_dedup.py \\
       --media /path/to/media_parquet --output /path/to/clean \\
-      [--max-hamming 6] [--bands 8] [--cc-method star] \\
-      [--n-buckets 64] [--hashes-dir /path/to/phash_checkpoint] \\
-      [--on-error skip]
+      [--max-hamming 6] [--bands 8] [--n-buckets 64] \\
+      [--hashes-dir /path/to/phash_checkpoint] [--on-error skip]
 
 ``--hashes-dir`` checkpoints the decode+hash stage (the expensive pass:
 every payload is decoded once) through lineage.checkpointed, like
@@ -43,8 +42,6 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--max-hamming", type=int, default=6)
     ap.add_argument("--bands", type=int, default=8)
-    ap.add_argument("--cc-method", choices=["star", "propagate"],
-                    default="star")
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--hashes-dir", default=None,
                     help="optional parquet checkpoint for the computed "
@@ -89,7 +86,7 @@ def main() -> None:
         .localCheckpoint()
     n_pairs = pairs.count()
 
-    drop = dedup.near_dup_drops(pairs, "media_id", args.cc_method)
+    drop = dedup.near_dup_drops(pairs, "media_id")
     n_drop = drop.count()
     # restrict to rows that actually hashed: with on_error='skip',
     # undecodable payloads never reach the pair stage, and a plain

@@ -17,8 +17,10 @@ Scale notes (100 TB):
 - MinHash: signatures need no shuffle for either hash (one Arrow stage
   per batch of docs); LSH banding via explode(bands) + self-join on band
   key — candidate generation never compares all pairs;
-- connected components propagate over the pair endpoints only, one
-  groupBy per round; the corpus's ids are shuffled once, to seed them;
+- connected components propagate labels over the pair endpoints only,
+  one groupBy per round; the corpus's ids are shuffled once, to seed
+  them. Shortcut and hook messages make deep dup chains converge in
+  logarithmic rather than linear rounds (a 1,000-node path: 17);
 - stop-word-like hot shingles would skew the shingle explode; mitigated by
   distinct-per-doc before the join and AQE skew split.
 """
@@ -580,20 +582,19 @@ def hamming_pairs(hashed: DataFrame, hash_col: str, id_col: str,
     return cand.where(F.col("hamming") <= max_hamming)
 
 
-def near_dup_drops(pairs: DataFrame, id_col: str, method: str) -> DataFrame:
+def near_dup_drops(pairs: DataFrame, id_col: str) -> DataFrame:
     """(id_col) of every pair endpoint that is not its component's min-id
     representative: the rows near-dup dedup drops. Only endpoints need
     labels; an id in no pair is a singleton and survives by definition."""
     nodes = (pairs.selectExpr(f"id_a as {id_col}")
              .union(pairs.selectExpr(f"id_b as {id_col}")).distinct())
-    return (connected_components(pairs, nodes, id_col=id_col, method=method)
+    return (connected_components(pairs, nodes, id_col=id_col)
             .where(F.col(id_col) != F.col("component")).select(id_col))
 
 
 def connected_components(pairs: DataFrame, nodes: DataFrame,
                          id_col: str = "doc_id",
-                         max_iters: int = 50,
-                         method: str = "propagate") -> DataFrame:
+                         max_iters: int = 50) -> DataFrame:
     """Connected components over near-dup pairs — the canonical 'dedup
     cluster representative' assignment downstream of minhash_lsh_pairs /
     ngram_jaccard_pairs. Every node's label converges to the smallest id
@@ -602,36 +603,40 @@ def connected_components(pairs: DataFrame, nodes: DataFrame,
     Returns (id_col, component). Nodes absent from ``pairs`` are singleton
     components labelled by themselves.
 
-    ``method="propagate"`` (default): min-label propagation over the
-    pair endpoints only — a node outside every pair can never change.
-    One groupBy over the edges and ``nodes`` seeds each endpoint with
-    its adjacency and, if it is a node, its own id, and sets the other
-    nodes aside. Each round is then one groupBy that carries every
-    endpoint's adjacency and previous label, so the convergence test
-    reads the round's own localCheckpoint (which also truncates lineage)
-    rather than joining old against new labels. Rounds = O(component
-    DIAMETER) — near-dup clusters are shallow (stars around a template),
-    so 3-5 rounds typically converge. An endpoint missing from ``nodes``
-    gets a label but never seeds one: its component is labelled by the
-    smallest id of ``nodes`` in it (and a component with no id of
-    ``nodes`` is left out).
+    Min-label propagation with shortcuts, over the pair endpoints only —
+    a node outside every pair can never change. One groupBy over the
+    edges and ``nodes`` seeds each endpoint with its adjacency and, if it
+    is a node, its own id, and sets the other nodes aside. Each round is
+    then one groupBy that carries every endpoint's adjacency and previous
+    label, so the convergence test reads the round's own localCheckpoint
+    (which also truncates lineage) rather than joining old against new
+    labels. In a round every labelled endpoint sends its label to its
+    neighbours, and an endpoint whose label changed in the previous round
+    also sends
+    - a shortcut, (label, [id]): the label's node adds the endpoint to
+      its adjacency, so it reaches the endpoint directly from then on;
+    - a hook, (old label, label): the new label jumps to the old label's
+      node, and from there to everything that node has collected.
+    Plain propagation needs one round per step of component diameter
+    (200 rounds for a 200-node path). With shortcuts, measured on
+    ``local[4]``: paths of 200 / 1,000 nodes take 13 / 17 rounds with the
+    minimum id at one end and 16 / 19 with shuffled ids, a 2,000-node
+    cycle 17, a 40x40 grid 11, a 511-node binary tree 6 (plain: 9), and
+    the benchmark's near-dup clusters, stars around a template, 2. Both
+    messages add edges inside a component only, and a round that changes
+    no label is a fixpoint over the original edges.
 
-    ``method="star"``: alternating small-star/large-star (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond") — O(log n) rounds
-    regardless of diameter, for adversarially deep dup chains where
-    propagation would need diameter rounds.
+    An endpoint missing from ``nodes`` gets a label but never seeds one:
+    its component is labelled by the smallest id of ``nodes`` in it (and
+    a component with no id of ``nodes`` is left out).
     """
-    if method == "star":
-        return _star_components(pairs, nodes, id_col, max_iters)
-    if method != "propagate":
-        raise ValueError(f"unknown method {method!r} "
-                         "(expected 'propagate' or 'star')")
     # materialize the (possibly expensive — LSH banding, jaccard verify)
     # pair-discovery subtree before the rounds
     edges = (pairs.selectExpr("id_a as src", "id_b as dst")
              .unionByName(pairs.selectExpr("id_b as src", "id_a as dst"))
              .localCheckpoint(eager=False))
-    none = f"cast(null as {edges.schema['src'].dataType.simpleString()})"
+    typ = edges.schema["src"].dataType.simpleString()
+    none, no_nbrs = f"cast(null as {typ})", f"cast(null as array<{typ}>)"
     # one row per node and per endpoint: its neighbours, and its own id
     # as its label if it is a node (null: not reached yet). Expressions
     # are SQL strings, which cost one py4j call where a Column operator
@@ -644,18 +649,28 @@ def connected_components(pairs: DataFrame, nodes: DataFrame,
              .agg(F.expr("collect_list(_nbr) as _nbrs"),
                   F.expr("min(component) as component"))
              .localCheckpoint(eager=False))
-    # a node in no pair keeps its own id; the rounds see endpoints only
+    # a node in no pair keeps its own id; the rounds see endpoints only.
+    # _old = component: round 1 sends no shortcut or hook
     alone = state.where("size(_nbrs) = 0").select(id_col, "component")
-    state = state.where("size(_nbrs) > 0")
+    state = state.where("size(_nbrs) > 0").selectExpr(
+        "*", "component as _old")
+
+    def msg(to: str, nbrs: str, label: str, old: str) -> str:
+        return (f"named_struct('{id_col}', {to}, '_nbrs', {nbrs}, "
+                f"'component', {label}, '_old', {old})")
+
+    # every endpoint emits, in one generator: its own state row (with
+    # its label before the round as _old), its label to each neighbour
+    # and, if its label changed last round, the shortcut and the hook
+    emit = (f"inline(concat("
+            f"array({msg(id_col, '_nbrs', 'component', 'component')}), "
+            f"transform(if(component is null, array(), _nbrs), "
+            f"_n -> {msg('_n', no_nbrs, 'component', none)}), "
+            f"if(_old is null or _old = component, array(), "
+            f"array({msg('component', f'array({id_col})', none, none)}, "
+            f"{msg('_old', no_nbrs, 'component', none)}))))")
     for _ in range(max_iters):
-        # each labelled endpoint sends its label to its neighbours; the
-        # state rows carry the adjacency and the label before the round
-        # (_old), so a round is one groupBy, no join
-        sent = state.where("component is not null").selectExpr(
-            f"explode(_nbrs) as {id_col}", "component")
-        state = (state.selectExpr(id_col, "_nbrs", "component",
-                                  "component as _old")
-                 .unionByName(sent, allowMissingColumns=True)
+        state = (state.selectExpr(emit)
                  .groupBy(id_col)
                  .agg(F.expr("flatten(collect_list(_nbrs)) as _nbrs"),
                       F.expr("min(component) as component"),
@@ -668,73 +683,10 @@ def connected_components(pairs: DataFrame, nodes: DataFrame,
             return alone.unionByName(state.where("component is not null")
                                      .select(id_col, "component"))
     # returning partially-propagated labels would silently split real
-    # clusters — fail loudly instead (deep chains need more rounds or the
-    # O(log n) small-star/large-star variant)
+    # clusters — fail loudly instead
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} rounds "
-        f"(component diameter exceeds max_iters; raise max_iters or use "
-        f"method='star')")
-
-
-def _star_edges_fixpoint(e: DataFrame, max_iters: int) -> tuple[DataFrame, int]:
-    """Alternate large-star / small-star on a canonical (hi > lo) edge set
-    until it stops changing. Returns (star edges, rounds used).
-
-    Invariants per round (each is two joins + two groupBys — shuffle count
-    independent of graph depth):
-    - large-star: for each node u, every STRICTLY LARGER neighbor v is
-      re-pointed at m = min(neighbors(u) + u);
-    - small-star: each edge directed hi -> lo; for each hi, all its lo
-      neighbors and hi itself re-point at the minimum lo.
-    Fixpoint = disjoint stars rooted at each component's minimum id
-    (Kiveris et al. 2014; O(log^2 n) worst case, O(log n) in practice —
-    the deep-chain property test observes ~log2(n) rounds)."""
-    e = e.localCheckpoint(eager=False)
-    prev_count = None   # carries new.count() across rounds: e is the
-    for rounds in range(1, max_iters + 1):  # unmodified prior result
-        # large-star over the undirected adjacency
-        adj = e.select("hi", "lo").unionByName(
-            e.select(F.col("lo").alias("hi"), F.col("hi").alias("lo")))
-        mins = adj.groupBy("hi").agg(F.min("lo").alias("m"))
-        large = (adj.join(mins, on="hi")
-                 .where(F.col("lo") > F.col("hi"))
-                 .select(F.col("lo").alias("hi"),
-                         F.least("hi", "m").alias("lo"))
-                 .where(F.col("hi") != F.col("lo")).distinct())
-        # small-star over larger->smaller edges
-        mins2 = large.groupBy("hi").agg(F.min("lo").alias("m"))
-        keyed = large.join(mins2, on="hi")
-        new = (keyed.where(F.col("lo") != F.col("m"))
-               .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
-               .unionByName(mins2.select("hi", F.col("m").alias("lo")))
-               .where(F.col("hi") != F.col("lo")).distinct()
-               .localCheckpoint(eager=False))
-        # set equality check, short-circuited: both sides are distinct, so
-        # equal counts + empty one-sided difference <=> equal sets (avoids
-        # a second exceptAll job every unconverged round); e's count is
-        # carried from the previous round's new.count()
-        e_count = prev_count if prev_count is not None else e.count()
-        new_count = new.count()
-        changed = (new_count != e_count) or (new.exceptAll(e).count() > 0)
-        e, prev_count = new, new_count
-        if not changed:
-            return e, rounds
-    raise RuntimeError(
-        f"star connected_components did not converge in {max_iters} rounds")
-
-
-def _star_components(pairs: DataFrame, nodes: DataFrame, id_col: str,
-                     max_iters: int) -> DataFrame:
-    e = (pairs.select(F.greatest("id_a", "id_b").alias("hi"),
-                      F.least("id_a", "id_b").alias("lo"))
-         .where(F.col("hi") != F.col("lo")).distinct())
-    stars, _ = _star_edges_fixpoint(e, max_iters)
-    members = stars.select(F.col("hi").alias(id_col),
-                           F.col("lo").alias("component"))
-    return (nodes.select(id_col).distinct()
-            .join(members, on=id_col, how="left")
-            .select(id_col,
-                    F.coalesce("component", F.col(id_col)).alias("component")))
+        f"(a component needs more rounds; raise max_iters)")
 
 
 def embedding_neardup_lsh(emb: DataFrame, id_col: str = "vec_id",

@@ -47,15 +47,6 @@ def engine_conf(cfg: EngineConfig = DEFAULT_CONFIG) -> dict[str, str]:
         "spark.sql.execution.arrow.maxBytesPerBatch": cfg.arrow_batch_bytes,
         # --- shuffle sizing; production overrides via --conf ---
         "spark.sql.shuffle.partitions": str(cfg.shuffle_partitions),
-        # parquet scan split size (r7): parameterised via env. The local
-        # default (16m) splits the harness's small multi-row-group
-        # fixture tables (e.g. a 128 MB lineitem) across the 32 local
-        # cores instead of 1-2 tasks; a real cluster scanning 100 TB
-        # wants 128m-1g splits (guide §6 — fewer, larger map tasks) and
-        # sets SPARK_GRAFT_MAX_PARTITION_BYTES or --conf accordingly.
-        # Split granularity is bounded by parquet row groups either way.
-        "spark.sql.files.maxPartitionBytes":
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
         # --- generated-code cache. The size is a static SQL conf, read
         # once per JVM, so it is set before the first query.
         # Working sets measured against the default of 100 entries: a
@@ -81,9 +72,15 @@ def get_spark(app: str = "photohive_spark",
     over them."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app).master(master or f"local[{cpus}]")
-    # harness-only: no progress bar, and the UI only when $SPARK_UI asks
+    # harness-only: no progress bar, the UI only when $SPARK_UI asks,
+    # and a 16m scan split, which spreads the harness's small
+    # multi-row-group fixture tables (e.g. a 128 MB lineitem) across the
+    # local cores instead of 1-2 tasks. A cluster job keeps Spark's 128 MB
+    # split: fewer, larger map tasks.
     harness = {"spark.ui.showConsoleProgress": "false",
-               "spark.ui.enabled": os.environ.get("SPARK_UI", "false")}
+               "spark.ui.enabled": os.environ.get("SPARK_UI", "false"),
+               "spark.sql.files.maxPartitionBytes":
+                   os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m")}
     for k, v in {**engine_conf(cfg), **harness, **(extra or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -496,44 +496,31 @@ def test_probe_cells_tiebreak_deterministic():
     assert similarity.probe_cells(cents, [1.0, 0.0], 2) == [0, 2]
 
 
-def test_star_components_deep_chain_logarithmic(spark):
-    """A 200-node path (diameter 199): min-label propagation at
-    max_iters=50 must fail loudly; small-star/large-star converges in
-    O(log n) rounds with the same (correct) labels."""
-    import pytest as _pytest
-    n = 200
-    nodes = [f"c{i:03d}" for i in range(n)]
-    chain = [(nodes[i], nodes[i + 1]) for i in range(n - 1)]
-    pairs = spark.createDataFrame(chain, "id_a string, id_b string")
-    nodes_df = spark.createDataFrame([(x,) for x in nodes], "doc_id string")
-
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(pairs, nodes_df, max_iters=50)
-
-    e = pairs.selectExpr("greatest(id_a, id_b) as hi",
-                         "least(id_a, id_b) as lo").distinct()
-    stars, rounds = dedup._star_edges_fixpoint(e, max_iters=50)
-    assert rounds <= 16, f"expected O(log2 200)~8-ish rounds, took {rounds}"
-    got = {r.doc_id: r.component
-           for r in dedup.connected_components(
-               pairs, nodes_df, method="star", max_iters=50).collect()}
-    assert got == {x: nodes[0] for x in nodes}
-
-
-def test_star_components_match_propagation_random(spark):
-    """star and propagate agree on random graphs (incl. singletons)."""
+def _path(n, typ):
+    """A path of ``n`` nodes: string ids with the minimum at one end, or
+    bigint ids shuffled along the path."""
     import random
-    rng = random.Random(13)
-    nodes = [f"m{i:02d}" for i in range(50)]
-    edges = sorted({tuple(sorted(rng.sample(nodes, 2))) for _ in range(30)})
-    pairs = spark.createDataFrame(edges, "id_a string, id_b string")
-    nodes_df = spark.createDataFrame([(x,) for x in nodes], "doc_id string")
-    want = {r.doc_id: r.component
-            for r in dedup.connected_components(pairs, nodes_df).collect()}
+    if typ == "string":
+        ids = [f"c{i:04d}" for i in range(n)]
+    else:
+        ids = list(range(10**12, 10**12 + n))
+        random.Random(n).shuffle(ids)
+    return ids, [(ids[i], ids[i + 1]) for i in range(n - 1)]
+
+
+@pytest.mark.parametrize("n,typ", [(200, "string"), (1000, "bigint")])
+def test_connected_components_deep_chain_logarithmic(spark, n, typ):
+    """A deep dup chain (diameter n - 1) converges in logarithmic rounds:
+    shortcut and hook messages let labels jump along the chain, where
+    plain propagation needs one round per step. The bigint case also
+    carries typed nulls through the round's message structs."""
+    ids, chain = _path(n, typ)
+    pairs = spark.createDataFrame(chain, f"id_a {typ}, id_b {typ}")
+    nodes_df = spark.createDataFrame([(x,) for x in ids], f"doc_id {typ}")
     got = {r.doc_id: r.component
-           for r in dedup.connected_components(
-               pairs, nodes_df, method="star").collect()}
-    assert got == want
+           for r in dedup.connected_components(pairs, nodes_df,
+                                               max_iters=24).collect()}
+    assert got == _node_seeded_union_find(ids, chain)
 
 
 def test_decontaminate_per_doc_vs_pooled(spark):

@@ -62,7 +62,8 @@ def test_get_spark_conf_is_unchanged(spark):
 
 def test_job_spark_fills_in_unset_confs_only(tmp_path):
     """A spark-submit job's session gets the engine confs that the
-    submission leaves unset, and every ``--conf`` it passes wins."""
+    submission leaves unset, every ``--conf`` it passes wins, and the
+    local harness's scan split does not leak into it."""
     import json
     import shutil
     import subprocess
@@ -83,7 +84,8 @@ def test_job_spark_fills_in_unset_confs_only(tmp_path):
         "    'spark.sql.codegen.cache.maxEntries',\n"
         "    'spark.sql.adaptive.enabled',\n"
         "    'spark.sql.execution.arrow.maxRecordsPerBatch',\n"
-        "    'spark.sql.shuffle.partitions')}))\n"
+        "    'spark.sql.shuffle.partitions',\n"
+        "    'spark.sql.files.maxPartitionBytes')}))\n"
         "s.stop()\n")
     env = {**os.environ, "PYSPARK_PYTHON": sys.executable,
            "PYTHONPATH": os.pathsep.join(
@@ -102,4 +104,7 @@ def test_job_spark_fills_in_unset_confs_only(tmp_path):
     assert got == {"spark.sql.codegen.cache.maxEntries": "2000",
                    "spark.sql.adaptive.enabled": "true",
                    "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
-                   "spark.sql.shuffle.partitions": "7"}
+                   "spark.sql.shuffle.partitions": "7",
+                   # Spark's 128 MB default: the harness's 16m split
+                   # stays local
+                   "spark.sql.files.maxPartitionBytes": "134217728b"}
