@@ -206,6 +206,41 @@ def _palette_global(h: np.ndarray, s: np.ndarray, v: np.ndarray,
     return n_par, h_avg, s_avg, v_avg, pct
 
 
+def _select_peaks(tot: np.ndarray, perp_rows, cfg: EngineConfig):
+    """The peak selection shared by _peaks_core and _peaks_core_1d.
+    ``tot``: (m, na) per-angle sums of each (na, nr) profile's first
+    nr // cutoff_ratio_denom radius bins; ``perp_rows(rows_idx, pa)`` ->
+    the (npairs, nr) profile rows at the perpendicular angles ``pa``."""
+    m, na = tot.shape
+    avg = tot.sum(axis=1) / na                              # (m,)
+    # accumulate OLDEST-first (roll 4 down to 0) — the exact FP order of
+    # convolve_circular's np.convolve inner loop; tie-heavy profiles
+    # (constant regions) make peak selection sensitive to last-ulp
+    # rounding, so the order must match for row-for-row parity
+    smooth = sum(np.roll(tot, j, axis=1) for j in (4, 3, 2, 1, 0)) / 5.0
+    mask = ((smooth > np.roll(smooth, 1, axis=1))
+            & (smooth > np.roll(smooth, -1, axis=1))
+            & (smooth > (avg * cfg.fft_streak_thresh)[:, None]))
+    rows_idx, ang_idx = np.nonzero(mask)
+    # cap 10 per row BEFORE gathering (position within each row's run)
+    bounds = np.searchsorted(rows_idx, np.arange(m + 1))
+    pos = np.arange(rows_idx.size) - bounds[rows_idx]
+    keep = pos < 10
+    rows_idx, ang_idx = rows_idx[keep], ang_idx[keep]
+    # stage 2 only for the (few) peak pairs — scanning the whole (m, na, nr)
+    # profile for first-below radii cost more than everything else combined
+    pa = (ang_idx + na // 2) % na
+    bel = perp_rows(rows_idx, pa) < cfg.magnitude_thresh
+    nr = bel.shape[1]
+    fb = np.where(bel.any(axis=1), bel.argmax(axis=1), nr)
+    zero_out = tot[rows_idx, pa] > avg[rows_idx]
+    mags = (fb.astype(np.float32) / np.float32(nr)).astype(np.float64)
+    degs = _deg_table(na)[pa]
+    ang_flat = np.where(zero_out, 0, degs).astype(np.int64)
+    mag_flat = np.where(zero_out, 0.0, mags)
+    return rows_idx, ang_flat, mag_flat
+
+
 def _peaks_core(prof: np.ndarray, cfg: EngineConfig):
     """Vectorized K.spectral_peaks across an equal-shape group — FLAT
     output (rows_idx, angle, magnitude), row-major, cap 10 per row.
@@ -229,39 +264,9 @@ def _peaks_core(prof: np.ndarray, cfg: EngineConfig):
       float32 division order replicated elementwise.
     Row-for-row parity with K.spectral_peaks is pinned by the existing
     batch-vs-perdoc tests and the frozen golden snapshot."""
-    m, na, nr = prof.shape
-    rc = nr // cfg.cutoff_ratio_denom
-    tot = prof[:, :, :rc].sum(axis=2)                       # (m, na)
-    avg = tot.sum(axis=1) / na                              # (m,)
-    # accumulate OLDEST-first (roll 4 down to 0) — the exact FP order of
-    # convolve_circular's np.convolve inner loop; tie-heavy profiles
-    # (constant regions) make peak selection sensitive to last-ulp
-    # rounding, so the order must match for row-for-row parity
-    smooth = sum(np.roll(tot, j, axis=1) for j in (4, 3, 2, 1, 0)) / 5.0
-    mask = ((smooth > np.roll(smooth, 1, axis=1))
-            & (smooth > np.roll(smooth, -1, axis=1))
-            & (smooth > (avg * cfg.fft_streak_thresh)[:, None]))
-    deg = np.array([int(180.0 * (np.float32(a) / np.float32(na)) - 90.0)
-                    for a in range(na)])
-    half = na // 2
-    rows_idx, ang_idx = np.nonzero(mask)
-    # cap 10 per row BEFORE gathering (position within each row's run)
-    bounds = np.searchsorted(rows_idx, np.arange(m + 1))
-    pos = np.arange(rows_idx.size) - bounds[rows_idx]
-    keep = pos < 10
-    rows_idx, ang_idx = rows_idx[keep], ang_idx[keep]
-    # stage 2 only for the (few) peak pairs — scanning the whole (m, na, nr)
-    # profile for first-below radii cost more than everything else combined
-    pa = (ang_idx + half) % na
-    sig = prof[rows_idx, pa]                                # (npairs, nr)
-    bel = sig < cfg.magnitude_thresh
-    fb = np.where(bel.any(axis=1), bel.argmax(axis=1), nr)
-    zero_out = tot[rows_idx, pa] > avg[rows_idx]
-    mags = (fb.astype(np.float32) / np.float32(nr)).astype(np.float64)
-    degs = deg[pa]
-    ang_flat = np.where(zero_out, 0, degs).astype(np.int64)
-    mag_flat = np.where(zero_out, 0.0, mags)
-    return rows_idx, ang_flat, mag_flat
+    nr = prof.shape[2]
+    tot = prof[:, :, :nr // cfg.cutoff_ratio_denom].sum(axis=2)   # (m, na)
+    return _select_peaks(tot, lambda rows, pa: prof[rows, pa], cfg)
 
 
 def _peaks_core_1d(prof_r: np.ndarray, angle: int, cfg: EngineConfig):
@@ -272,32 +277,11 @@ def _peaks_core_1d(prof_r: np.ndarray, angle: int, cfg: EngineConfig):
     bit-identical to _peaks_core on the equivalent dense profile —
     pinned by tests — without ever allocating the (m, na, nr) zeros."""
     m, nr = prof_r.shape
-    na = cfg.angle_parts
-    rc = nr // cfg.cutoff_ratio_denom
-    tot = np.zeros((m, na))
-    tot[:, angle] = prof_r[:, :rc].sum(axis=1)
-    avg = tot.sum(axis=1) / na
-    smooth = sum(np.roll(tot, j, axis=1) for j in (4, 3, 2, 1, 0)) / 5.0
-    mask = ((smooth > np.roll(smooth, 1, axis=1))
-            & (smooth > np.roll(smooth, -1, axis=1))
-            & (smooth > (avg * cfg.fft_streak_thresh)[:, None]))
-    deg = _deg_table(na)
-    half = na // 2
-    rows_idx, ang_idx = np.nonzero(mask)
-    bounds = np.searchsorted(rows_idx, np.arange(m + 1))
-    pos = np.arange(rows_idx.size) - bounds[rows_idx]
-    keep = pos < 10
-    rows_idx, ang_idx = rows_idx[keep], ang_idx[keep]
-    pa = (ang_idx + half) % na
-    sig = np.where((pa == angle)[:, None], prof_r[rows_idx], 0.0)
-    bel = sig < cfg.magnitude_thresh
-    fb = np.where(bel.any(axis=1), bel.argmax(axis=1), nr)
-    zero_out = tot[rows_idx, pa] > avg[rows_idx]
-    mags = (fb.astype(np.float32) / np.float32(nr)).astype(np.float64)
-    degs = deg[pa]
-    ang_flat = np.where(zero_out, 0, degs).astype(np.int64)
-    mag_flat = np.where(zero_out, 0.0, mags)
-    return rows_idx, ang_flat, mag_flat
+    tot = np.zeros((m, cfg.angle_parts))
+    tot[:, angle] = prof_r[:, :nr // cfg.cutoff_ratio_denom].sum(axis=1)
+    return _select_peaks(
+        tot, lambda rows, pa: np.where((pa == angle)[:, None],
+                                       prof_r[rows], 0.0), cfg)
 
 
 def _dense_profile(P2n: np.ndarray, flat_lut: np.ndarray,
@@ -406,21 +390,16 @@ def _group_features(T: np.ndarray, cfg: EngineConfig,
             P2n = _lognorm_rows(P[:, : w // 2 + 1])
             fw = P2n.shape[1]
             flat_lut = K._polar_bin_ids(1, fw, na, nr)
-            angles = np.unique(flat_lut // nr)
-            if angles.size == 1:
-                prof_angle = int(angles[0])
-                r_bin = flat_lut % nr
-                quant_r = np.bincount(r_bin, minlength=nr)
-                ids = (r_bin[None, :]
-                       + (np.arange(m) * nr)[:, None]).ravel()
-                sums_r = np.bincount(ids, weights=P2n.ravel(),
-                                     minlength=m * nr).reshape(m, nr)
-                nzr = quant_r > 0
-                prof_r = np.zeros((m, nr))
-                prof_r[:, nzr] = sums_r[:, nzr] / quant_r[nzr]
-            else:                     # defensive: fall through to dense
-                prof = _dense_profile(P2n.reshape(m, 1, fw), flat_lut,
-                                      m, na, nr)
+            prof_angle = int(flat_lut[0]) // nr    # phi = 0 in every bin
+            r_bin = flat_lut % nr
+            quant_r = np.bincount(r_bin, minlength=nr)
+            ids = (r_bin[None, :]
+                   + (np.arange(m) * nr)[:, None]).ravel()
+            sums_r = np.bincount(ids, weights=P2n.ravel(),
+                                 minlength=m * nr).reshape(m, nr)
+            nzr = quant_r > 0
+            prof_r = np.zeros((m, nr))
+            prof_r[:, nzr] = sums_r[:, nzr] / quant_r[nzr]
         else:
             planes = x[:, : hh * w].reshape(m, hh, w) \
                 - rms_mean[:, None, None]

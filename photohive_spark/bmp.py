@@ -100,14 +100,6 @@ def _decode_bmp(data: bytes) -> np.ndarray:
     raise ValueError(f"unsupported BMP bit depth {bpp}")
 
 
-def decode_rgb(data: bytes) -> dict:
-    """BMP bytes -> the shared planar float contract
-    (png.planes_from_uint8)."""
-    from .png import planes_from_uint8
-
-    return planes_from_uint8(decode_bmp(data))
-
-
 def encode_bmp(arr: np.ndarray) -> bytes:
     """(H, W, 3) or (H, W) uint8 -> 24-bit bottom-up BI_RGB BMP."""
     a = np.asarray(arr, dtype=np.uint8)

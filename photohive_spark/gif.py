@@ -16,8 +16,9 @@ in-repo; additionally validated against real GIFs on this system
 python.png/python.jpg fixtures, enabling a three-codec agreement test).
 
 Reference analog: the PIL ingest boundary (``utils.py:30-46``) accepted
-GIFs like any PIL format; png.decode_image_rgb dispatches by magic
-bytes so ``decode="real"`` covers GIF transparently.
+GIFs like any PIL format; png.decode_pixels sniffs GIF by its magic
+bytes and takes the first frame, and video.decode_sampled_frames samples
+an animation's frames, so ``decode="real"`` covers GIF transparently.
 
 Scale note: LZW is inherently sequential per frame (a per-code Python
 loop, like JPEG's Huffman walk); GIFs in real corpora are small, and
@@ -69,7 +70,7 @@ def _lzw_decode(data: bytes, min_code: int, n_expect: int) -> np.ndarray:
     clear = 1 << min_code
     eoi = clear + 1
     # bit reader: LSB-first (GIF packs codes little-endian)
-    out = np.empty(n_expect, dtype=np.int32)
+    out = np.empty(n_expect, dtype=np.uint16)
     n_out = 0
     acc = 0
     nbits = 0
@@ -151,103 +152,106 @@ def _lzw_decode(data: bytes, min_code: int, n_expect: int) -> np.ndarray:
     return out
 
 
-def decode_gif(data: bytes) -> dict:
-    """GIF bytes -> {width, height, frames: [(H, W, 3) uint8, ...],
-    durations_ms: [...]} — frames composited onto the logical screen
-    with disposal methods applied (what a viewer displays)."""
-    return _decode(data, first_only=False)
-
-
-def _decode(data: bytes, first_only: bool) -> dict:
+def _walk(data: bytes):
+    """Walk a GIF's blocks without decoding any LZW: yields the logical
+    screen ``(w, h, background RGB)`` first, then one ``(descriptor,
+    color table, min_code, LZW stream, graphic control)`` per image in
+    stream order, where descriptor = (ix, iy, iw, ih, interlaced) and
+    graphic control = (disposal, delay_ms, transparent index or None)."""
     try:
-        return _decode_gif(data, first_only)
+        if data[:6] not in (b"GIF87a", b"GIF89a"):
+            raise ValueError("not a GIF: bad signature")
+        w, h = struct.unpack("<HH", data[6:10])
+        if w == 0 or h == 0:
+            raise ValueError("zero-dimension GIF")
+        check_pixels(w, h, "GIF")
+        flags, bg_idx = data[10], data[11]
+        gct, pos = _color_table(data, 13, flags)
+        yield w, h, (gct[bg_idx] if gct is not None and bg_idx < len(gct)
+                     else np.zeros(3, dtype=np.uint8))
+        control = (0, 0, None)
+        n_images = 0
+        while pos < len(data):
+            b = data[pos]
+            if b == 0x3B:               # trailer
+                break
+            if b == 0x21:               # extension
+                if data[pos + 1] == 0xF9:   # graphic control
+                    n = data[pos + 2]
+                    body = data[pos + 3:pos + 3 + n]
+                    packed = body[0]
+                    control = ((packed >> 2) & 0x07,
+                               struct.unpack("<H", body[1:3])[0] * 10,
+                               body[3] if packed & 0x01 else None)
+                    pos += 3 + n
+                    if data[pos] != 0:
+                        raise ValueError("unterminated graphic control block")
+                    pos += 1
+                else:                   # application/comment/plain text
+                    _, pos = _subblocks(data, pos + 2)
+                continue
+            if b != 0x2C:
+                raise ValueError(f"unexpected GIF block 0x{b:02X}")
+            ix, iy, iw, ih = struct.unpack("<4H", data[pos + 1:pos + 9])
+            iflags = data[pos + 9]
+            lct, pos2 = _color_table(data, pos + 10, iflags)
+            table = lct if lct is not None else gct
+            if table is None:
+                raise ValueError("GIF frame without any color table")
+            if ix + iw > w or iy + ih > h:
+                raise ValueError("GIF frame exceeds logical screen")
+            min_code = data[pos2]
+            stream, pos = _subblocks(data, pos2 + 1)
+            yield ((ix, iy, iw, ih, bool(iflags & 0x40)), table,
+                   min_code, stream, control)
+            n_images += 1
+            control = (0, 0, None)
+        if not n_images:
+            raise ValueError("GIF contains no image frames")
     except (struct.error, IndexError) as e:
         # fail-loud contract: truncated headers/descriptors surface as
         # ValueError like every other malformed-stream path
         raise ValueError(f"truncated GIF stream: {e}") from None
 
 
-def _decode_gif(data: bytes, first_only: bool) -> dict:
-    if data[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF: bad signature")
-    w, h = struct.unpack("<HH", data[6:10])
-    if w == 0 or h == 0:
-        raise ValueError("zero-dimension GIF")
-    check_pixels(w, h, "GIF")
-    flags, bg_idx, _aspect = data[10], data[11], data[12]
-    gct, pos = _color_table(data, 13, flags)
+def _paint(region: np.ndarray, table: np.ndarray, min_code: int,
+           stream: bytes, interlaced: bool, transparent) -> None:
+    """LZW-decode one image into its screen region (a view), keeping the
+    region's pixels wherever the image is transparent."""
+    ih, iw = region.shape[:2]
+    idx = _lzw_decode(stream, min_code, iw * ih)
+    if int(idx.max(initial=0)) >= len(table):
+        raise ValueError("GIF pixel index beyond color table")
+    rows = idx.reshape(ih, iw)
+    if interlaced:                  # 4-pass GIF interlace
+        deint = np.empty_like(rows)
+        r = 0
+        for start, step in _PASSES:
+            nrows = len(range(start, ih, step))
+            deint[start::step] = rows[r:r + nrows]
+            r += nrows
+        rows = deint
+    # one channel at a time: the gather's temporary is 1 byte a pixel
+    opaque = True if transparent is None else rows != transparent
+    for c in range(3):
+        np.copyto(region[:, :, c], table[rows, c], where=opaque)
 
-    if gct is not None and bg_idx < len(gct):
-        bg_rgb = gct[bg_idx]
-    else:
-        bg_rgb = np.zeros(3, dtype=np.uint8)
-    screen = np.zeros((h, w, 3), dtype=np.uint8)
-    screen[:] = bg_rgb
-    frames: list[np.ndarray] = []
-    durations: list[int] = []
-    transparent = None
-    disposal = 0
-    delay_ms = 0
 
-    while pos < len(data):
-        b = data[pos]
-        if b == 0x3B:               # trailer
-            break
-        if b == 0x21:               # extension
-            label = data[pos + 1]
-            if label == 0xF9:       # graphic control
-                n = data[pos + 2]
-                body = data[pos + 3:pos + 3 + n]
-                packed = body[0]
-                disposal = (packed >> 2) & 0x07
-                delay_ms = struct.unpack("<H", body[1:3])[0] * 10
-                transparent = body[3] if packed & 0x01 else None
-                pos += 3 + n
-                if data[pos] != 0:
-                    raise ValueError("unterminated graphic control block")
-                pos += 1
-            else:                   # application/comment/plain text
-                pos += 2
-                _, pos = _subblocks(data, pos)
-            continue
-        if b != 0x2C:
-            raise ValueError(f"unexpected GIF block 0x{b:02X}")
-        # image descriptor
-        ix, iy, iw, ih = struct.unpack("<4H", data[pos + 1:pos + 9])
-        iflags = data[pos + 9]
-        lct, pos2 = _color_table(data, pos + 10, iflags)
-        table = lct if lct is not None else gct
-        if table is None:
-            raise ValueError("GIF frame without any color table")
-        if ix + iw > w or iy + ih > h:
-            raise ValueError("GIF frame exceeds logical screen")
-        min_code = data[pos2]
-        stream, pos = _subblocks(data, pos2 + 1)
-        idx = _lzw_decode(stream, min_code, iw * ih)
-        if int(idx.max(initial=0)) >= len(table):
-            raise ValueError("GIF pixel index beyond color table")
-        if iflags & 0x40:           # 4-pass GIF interlace
-            deint = np.empty((ih, iw), dtype=np.int32)
-            rows = idx.reshape(ih, iw)
-            r = 0
-            for start, step in _PASSES:
-                nrows = len(range(start, ih, step))
-                deint[start::step] = rows[r:r + nrows]
-                r += nrows
-            rows = deint
-        else:
-            rows = idx.reshape(ih, iw)
-
-        prev_region = screen[iy:iy + ih, ix:ix + iw].copy()
-        rgb = table[rows]
-        if transparent is not None:
-            mask = rows == transparent
-            rgb = np.where(mask[:, :, None], prev_region, rgb)
-        screen[iy:iy + ih, ix:ix + iw] = rgb
-        frames.append(screen if first_only else screen.copy())
-        durations.append(delay_ms)
-        if first_only:
-            break
+def iter_frames(data: bytes):
+    """GIF bytes -> yields ``(screen, delay_ms)`` per image: the (H, W, 3)
+    uint8 logical screen with that image composited on, i.e. what a
+    viewer displays. ``screen`` is ONE buffer that the next frame's
+    disposal and painting overwrite, so copy it to keep it; a consumer
+    that stops early decodes no later frame."""
+    blocks = _walk(data)
+    w, h, bg_rgb = next(blocks)
+    screen = np.full((h, w, 3), bg_rgb, dtype=np.uint8)
+    for (ix, iy, iw, ih, interlaced), table, min_code, stream, \
+            (disposal, delay_ms, transparent) in blocks:
+        region = screen[iy:iy + ih, ix:ix + iw]
+        prev_region = region.copy() if disposal == 3 else None
+        _paint(region, table, min_code, stream, interlaced, transparent)
+        yield screen, delay_ms
         if disposal == 2:
             # Restore-to-background POLICY: the region is always reset
             # to the logical-screen background COLOR, including for
@@ -260,24 +264,27 @@ def _decode_gif(data: bytes, first_only: bool) -> dict:
             # frames following a disposal-2 + transparency frame can
             # differ from a browser's compositing wherever the browser
             # would have shown underlying page content.
-            screen[iy:iy + ih, ix:ix + iw] = bg_rgb
+            region[...] = bg_rgb
         elif disposal == 3:         # restore to previous
-            screen[iy:iy + ih, ix:ix + iw] = prev_region
-        transparent = None
-        disposal = 0
-        delay_ms = 0
-    if not frames:
-        raise ValueError("GIF contains no image frames")
+            region[...] = prev_region
+
+
+def count_frames(data: bytes) -> int:
+    """Number of images in a GIF, from a block walk that decodes no
+    LZW (the walk yields the logical screen, then one item per image)."""
+    return sum(1 for _ in _walk(data)) - 1
+
+
+def decode_gif(data: bytes) -> dict:
+    """GIF bytes -> {width, height, frames: [(H, W, 3) uint8, ...],
+    durations_ms: [...]} — every frame of :func:`iter_frames`, copied."""
+    frames, durations = [], []
+    for screen, delay_ms in iter_frames(data):
+        frames.append(screen.copy())
+        durations.append(delay_ms)
+    h, w = frames[0].shape[:2]
     return {"width": w, "height": h, "frames": frames,
             "durations_ms": durations}
-
-
-def decode_rgb(data: bytes) -> dict:
-    """GIF bytes -> the FIRST frame as the shared planar float contract
-    (png.planes_from_uint8); decoding stops after that frame."""
-    from .png import planes_from_uint8
-
-    return planes_from_uint8(_decode(data, first_only=True)["frames"][0])
 
 
 def _lzw_encode(idx: np.ndarray, min_code: int) -> bytes:

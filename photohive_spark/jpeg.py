@@ -25,8 +25,8 @@ on matching Annex K constants; the decoder is additionally validated
 against real JPEGs produced by external encoders (tests/test_jpeg.py).
 
 Reference analog: the PIL ingest boundary (``utils.py:30-46``) accepted
-any PIL-decodable format; png.decode_image_rgb dispatches PNG/JPEG by
-magic bytes so ``decode="real"`` covers both.
+any PIL-decodable format; png.decode_pixels sniffs JPEG by its magic
+bytes so ``decode="real"`` covers it.
 
 Scale note: decode runs inside Arrow-batched ``mapInArrow`` workers
 (multimodal.py); per-image cost is the codec floor measured in
@@ -487,11 +487,3 @@ def encode_jpeg_progressive(arr: np.ndarray, quality: int = 90,
 
     out += b"\xff\xd9"
     return bytes(out)
-
-
-def decode_rgb(data: bytes) -> dict:
-    """JPEG bytes -> the planar float contract of
-    png.planes_from_uint8 (the shared pil_image_to_image_rgb policy)."""
-    from .png import planes_from_uint8
-
-    return planes_from_uint8(decode_jpeg(data))

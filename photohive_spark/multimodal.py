@@ -2,19 +2,22 @@
 with typed metadata, processed by Arrow-batched ``mapInArrow`` stages —
 every media operator runs the one decode loop in ``_media_stage``.
 
-``mode="real"`` REALLY decodes images (PNG incl. Adam7/16-bit and
-baseline+progressive JPEG, via the pure-stdlib codecs in png.py /
-jpeg_decode.py, dispatched by magic bytes — no PIL needed), audio (PCM
-WAV, via stdlib ``wave``) and video (MJPEG-in-AVI via video.py —
-frame-sampled; other codecs raise ValueError naming the codec, since
-H.264 etc. genuinely need libav, absent here). The default
-deterministic fake derives a pseudo sample plane from the bytes
+``mode="real"`` REALLY decodes images (PNG incl. Adam7/16-bit,
+baseline+progressive JPEG, GIF and BMP, via the pure-stdlib codecs in
+png.py / jpeg_decode.py / gif.py / bmp.py — no PIL needed), audio (PCM
+WAV, via stdlib ``wave``) and video (MJPEG-in-AVI and animated GIF via
+video.py — frame-sampled; other codecs raise ValueError naming the
+codec, since H.264 etc. genuinely need libav, absent here). This module
+reads no magic bytes: png.decode_pixels is the one still-image sniff and
+video.decode_sampled_frames the one motion sniff, and
+png.planes_from_uint8 turns either's pixels into float planes. The
+default deterministic fake derives a pseudo sample plane from the bytes
 (sha256-seeded) so plumbing tests are exact and
 payload-format-independent.
 
 Reference analog: the PIL ingest boundary ``pil_image_to_image_rgb``
 (``utils.py:30-46``) — bytes -> normalized float plane -> feature kernels;
-png.decode_rgb reproduces that contract bit-exactly for PNG inputs.
+png.decode_image_rgb reproduces that contract bit-exactly for PNG inputs.
 """
 
 from __future__ import annotations
@@ -62,19 +65,24 @@ def decode_stub(payload: bytes, kind: str, meta: dict, mode: str = "fake"
                 ) -> np.ndarray:
     if mode == "real":
         from . import png
-        if kind == "image":
-            # PNG/JPEG -> BT.601 gray plane in [0,1], flattened — the
-            # exact reference ingest (utils.py:30-46 -> rgb2pgm) stream
-            return png.decode_gray_samples(payload)
         if kind == "audio":
             return png.decode_wav_samples(payload)
-        # video: MJPEG-in-AVI decodes for real (video.py — RIFF walk +
-        # the in-repo JPEG decoder); other codecs raise ValueError
-        # naming the codec (H.264 etc. genuinely need libav, absent
-        # here). Sample stream = frame-sampled gray planes.
-        from . import video
-        return video.decode_video_gray_samples(
-            payload, n_sample=int(meta.get("meta_n_frames") or 4))
+        from .kernels import rgb2pgm
+        if kind == "image":
+            frames = [png.decode_pixels(payload)]
+        else:
+            # video: frame-sampled; a still payload is a one-frame video
+            from . import video
+            frames, _ = video.decode_sampled_frames(
+                payload, n_sample=int(meta.get("meta_n_frames") or 4))
+        # each frame's BT.601 gray plane in [0,1], flattened and
+        # concatenated — the reference ingest (utils.py:30-46 -> rgb2pgm)
+        # as the 1-D sample stream the DSP kernels consume
+        parts = []
+        for px in frames:
+            p = png.planes_from_uint8(px)
+            parts.append(rgb2pgm(p["r"], p["g"], p["b"]).reshape(-1))
+        return np.concatenate(parts)
     if kind == "image":
         n = int(meta.get("meta_width") or 64) * int(meta.get("meta_height") or 64)
     elif kind == "audio":
@@ -298,14 +306,14 @@ IMAGE_REPORT_SCHEMA = T.StructType([
 
 
 def _image_planes(payload, meta, mode: str):
-    """bytes -> (r, g, b) float planes in [0,1]. Real mode decodes PNG or
-    baseline JPEG via png.decode_image_rgb's magic-byte dispatch (the
-    reference ingest, utils.py:30-46); fake mode reshapes the
-    deterministic pseudo-decode into a meta-sized plane so the full 2-D
-    pipeline is drivable without codecs."""
+    """bytes -> (r, g, b) float planes in [0,1]. Real mode decodes any
+    still png.decode_pixels sniffs (PNG, JPEG, GIF's first frame, BMP)
+    via png.decode_image_rgb (the reference ingest, utils.py:30-46);
+    fake mode reshapes the deterministic pseudo-decode into a meta-sized
+    plane so the full 2-D pipeline is drivable without codecs."""
     if mode == "real":
         from . import png
-        p = png.decode_image_rgb(payload)     # PNG or JPEG by magic bytes
+        p = png.decode_image_rgb(payload)
         return p["r"], p["g"], p["b"]
     w = int(meta.get("meta_width") or 64)
     h = int(meta.get("meta_height") or 64)
@@ -405,26 +413,13 @@ def media_report_row(payload: bytes, cfg: EngineConfig = DEFAULT_CONFIG,
     from . import png
     from . import video
 
-    if payload[:4] == b"RIFF" and payload[8:12] != b"AVI ":
-        # r7 review fix: WEBP / WAVE are RIFF containers too — surfacing
-        # a clear error beats a misleading AVI-parse failure (or a
-        # silent drop under on_error='skip' miscounted as undecodable)
-        form = bytes(payload[8:12]).decode("ascii", "replace")
-        raise ValueError(
-            f"unsupported RIFF container {form!r} (only 'AVI ' motion "
-            f"payloads are decodable; WEBP/WAVE need codecs absent here)")
-    if payload[:4] == b"GIF8" or payload[:4] == b"RIFF":
-        frames, n_total = video.decode_sampled_frames(bytes(payload),
-                                                      n_sample)
-        kind = "video" if n_total > 1 else "image"
-        planes = []
-        for px in frames:
-            p = png.planes_from_uint8(px)
-            planes.append((p["r"], p["g"], p["b"]))
-    else:
-        p = png.decode_image_rgb(bytes(payload))
-        planes, n_total, kind = [(p["r"], p["g"], p["b"])], 1, "image"
-    reps = [report_image_arrays(r, g, b, cfg) for r, g, b in planes]
+    frames, n_total = video.decode_sampled_frames(bytes(payload), n_sample)
+    reps = []
+    for px in frames:
+        # one frame's float planes at a time: report, then convert the next
+        p = png.planes_from_uint8(px)
+        reps.append(report_image_arrays(p["r"], p["g"], p["b"], cfg))
+    kind = "video" if n_total > 1 else "image"
     row = {"media_kind": kind, "n_frames": int(n_total),
            "n_sampled": len(reps),
            "height": reps[0]["height"], "width": reps[0]["width"]}

@@ -10,7 +10,7 @@ for tests and sinks.
 
 Reference analog: the PIL ingest boundary ``pil_image_to_image_rgb``
 (reference ``utils.py:30-46``) — encoded bytes -> per-channel float
-planes in [0,1] -> feature kernels. :func:`decode_rgb` reproduces that
+planes in [0,1] -> feature kernels. :func:`decode_image_rgb` reproduces that
 contract (PIL's RGB conversion of these color types is the same exact
 integer mapping, so outputs are bit-identical to the reference path).
 
@@ -407,9 +407,9 @@ def planes_from_uint8(px: np.ndarray) -> dict[str, np.ndarray]:
     """(H, W, C) uint8 -> the reference's ``pil_image_to_image_rgb``
     contract (``utils.py:30-46``): dict of 'r'/'g'/'b' (H, W) float64
     planes in [0,1] plus 'height'/'width'. Gray (and gray+alpha)
-    expands to equal planes; alpha is dropped. The ONE conversion every
-    codec's decode_rgb delegates to — the normalization policy lives
-    here only."""
+    expands to equal planes; alpha is dropped. The ONE bytes->planes
+    conversion: every media operator's pixels, still or motion, pass
+    through here, so the normalization policy lives here only."""
     c = px.shape[2]
     if c in (1, 2):
         r = g = b = px[:, :, 0]
@@ -420,23 +420,6 @@ def planes_from_uint8(px: np.ndarray) -> dict[str, np.ndarray]:
             "g": g.astype(np.float64) * scale,
             "b": b.astype(np.float64) * scale,
             "height": px.shape[0], "width": px.shape[1]}
-
-
-def decode_rgb(data: bytes) -> dict[str, np.ndarray]:
-    """PNG bytes -> the planar contract of :func:`planes_from_uint8`."""
-    return planes_from_uint8(decode_png(data))
-
-
-def decode_gray_samples(data: bytes) -> np.ndarray:
-    """Image bytes (PNG or JPEG, sniffed) -> flattened BT.601 luminance
-    plane in [0,1] — the 1-D sample stream the DSP feature kernels
-    consume. Delegates to kernels.rgb2pgm (the canonical
-    reference-parity projection) so the 1-D media path and the 2-D
-    image_report path can never drift."""
-    from .kernels import rgb2pgm
-
-    p = decode_image_rgb(data)
-    return rgb2pgm(p["r"], p["g"], p["b"]).reshape(-1)
 
 
 def decode_wav_samples(data: bytes) -> np.ndarray:
@@ -466,24 +449,34 @@ def decode_wav_samples(data: bytes) -> np.ndarray:
     return x
 
 
-def decode_image_rgb(data: bytes) -> dict[str, np.ndarray]:
-    """Format-sniffing image decode: PNG, JPEG (baseline+progressive) or
-    GIF by magic bytes -> the planar float RGB contract of decode_rgb.
-    This is the ``decode="real"`` entry multimodal uses, mirroring the
-    reference's PIL boundary accepting any decodable format
-    (utils.py:30-46)."""
+def decode_pixels(data: bytes) -> np.ndarray:
+    """Still-image bytes -> (H, W, C) uint8 pixels, C = 1 (gray), 2
+    (gray+alpha), 3 (RGB) or 4 (RGBA). THE still-image sniff: JPEG
+    (baseline/progressive), GIF (first frame; later frames are never
+    decoded), BMP or PNG, chosen by magic bytes. The only other sniff is
+    video.decode_sampled_frames, which hands every payload that is
+    neither GIF nor RIFF back to this function."""
     if data[:2] == b"\xff\xd8":
-        from . import jpeg
-        return jpeg.decode_rgb(data)
+        from .jpeg_decode import decode_jpeg
+        return decode_jpeg(data)
     if data[:4] == b"GIF8":
-        from . import gif
-        return gif.decode_rgb(data)
+        from .gif import iter_frames
+        return next(iter_frames(data))[0]
     if data[:2] == b"BM":
-        from . import bmp
-        return bmp.decode_rgb(data)
+        from .bmp import decode_bmp
+        return decode_bmp(data)
     if data[:8] == _SIG:
-        return decode_rgb(data)
+        return decode_png(data)
     raise ValueError(
-        f"unrecognized image format (magic bytes {data[:8]!r}) — "
-        "supported: PNG, JPEG (baseline/progressive), GIF, BMP; "
+        f"unrecognized media format (magic bytes {data[:8]!r}) — "
+        "decodable: PNG, JPEG (baseline/progressive), GIF and BMP "
+        "stills, plus animated GIF and MJPEG-AVI (RIFF) as motion media; "
         "WebP/TIFF/AVIF need native codecs absent in this environment")
+
+
+def decode_image_rgb(data: bytes) -> dict[str, np.ndarray]:
+    """Image bytes -> the reference's planar float RGB contract
+    (``pil_image_to_image_rgb``, utils.py:30-46): the pixels of
+    :func:`decode_pixels` through :func:`planes_from_uint8`. This is the
+    ``decode="real"`` entry of the image operators."""
+    return planes_from_uint8(decode_pixels(data))

@@ -11,13 +11,13 @@ fail loudly, never garbage frames.
 
 Surface:
 - :func:`parse_avi`     — container metadata + raw frame payloads;
-- :func:`decode_frames` — frame-sampled (H, W, 3) uint8 arrays;
+- :func:`decode_sampled_frames` — the motion-media sniff: frame-sampled
+  uint8 pixel arrays and the total frame count of an MJPEG-AVI, an
+  animated GIF or (as one frame) any still image;
 - :func:`encode_avi_mjpeg` — a minimal writer (frames -> AVI) so every
   decoder path is round-trip-testable without external files;
-- multimodal.decode_stub(kind="video", mode="real") routes here: the
-  sampled frames' BT.601 gray planes, flattened and concatenated, form
-  the 1-D sample stream the DSP feature kernels consume (the same
-  contract as image/audio ingest).
+- multimodal.decode_stub(kind="video", mode="real") and
+  multimodal.media_report route here.
 
 Scale note: like the image path, decode runs inside Arrow-batched
 ``mapInArrow`` workers — per-row cost is the per-frame JPEG codec
@@ -26,6 +26,7 @@ floor measured in BENCH/BASELINE.md; frame sampling bounds it.
 
 from __future__ import annotations
 
+import itertools
 import struct
 
 import numpy as np
@@ -133,59 +134,43 @@ def sample_indices(n_frames: int, n_sample: int) -> list[int]:
 
 def decode_sampled_frames(data: bytes, n_sample: int | None = None
                           ) -> tuple[list[np.ndarray], int]:
-    """Video bytes (MJPEG-AVI, or an animated GIF — the other
-    self-contained web motion format) -> ((H, W, 3) uint8 RGB frames,
-    TOTAL frame count). ``n_sample`` picks evenly-spaced frames (the
-    training-pipeline frame-sampling primitive); None decodes every
-    frame. GIF frames are the full composited screens (disposal
-    applied); AVI decodes only the sampled frames. The one
-    motion-decode implementation — decode_frames and
-    multimodal's media_report both delegate here."""
-    from . import jpeg
+    """Media bytes -> (sampled frames, TOTAL frame count); the one
+    motion-media sniff. An animated GIF yields composited screens: a
+    block walk counts the frames without decoding them, decoding stops
+    after the last sampled frame and only sampled frames are copied, so
+    memory stays near ``n_sample`` frames. An MJPEG-AVI decodes only the
+    sampled frames' JPEGs; other RIFF forms (WEBP, WAVE) raise. Anything
+    else is a still for png.decode_pixels, returned as one frame of one.
+    ``n_sample`` picks evenly-spaced frames (:func:`sample_indices`);
+    None keeps all. Frames are (H, W, C) uint8 as png.decode_pixels
+    returns them (C = 1 for gray); png.planes_from_uint8 converts each."""
+    from . import gif, png
+    from .jpeg_decode import decode_jpeg
 
     if data[:4] == b"GIF8":
-        from . import gif
-        frames = gif.decode_gif(data)["frames"]
-        idxs = (range(len(frames)) if n_sample is None
-                else sample_indices(len(frames), n_sample))
-        return [frames[i] for i in idxs], len(frames)
-    meta = parse_avi(data)
-    raw = meta["frames"]
-    idxs = (range(len(raw)) if n_sample is None
-            else sample_indices(len(raw), n_sample))
-    out = []
-    for i in idxs:
-        px = jpeg.decode_jpeg(raw[i])
-        if px.shape[2] == 1:
-            px = np.repeat(px, 3, axis=2)
-        out.append(px)
-    return out, len(raw)
-
-
-def decode_frames(data: bytes, n_sample: int | None = None
-                  ) -> list[np.ndarray]:
-    """decode_sampled_frames without the frame count (the original
-    frame-sampling surface)."""
-    return decode_sampled_frames(data, n_sample)[0]
-
-
-def decode_video_gray_samples(data: bytes, n_sample: int = 4
-                              ) -> np.ndarray:
-    """AVI bytes -> 1-D float64 sample stream in [0,1]: the sampled
-    frames' BT.601 gray planes, flattened and concatenated — the same
-    contract image/audio ingest feeds the DSP kernels."""
-    from .kernels import rgb2pgm
-
-    parts = []
-    for px in decode_frames(data, n_sample=n_sample):
-        scale = 1.0 / 255.0
-        r = px[:, :, 0].astype(np.float64) * scale
-        g = px[:, :, 1].astype(np.float64) * scale
-        b = px[:, :, 2].astype(np.float64) * scale
-        parts.append(rgb2pgm(r, g, b).reshape(-1))
-    if not parts:
-        raise ValueError("AVI has no decodable frames")
-    return np.concatenate(parts)
+        n = gif.count_frames(data)
+        idxs = (range(n) if n_sample is None
+                else sample_indices(n, n_sample))
+        frames = itertools.islice(gif.iter_frames(data), idxs[-1] + 1)
+        keep = set(idxs)
+        return [screen.copy() for i, (screen, _) in enumerate(frames)
+                if i in keep], n
+    if data[:4] == b"RIFF":
+        if data[8:12] != b"AVI ":
+            # WEBP / WAVE are RIFF containers too: name the form rather
+            # than fail inside the AVI parse
+            form = bytes(data[8:12]).decode("ascii", "replace")
+            raise ValueError(
+                f"unsupported RIFF container {form!r} (only 'AVI ' motion "
+                f"payloads are decodable; WEBP/WAVE need codecs absent "
+                f"here)")
+        raw = parse_avi(data)["frames"]
+        if not raw:
+            raise ValueError("AVI has no video frames")
+        idxs = (range(len(raw)) if n_sample is None
+                else sample_indices(len(raw), n_sample))
+        return [decode_jpeg(raw[i]) for i in idxs], len(raw)
+    return [png.decode_pixels(data)], 1
 
 
 def encode_avi_mjpeg(frames: list[np.ndarray], fps: float = 10.0,

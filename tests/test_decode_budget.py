@@ -9,7 +9,7 @@ import zlib
 import numpy as np
 import pytest
 
-from photohive_spark import gif, multimodal, png
+from photohive_spark import gif, multimodal, png, video
 
 
 def _png_chunk(typ: bytes, body: bytes) -> bytes:
@@ -89,18 +89,38 @@ def _peak(fn, *args):
 
 
 def test_gif_decode_rgb_keeps_only_the_first_frame():
-    """decode_rgb returns frame 0 and stops decoding there: an animation's
-    peak stays that of its first frame. It used to composite and keep
-    every frame (~4x the one-frame peak for these 24 frames)."""
+    """decode_image_rgb returns frame 0 and stops decoding there: an
+    animation's peak stays that of its first frame. It used to composite
+    and keep every frame (~4x the one-frame peak for these 24 frames)."""
     y, x = np.mgrid[0:300, 0:300]
     frames = [((x // 7 + y // 5 + i) % 200).astype(np.uint8)
               for i in range(24)]
     anim = gif.encode_gif(frames)
-    first, one_peak = _peak(gif.decode_rgb, gif.encode_gif(frames[0]))
-    got, anim_peak = _peak(gif.decode_rgb, anim)
+    first, one_peak = _peak(png.decode_image_rgb, gif.encode_gif(frames[0]))
+    got, anim_peak = _peak(png.decode_image_rgb, anim)
     want = png.planes_from_uint8(gif.decode_gif(anim)["frames"][0])
     assert got.keys() == want.keys()
     for k in want:
         assert np.array_equal(got[k], want[k]), k
         assert np.array_equal(got[k], first[k]), k
     assert anim_peak < 1.25 * one_peak, (anim_peak, one_peak)
+
+
+def test_gif_motion_decode_keeps_only_the_sampled_frames():
+    """decode_sampled_frames composites an animation frame by frame and
+    copies only the sampled frames, so its peak stays near n_sample + 2
+    frames. It used to keep every composited frame (~15 frames' worth
+    here)."""
+    h, w, n, n_sample = 600, 800, 10, 4
+    y = np.arange(h)[:, None] + np.zeros((1, w), dtype=int)
+    anim = gif.encode_gif([((y // 25 + 7 * i) % 200).astype(np.uint8)
+                           for i in range(n)])
+    (got, n_total), peak = _peak(video.decode_sampled_frames, anim,
+                                 n_sample)
+    every = gif.decode_gif(anim)["frames"]
+    assert n_total == n
+    want = [every[i] for i in video.sample_indices(n, n_sample)]
+    assert len(got) == len(want) == n_sample
+    for a, b in zip(got, want):
+        assert np.array_equal(a, b)
+    assert peak < (n_sample + 2) * h * w * 3, peak / (h * w * 3)

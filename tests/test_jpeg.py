@@ -233,12 +233,13 @@ def test_dispatch_and_spark_pipeline(spark):
     p = png.decode_image_rgb(jdata)
     assert p["height"] == 24 and p["width"] == 24
     # dispatch must route identically to the jpeg module
-    np.testing.assert_array_equal(p["r"], jpeg.decode_rgb(jdata)["r"])
+    np.testing.assert_array_equal(
+        p["r"], png.planes_from_uint8(jpeg.decode_jpeg(jdata))["r"])
 
     rows = [("j0", "image", bytearray(jdata), 24, 24, None, None)]
     media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
     feat = multimodal.media_features(media, mode="real").collect()[0]
-    x = png.decode_gray_samples(jdata)
+    x = multimodal.decode_stub(jdata, "image", {}, mode="real")
     mean, std = K.rms_stats(x)
     assert feat.n_samples == len(x)
     assert feat.rms_mean == pytest.approx(mean, rel=1e-12)

@@ -29,7 +29,7 @@ def test_phash_invariance_and_discrimination():
 
     h0 = K.phash_plane(_gray(rgb))
     # JPEG re-encode at q70: visually same -> tiny hamming
-    jp = jpeg.decode_rgb(jpeg.encode_jpeg(rgb, quality=70))
+    jp = png.decode_image_rgb(jpeg.encode_jpeg(rgb, quality=70))
     h_jpeg = K.phash_plane(K.rgb2pgm(jp["r"], jp["g"], jp["b"]))
     assert _ham(h0, h_jpeg) <= 6
     # downscale 2x: same content -> tiny hamming

@@ -193,3 +193,29 @@ def test_resume_state_goes_through_lineage():
                           *sorted((root / "jobs").glob("*.py"))]
              for m in calls.finditer(path.read_text())]
     assert found == [], found
+
+
+def test_media_sniff_in_one_place():
+    """Magic bytes are read in two places only: png.decode_pixels for
+    stills and video.decode_sampled_frames for motion media. multimodal
+    holds no magic-byte literal, and png.decode_image_rgb is one
+    conversion with no format branch of its own."""
+    import ast
+    import inspect
+    import pathlib
+    import textwrap
+
+    from photohive_spark import png
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    magic = (b"GIF8", b"RIFF", b"\xff\xd8", b"BM")
+    tree = ast.parse((root / "photohive_spark" / "multimodal.py").read_text())
+    found = [node.value for node in ast.walk(tree)
+             if isinstance(node, ast.Constant)
+             and isinstance(node.value, bytes)
+             and node.value.startswith(magic)]
+    assert found == [], found
+    fn = ast.parse(textwrap.dedent(inspect.getsource(png.decode_image_rgb)))
+    branches = [type(n).__name__ for n in ast.walk(fn)
+                if isinstance(n, (ast.If, ast.IfExp, ast.Match, ast.Compare))]
+    assert branches == [], branches

@@ -154,9 +154,9 @@ def test_16bit_roundtrip(interlace):
     assert data[8 + 8 + 8] == 16            # IHDR depth byte
     out = png.decode_png(data)
     np.testing.assert_array_equal(out, (img16 >> 8).astype(np.uint8))
-    # gray 16-bit feeds decode_rgb like any other profile
+    # gray 16-bit feeds decode_image_rgb like any other profile
     g16 = rng.integers(0, 65536, (6, 5), dtype=np.uint16)
-    p = png.decode_rgb(png.encode_png(g16))
+    p = png.decode_image_rgb(png.encode_png(g16))
     np.testing.assert_allclose(p["r"], (g16 >> 8) / 255.0)
 
 
@@ -289,16 +289,16 @@ def test_truncated_or_short_idat_raises(interlace):
 
 
 def test_decode_rgb_contract():
-    """decode_rgb matches the reference pil_image_to_image_rgb contract:
+    """decode_image_rgb matches the reference pil_image_to_image_rgb contract:
     planar float [0,1], gray expands to equal planes, alpha dropped."""
     gray = np.arange(16, dtype=np.uint8).reshape(4, 4)
-    p = png.decode_rgb(png.encode_png(gray))
+    p = png.decode_image_rgb(png.encode_png(gray))
     np.testing.assert_allclose(p["r"], gray / 255.0)
     np.testing.assert_array_equal(p["r"], p["g"])
     assert p["height"] == 4 and p["width"] == 4
     rgba = np.dstack([gray, gray * 2, gray * 3, np.full((4, 4), 7)]) \
         .astype(np.uint8)
-    p2 = png.decode_rgb(png.encode_png(rgba))
+    p2 = png.decode_image_rgb(png.encode_png(rgba))
     np.testing.assert_allclose(p2["b"], (gray * 3).astype(np.uint8) / 255.0)
 
 
@@ -348,7 +348,8 @@ def test_media_features_real_decode(spark):
     got = {r.media_id: r for r in
            multimodal.media_features(media, mode="real").collect()}
 
-    for mid, x in [("r0", png.decode_gray_samples(png_bytes)),
+    for mid, x in [("r0", multimodal.decode_stub(png_bytes, "image", {},
+                                                 mode="real")),
                    ("r1", png.decode_wav_samples(wav_bytes))]:
         g = got[mid]
         mean, std = K.rms_stats(x)
@@ -409,7 +410,7 @@ def test_image_report_real_matches_local_kernels(spark):
     got = {r.media_id: r for r in
            multimodal.image_report(media, mode="real").collect()}
     for mid, a in imgs.items():
-        p = png.decode_rgb(png.encode_png(a))
+        p = png.decode_image_rgb(png.encode_png(a))
         want = _local_image_report(p["r"], p["g"], p["b"])
         gr = got[mid]
         assert (gr.height, gr.width) == a.shape[:2]
@@ -455,7 +456,7 @@ def test_image_report_dc_bias_and_2d_downsample(spark):
     # (a) pure-blue: profile DC bin removes bias (B_bar+0+0)/3 = 1/3, so
     # peaks must equal the local kernel run with dc_bias=1/3 — and differ
     # from a run with the old (wrong) gray-mean bias
-    p = png.decode_rgb(png.encode_png(blue))
+    p = png.decode_image_rgb(png.encode_png(blue))
     gray = K.rgb2pgm(p["r"], p["g"], p["b"])
     want = K.spectral_peaks(
         K.blur_profile_plane(gray, cfg, dc_bias=1.0 / 3.0), cfg)
@@ -466,7 +467,7 @@ def test_image_report_dc_bias_and_2d_downsample(spark):
 
     # (b) rate=2 on 21x26: histogram path sees floor(21/2)*floor(26/2)
     # = 10*13 = 130 samples taken on the 2-D grid
-    pa = png.decode_rgb(png.encode_png(a))
+    pa = png.decode_image_rgb(png.encode_png(a))
     want_a = _local_image_report(pa["r"], pa["g"], pa["b"], cfg=cfg)
     assert got["a"].hist_entropy == pytest.approx(
         want_a["hist_entropy"], rel=1e-12)
